@@ -227,6 +227,63 @@ def test_incremental_without_marker_pushes_filter(spark, derby_url):
     assert res[0].new_bookmark == f"2024-01-{1 + last_day:02d} 00:00:00"
 
 
+def test_live_record_stream_takes_persisted_path(spark, derby_url, monkeypatch):
+    """A JDBC relation reports ``spark.sql.defaultSizeInBytes`` as its
+    size estimate, which is over the RECORD collect budget: a live RECORD
+    stream streams partition-at-a-time from a persisted snapshot, and its
+    bookmark is aggregated over that same snapshot."""
+    from youcruit_tap_rawpostgresql_spark import sink
+    from youcruit_tap_rawpostgresql_spark import tap as tap_mod
+
+    calls = []
+    real = tap_mod.emit_record_messages
+
+    def spy(df, spec, write, collect=None):
+        calls.append(collect)
+        return real(df, spec, write, collect=collect)
+
+    monkeypatch.setattr(tap_mod, "emit_record_messages", spy)
+    persisted = []
+    frame_cls = type(spark.range(1))
+    real_persist = frame_cls.persist
+
+    def spy_persist(self, *a, **kw):
+        persisted.append(self)
+        return real_persist(self, *a, **kw)
+
+    monkeypatch.setattr(frame_cls, "persist", spy_persist)
+    spec = StreamSpec(
+        name="people_live_rec",
+        sql='SELECT "id", "ts" FROM PEOPLE WHERE "id" > :rep_key_val',
+        columns=[
+            ColumnSpec("id", "int8", nullable=False),
+            ColumnSpec("ts", "timestamp"),
+        ],
+        key_properties=["id"],
+        replication_key="id",
+        replication_key_value_start=4,
+        database="derbydb",
+    )
+    out = io.StringIO()
+    tap = _tap(spark, derby_url, spec, out=out)
+    df, _premap, _bm = tap._prepare(spec)
+    assert not sink.fits_record_budget(df)
+    res = tap.sync_all()
+    assert calls == [False]
+    assert len(persisted) == 1
+    # 10 or 13 source rows depending on whether the append test ran first
+    n_live = _live_count(spark, derby_url)
+    assert res[0].record_count == n_live - 5
+    assert res[0].new_bookmark == n_live - 1
+    recs = [
+        json.loads(ln)["record"]
+        for ln in out.getvalue().splitlines()
+        if json.loads(ln)["type"] == "RECORD"
+    ]
+    assert sorted(r["id"] for r in recs) == list(range(5, n_live))
+    assert {"id": 5, "ts": "2024-01-06T00:00:00+00:00"} in recs
+
+
 def test_partitioned_parallel_extract(spark, derby_url):
     """Parallel range-partitioned extraction: N executor-side connections
     each pull a bounded key slice (partitionColumn/bounds — the scale-out

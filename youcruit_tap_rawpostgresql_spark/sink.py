@@ -18,12 +18,20 @@ S3 — not worth it).
 Scale: the write parallelizes across partitions; there is no driver-side
 row loop. ``coalesce`` is applied only when the caller asks for
 reference-exact global rotation (small exports).
+
+RECORD messages cross the driver. A frame whose optimizer size estimate
+fits ``RECORD_COLLECT_BUDGET`` is collected by ONE Arrow action and
+serialized column-wise; a larger (or unsized) frame streams one partition
+at a time through ``toLocalIterator``. Both paths share one
+serialization contract (``jsonable_value``) and produce the same lines.
 """
 
 from __future__ import annotations
 
+import datetime
 import glob
 import json
+import logging
 import os
 import uuid as _uuid
 from dataclasses import dataclass
@@ -35,6 +43,46 @@ from youcruit_tap_rawpostgresql_spark.spec import BatchSinkConfig, StreamSpec
 
 # ISO-8601 with microseconds and numeric offset: 2021-11-22T11:45:11.062824+00:00
 ISO_TS_FORMAT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSxxx"
+
+# Largest optimizer size estimate (bytes) of a frame whose RECORD messages
+# are collected to the driver in one Arrow action; above it, records stream
+# one partition at a time.
+RECORD_COLLECT_BUDGET = 64 << 20
+
+logger = logging.getLogger(__name__)
+_size_probe_warned = False
+
+
+def _optimizer_size_bytes(df: DataFrame) -> int:
+    # private API: the optimizer's size estimate has no public pyspark
+    # surface
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+
+def estimated_size_bytes(df: DataFrame) -> int | None:
+    """The optimizer's size estimate of ``df`` in bytes, or ``None`` when
+    the probe fails (warned once per process; callers treat an unknown
+    size as unbounded). The estimate ignores filter selectivity, and a
+    JDBC relation reports ``spark.sql.defaultSizeInBytes``."""
+    global _size_probe_warned
+    try:
+        return _optimizer_size_bytes(df)
+    except Exception as exc:  # noqa: BLE001 — any py4j/API drift
+        if not _size_probe_warned:
+            _size_probe_warned = True
+            logger.warning(
+                "optimizer size estimate unavailable (%s: %s); treating "
+                "frame sizes as unbounded",
+                type(exc).__name__,
+                exc,
+            )
+        return None
+
+
+def fits_record_budget(df: DataFrame) -> bool:
+    """Whether ``df``'s RECORD messages may be collected in one action."""
+    est = estimated_size_bytes(df)
+    return est is not None and est <= RECORD_COLLECT_BUDGET
 
 
 @dataclass(frozen=True)
@@ -105,17 +153,9 @@ def write_batch_files(
         # measurable driver-side plan conversion).
         writer = df
         par = df.sparkSession.sparkContext.defaultParallelism
-        try:
-            # private API (r13 judge note): the optimizer's size estimate
-            # has no public pyspark surface; if a Spark upgrade moves it,
-            # fall back to the core count so the export still fans out
-            # (the pre-r13 behavior) instead of crashing the sync
-            est = int(
-                df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
-            target = min(par, max(1, est >> 24))
-        except Exception:  # noqa: BLE001 — any py4j/API drift
-            target = par
+        # an unknown size fans out to the core count (the pre-r13 behavior)
+        est = estimated_size_bytes(df)
+        target = par if est is None else min(par, max(1, est >> 24))
         if target > 1 and df.rdd.getNumPartitions() < target:
             writer = df.repartition(target)
     (
@@ -216,24 +256,92 @@ def jsonable_value(v):
     return v
 
 
-def emit_record_messages(df: DataFrame, spec: StreamSpec, write) -> int:
-    """Emit one RECORD message per row.
+def _arrow_converter(t):
+    """Converter from an Arrow column value to its ``jsonable_value`` form,
+    or ``None`` when the Arrow type's Python values are JSON-native
+    already. Arrow returns maps as lists of key/value pairs; they become
+    objects again, at any depth, as ``Row.asDict(recursive=True)`` gives
+    them on the streaming path."""
+    import pyarrow as pa
 
-    NOTE: this is the protocol-compat path — rows cross the driver via
-    ``toLocalIterator`` (one partition in memory at a time). The scale path
-    is ``write_batch_files`` + BATCH messages, exactly why the Singer spec
-    grew the BATCH capability in the first place.
+    pt = pa.types
+    if pt.is_map(t):
+        item = _arrow_converter(t.item_type) or (lambda x: x)
+        return lambda v: None if v is None else {k: item(x) for k, x in v}
+    if pt.is_struct(t):
+        fields = [(f.name, _arrow_converter(f.type)) for f in t]
+        if all(c is None for _, c in fields):
+            return None
+        return lambda v: None if v is None else {
+            k: v[k] if c is None else c(v[k]) for k, c in fields
+        }
+    if pt.is_list(t) or pt.is_large_list(t):
+        item = _arrow_converter(t.value_type)
+        if item is None:
+            return None
+        return lambda v: None if v is None else [item(x) for x in v]
+    if pt.is_timestamp(t) and t.tz is not None:
+        # TIMESTAMP arrives aware in the session zone; pin it to +00:00
+        utc = datetime.timezone.utc
+        return lambda v: None if v is None else jsonable_value(v.astimezone(utc))
+    if (
+        pt.is_integer(t)
+        or pt.is_floating(t)
+        or pt.is_boolean(t)
+        or pt.is_string(t)
+        or pt.is_large_string(t)
+        or pt.is_null(t)
+    ):
+        return None
+    # naive TIMESTAMP_NTZ, dates, decimals, binary
+    return jsonable_value
+
+
+def emit_record_messages(
+    df: DataFrame, spec: StreamSpec, write, collect: bool | None = None
+) -> int:
+    """Emit one RECORD message per row of ``df``; returns the row count.
+
+    ``collect=True`` runs ONE Arrow collect action and serializes the
+    batches column-wise (per-column converters chosen from the Arrow
+    schema; JSON-native columns skip ``jsonable_value``). TIMESTAMP values
+    arrive zone-aware and are written in UTC, so the lines do not depend
+    on the driver's time zone. The batches are read as the JVM sends them:
+    ``toArrow``'s final cast to the declared schema rejects a null struct
+    whose fields are declared non-null. ``collect=False`` streams rows one
+    partition at a time through ``toLocalIterator`` — driver memory stays
+    bounded for frames of any size. ``None`` chooses by
+    ``fits_record_budget``.
+
+    Observed metrics on ``df`` (``DataFrame.observe``) are reported by the
+    Arrow collect; ``toLocalIterator`` never completes an ``Observation``.
+    The scale path stays ``write_batch_files`` + BATCH messages, exactly
+    why the Singer spec grew the BATCH capability.
     """
+    if collect is None:
+        collect = fits_record_budget(df)
+    stream = spec.fully_qualified_name
     n = 0
-    for row in df.toLocalIterator():
-        rec = {k: jsonable_value(v) for k, v in row.asDict(recursive=True).items()}
-        write(
-            json.dumps(
-                {"type": "RECORD", "stream": spec.fully_qualified_name, "record": rec}
-            )
-            + "\n"
-        )
-        n += 1
+    if not collect:
+        for row in df.toLocalIterator():
+            rec = {k: jsonable_value(v) for k, v in row.asDict(recursive=True).items()}
+            write(json.dumps({"type": "RECORD", "stream": stream, "record": rec}) + "\n")
+            n += 1
+        return n
+    batches = df._collect_as_arrow()
+    if not batches:
+        return 0
+    names = batches[0].schema.names
+    convs = [_arrow_converter(f.type) for f in batches[0].schema]
+    for batch in batches:
+        cols = []
+        for col, conv in zip(batch.columns, convs):
+            vals = col.to_pylist()
+            cols.append(vals if conv is None else [conv(v) for v in vals])
+        for values in zip(*cols) if cols else [()] * batch.num_rows:
+            rec = dict(zip(names, values))
+            write(json.dumps({"type": "RECORD", "stream": stream, "record": rec}) + "\n")
+        n += batch.num_rows
     return n
 
 

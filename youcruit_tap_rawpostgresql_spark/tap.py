@@ -29,10 +29,30 @@ from youcruit_tap_rawpostgresql_spark.sink import (
     emit_record_messages,
     emit_schema_message,
     emit_state_message,
+    fits_record_budget,
     write_batch_files,
 )
 from youcruit_tap_rawpostgresql_spark.spec import StreamSpec, TapConfig
 from youcruit_tap_rawpostgresql_spark.state import StateStore
+
+
+def _bookmark_max(df: DataFrame, key: str):
+    """The bookmark aggregate ``max(key)`` over ``df``, aliased ``mx``.
+
+    Python reads a TIMESTAMP value back (``Row``, ``Observation.get``) as
+    a naive datetime in the DRIVER process's local zone, while the stored
+    bookmark is bound back into the session as a naive literal: with a
+    driver ``TZ`` other than the session's, the next sync would skip (or
+    re-read) hours of rows. So a TIMESTAMP max is cast to TIMESTAMP_NTZ in
+    the JVM, which gives the session-zone wall clock and crosses to Python
+    unshifted. TIMESTAMP_NTZ and every other type pass through unchanged.
+    """
+    from pyspark.sql import functions as F
+
+    mx = F.max(key)
+    if dict(df.dtypes).get(key) == "timestamp":
+        mx = mx.cast("timestamp_ntz")
+    return mx.alias("mx")
 
 
 @dataclass
@@ -161,9 +181,10 @@ class SparkTap:
         """Returns (mapped_df, conformed_premap_df, bookmark).
 
         ``premap_wrap`` (optional) is applied to the conformed pre-map
-        frame before stream maps/flattening derive from it — the hook the
-        batch path uses to attach an ``observe()`` node so the bookmark
-        aggregate rides the write job instead of running its own.
+        frame before stream maps/flattening derive from it — the hook
+        ``sync_stream`` uses to attach an ``observe()`` node so the
+        bookmark aggregate rides the write/collect job instead of running
+        its own (or, over the RECORD budget, to persist the snapshot).
 
         The bookmark aggregate runs on the PRE-map conformed frame — the
         Singer SDK increments state from the unmapped record, so a map
@@ -236,32 +257,52 @@ class SparkTap:
         return read_jdbc_stream(self.spark, self.config.jdbc, sql, **partitioning)
 
     def sync_stream(self, spec: StreamSpec, batch_mode: bool = False) -> SyncResult:
+        """Sync one stream: SCHEMA, then RECORD messages or BATCH
+        manifests, then STATE.
+
+        Both outputs follow one observe-then-write pattern: the bookmark
+        ``max`` is observed (``DataFrame.observe``) on the PRE-map frame
+        (Singer parity: maps cannot corrupt state) and rides the ONE action
+        that writes the records, so the bookmark comes from the same
+        execution that produced them — by construction, also for a live
+        (JDBC) source that could return different rows on re-execution.
+        Invariant: an ``Observation`` reports only the FIRST action on the
+        observed frame, so nothing may run an action on ``df`` before the
+        write/collect.
+
+        The RECORD output collects the frame to the driver in one Arrow
+        action only when the optimizer's size estimate of the pre-map frame
+        fits ``sink.RECORD_COLLECT_BUDGET``. Otherwise rows stream one
+        partition at a time (``toLocalIterator``, which never completes an
+        ``Observation``) and the bookmark is aggregated over a persisted
+        snapshot that also feeds the emission. A JDBC relation reports
+        ``spark.sql.defaultSizeInBytes``, so live JDBC streams take that
+        path. The estimate ignores filter selectivity, so a small delta
+        over a very large table takes it as well."""
         import json as _json
         import logging
         import time as _time
 
+        from pyspark.sql import Observation
+        from pyspark.sql import functions as F
+        from pyspark.storagelevel import StorageLevel
+
         t0 = _time.perf_counter()
         manifests: list[BatchManifest] = []
-        if batch_mode and self.config.batch:
-            # single-pass batch export: record count and bookmark ride the
-            # write job as observed metrics (pyspark.sql.Observation) —
-            # no second count() job, no persist, and the bookmark is
-            # consistent with the written files BY CONSTRUCTION (both come
-            # out of the one action that wrote them). The bookmark max is
-            # observed on the PRE-map frame (Singer parity: maps cannot
-            # corrupt state), the count on the post-map frame (what was
-            # actually written).
-            from pyspark.sql import Observation
-            from pyspark.sql import functions as F
+        rk = spec.replication_key
+        obs_bm = Observation() if rk else None
+        persisted = None
+        new_bm = None
 
+        def observe_bookmark(p: DataFrame) -> DataFrame:
+            return p if obs_bm is None else p.observe(obs_bm, _bookmark_max(p, rk))
+
+        if batch_mode and self.config.batch:
+            # record count and bookmark ride the write job as observed
+            # metrics — no second count() job, no persist; the count is
+            # observed on the post-map frame (what was actually written)
             obs_n = Observation()
-            obs_bm = Observation() if spec.replication_key else None
-            wrap = (
-                (lambda p: p.observe(obs_bm, F.max(spec.replication_key).alias("mx")))
-                if obs_bm is not None
-                else None
-            )
-            df, _premap, _ = self._prepare(spec, premap_wrap=wrap)
+            df, _premap, _ = self._prepare(spec, premap_wrap=observe_bookmark)
             emit_schema_message(spec, self.write)
             manifests = write_batch_files(
                 df.observe(obs_n, F.count(F.lit(1)).alias("n")),
@@ -273,41 +314,38 @@ class SparkTap:
                     _json.dumps(m.to_message(spec.fully_qualified_name)) + "\n"
                 )
             n = obs_n.get["n"]
-            new_bm = obs_bm.get["mx"] if obs_bm is not None else None
         else:
-            df, premap, _ = self._prepare(spec)
-            # one snapshot feeds emission AND the bookmark aggregate:
-            # without the persist, a live source (JDBC) re-executes the
-            # query for the max() and can advance the bookmark past rows
-            # that were never emitted — permanent data loss on the next
-            # incremental sync
-            persisted = None
-            if spec.replication_key:
-                from pyspark.storagelevel import StorageLevel
+            collect = True
 
-                # persist() marks the premap plan; the mapped df was
-                # derived from that same plan, so the cache serves both
-                # via plan match
-                persisted = premap.persist(StorageLevel.MEMORY_AND_DISK)
+            def wrap(p: DataFrame) -> DataFrame:
+                nonlocal collect, persisted
+                collect = fits_record_budget(p)
+                if collect:
+                    return observe_bookmark(p)
+                if rk:
+                    # over budget: one snapshot feeds the streamed emission
+                    # AND the bookmark aggregate — without it, a live source
+                    # re-executes for the max() and can advance the bookmark
+                    # past rows never emitted (data loss on the next sync).
+                    # The mapped frame derives from this plan, so the cache
+                    # serves both via plan match.
+                    persisted = p.persist(StorageLevel.MEMORY_AND_DISK)
+                return p
+
             try:
+                df, _premap, _ = self._prepare(spec, premap_wrap=wrap)
                 emit_schema_message(spec, self.write)
-                n = emit_record_messages(df, spec, self.write)
-                new_bm = None
-                if spec.replication_key:
-                    # the max() Spark job runs OUTSIDE the lock (parallel
-                    # streams keep their jobs concurrent); only the dict
-                    # mutation and the consistent STATE snapshot+write
-                    # serialize. Aggregated over the persisted PRE-map
-                    # frame.
-                    from pyspark.sql import functions as F
-
-                    row = persisted.agg(
-                        F.max(spec.replication_key).alias("mx")
-                    ).first()
-                    new_bm = row["mx"] if row else None
+                n = emit_record_messages(df, spec, self.write, collect=collect)
+                if persisted is not None:
+                    new_bm = persisted.agg(_bookmark_max(persisted, rk)).first()["mx"]
             finally:
                 if persisted is not None:
                     persisted.unpersist()
+        if obs_bm is not None and persisted is None:
+            new_bm = obs_bm.get["mx"]
+        # only the dict mutation and the consistent STATE snapshot+write
+        # serialize; the Spark jobs above run outside the lock (parallel
+        # streams keep their jobs concurrent)
         with self._state_lock:
             if new_bm is not None:
                 self.state.set_bookmark(
@@ -404,11 +442,12 @@ class SparkTap:
         the commit, and the record count all read ONE materialized
         snapshot — a live (JDBC) source re-executing between them could
         otherwise advance the bookmark past rows never committed
-        (permanent data loss), the same hazard sync_stream persists
-        against. The bookmark is written only AFTER the commit succeeds —
-        a failed commit leaves state untouched and the next sync
-        re-extracts the same slice (at-least-once extract, exactly-once
-        visible state: the keyed upsert is idempotent).
+        (permanent data loss), the same hazard sync_stream guards against
+        with one observed action (or a persist, over its RECORD budget).
+        The bookmark is written only AFTER the commit succeeds — a failed
+        commit leaves state untouched and the next sync re-extracts the
+        same slice (at-least-once extract, exactly-once visible state: the
+        keyed upsert is idempotent).
 
         ``record_count`` is the number of records synced THIS run (the
         slice), matching sync_stream's semantics — never a full-table
@@ -467,7 +506,6 @@ class SparkTap:
           immediately — required when the commit is NON-idempotent
           (plain JDBC append): losing an in-memory advance would
           re-append the same slice on the next run."""
-        from pyspark.sql import functions as F
         from pyspark.storagelevel import StorageLevel
 
         df, premap, _ = self._prepare(spec)
@@ -478,7 +516,7 @@ class SparkTap:
             new_bm_row = None
             if spec.replication_key:
                 new_bm_row = persisted.agg(
-                    F.max(spec.replication_key).alias("mx")
+                    _bookmark_max(persisted, spec.replication_key)
                 ).first()
             commit(df)
         finally:
