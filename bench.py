@@ -26,6 +26,7 @@ import json
 import os
 import sys
 import time
+import traceback
 
 
 def main() -> None:
@@ -102,7 +103,11 @@ def main() -> None:
     # stdout line with nothing after it (the r12 driver capture lost the
     # line to truncation; nothing this process can do about a 2000-char
     # tail, but it can guarantee no trailing output displaces the line)
-    spark.stop()
+    try:
+        spark.stop()
+    except Exception:  # noqa: BLE001 — the result line still prints
+        print("spark.stop() failed:", file=sys.stderr)
+        traceback.print_exc()
     print(json.dumps(out), flush=True)
 
 

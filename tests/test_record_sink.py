@@ -1,5 +1,6 @@
 """RECORD sink: golden lines, bookmark consistency, the over-budget path,
-the size probe, and bookmarks that must not depend on the driver's zone.
+the size probe, and bookmarks and lines that must not depend on the
+driver's zone.
 
 The expected RECORD lines are written out literally: they are the Singer
 wire format targets parse, so a serialization change must show up here as
@@ -19,6 +20,10 @@ import pytest
 
 from youcruit_tap_rawpostgresql_spark import sink
 from youcruit_tap_rawpostgresql_spark import tap as tap_mod
+from youcruit_tap_rawpostgresql_spark.operators.incremental import (
+    advance_bookmark,
+    bookmark_max,
+)
 from youcruit_tap_rawpostgresql_spark.spec import (
     BatchSinkConfig,
     ColumnSpec,
@@ -126,6 +131,41 @@ def test_arrow_records_ignore_driver_zone(spark, driver_tz):
         spark.sql(GOLDEN_SQL), _spec("golden"), out.write, collect=True
     )
     assert out.getvalue() == "".join(GOLDEN_LINES)
+
+
+@pytest.mark.parametrize("zone", ["Asia/Tokyo", "America/New_York"])
+def test_streamed_records_ignore_driver_zone(spark, driver_tz, monkeypatch, zone):
+    """The partition-at-a-time path reads TIMESTAMP values through ``Row``
+    in the driver's zone; its lines must still equal the Arrow path's."""
+    monkeypatch.setattr(sink, "RECORD_COLLECT_BUDGET", 0)
+    driver_tz(zone)
+    out = io.StringIO()
+    sink.emit_record_messages(spark.sql(GOLDEN_SQL), _spec("golden"), out.write)
+    assert out.getvalue() == "".join(GOLDEN_LINES)
+
+
+@pytest.mark.parametrize("zone", ["Asia/Tokyo", "America/New_York"])
+def test_streamed_nested_timestamps_ignore_driver_zone(spark, driver_tz, monkeypatch, zone):
+    """TIMESTAMP values nested in arrays, map values and structs inside
+    arrays; TIMESTAMP_NTZ beside them stays unshifted."""
+    monkeypatch.setattr(sink, "RECORD_COLLECT_BUDGET", 0)
+    driver_tz(zone)
+    df = spark.sql(
+        "SELECT array(timestamp'2021-11-22 11:45:11.062824', NULL) AS a, "
+        "map('x', timestamp'2021-03-28 01:30:00') AS m, "
+        "array(named_struct('t', timestamp'2020-01-01 00:00:00', "
+        "'n', timestamp_ntz'2020-01-01 00:00:00')) AS s"
+    )
+    want = (
+        '{"type": "RECORD", "stream": "spark-public-nested", "record": {'
+        '"a": ["2021-11-22T11:45:11.062824+00:00", null], '
+        '"m": {"x": "2021-03-28T01:30:00+00:00"}, '
+        '"s": [{"t": "2020-01-01T00:00:00+00:00", "n": "2020-01-01T00:00:00+00:00"}]}}\n'
+    )
+    streamed, arrow = io.StringIO(), io.StringIO()
+    sink.emit_record_messages(df, _spec("nested"), streamed.write)
+    sink.emit_record_messages(df, _spec("nested"), arrow.write, collect=True)
+    assert streamed.getvalue() == arrow.getvalue() == want
 
 
 @pytest.fixture
@@ -270,8 +310,24 @@ def test_bookmark_max_keeps_ntz_unshifted(spark, driver_tz):
         "timestamp'2021-11-22 11:45:11.062824' AS t"
     )
     want = dt.datetime(2021, 11, 22, 11, 45, 11, 62824)
-    assert df.agg(tap_mod._bookmark_max(df, "k")).first()["mx"] == want
-    assert df.agg(tap_mod._bookmark_max(df, "t")).first()["mx"] == want
+    assert df.agg(bookmark_max(df, "k")).first()["mx"] == want
+    assert df.agg(bookmark_max(df, "t")).first()["mx"] == want
+
+
+def test_advance_bookmark_ignores_driver_zone(spark, driver_tz):
+    driver_tz("Asia/Tokyo")
+    df = spark.sql(
+        "SELECT timestamp'2021-11-22 11:45:11.062824' AS ts UNION ALL "
+        "SELECT timestamp'2021-11-22 10:00:00'"
+    )
+    spec = StreamSpec(
+        name="adv", sql="x", columns=[ColumnSpec("ts", "timestamptz")],
+        replication_key="ts", replication_key_value_start="2000-01-01",
+    )
+    state = StateStore()
+    want = dt.datetime(2021, 11, 22, 11, 45, 11, 62824)
+    assert advance_bookmark(df, spec, state) == want
+    assert state.get_bookmark(spec.fully_qualified_name, "ts") == "2021-11-22 11:45:11.062824"
 
 
 def test_size_probe_failure_warns_once(spark, tmp_path, monkeypatch, caplog):

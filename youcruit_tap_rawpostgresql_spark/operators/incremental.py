@@ -74,11 +74,28 @@ def apply_replication_filter(
     return df.filter(col >= lit if inclusive else col > lit)
 
 
+def bookmark_max(df: DataFrame, key: str):
+    """The bookmark aggregate ``max(key)`` over ``df``, aliased ``mx``.
+
+    Python reads a TIMESTAMP value back (``Row``, ``Observation.get``) as
+    a naive datetime in the DRIVER process's local zone, while the stored
+    bookmark is bound back into the session as a naive literal: with a
+    driver ``TZ`` other than the session's, the next sync would skip (or
+    re-read) hours of rows. So a TIMESTAMP max is cast to TIMESTAMP_NTZ in
+    the JVM, which gives the session-zone wall clock and crosses to Python
+    unshifted. TIMESTAMP_NTZ and every other type pass through unchanged.
+    """
+    mx = F.max(key)
+    if dict(df.dtypes).get(key) == "timestamp":
+        mx = mx.cast("timestamp_ntz")
+    return mx.alias("mx")
+
+
 def advance_bookmark(df: DataFrame, spec: StreamSpec, state: StateStore) -> Any:
     """Compute max(replication_key) and store it (reference R4)."""
     if spec.replication_key is None:
         return None
-    row = df.agg(F.max(spec.replication_key).alias("mx")).first()
+    row = df.agg(bookmark_max(df, spec.replication_key)).first()
     new_val = row["mx"] if row else None
     if new_val is not None:
         state.set_bookmark(spec.fully_qualified_name, spec.replication_key, new_val)

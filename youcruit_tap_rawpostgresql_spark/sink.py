@@ -297,6 +297,37 @@ def _arrow_converter(t):
     return jsonable_value
 
 
+def _row_converter(t):
+    """Converter that pins the TIMESTAMP values a ``Row`` holds (naive, in
+    the DRIVER process's local zone) to aware UTC, at any depth of structs,
+    arrays and map values (as ``Row.asDict(recursive=True)`` gives them),
+    or ``None`` when ``t`` holds no TIMESTAMP. TIMESTAMP_NTZ values are
+    wall clocks and stay as they are."""
+    from pyspark.sql import types as T
+
+    if isinstance(t, T.TimestampType):
+        utc = datetime.timezone.utc
+        return lambda v: None if v is None else v.astimezone(utc)
+    if isinstance(t, T.StructType):
+        fields = [(f.name, _row_converter(f.dataType)) for f in t.fields]
+        if all(c is None for _, c in fields):
+            return None
+        return lambda v: None if v is None else {
+            k: v[k] if c is None else c(v[k]) for k, c in fields
+        }
+    if isinstance(t, T.ArrayType):
+        item = _row_converter(t.elementType)
+        if item is None:
+            return None
+        return lambda v: None if v is None else [item(x) for x in v]
+    if isinstance(t, T.MapType):
+        value = _row_converter(t.valueType)
+        if value is None:
+            return None
+        return lambda v: None if v is None else {k: value(x) for k, x in v.items()}
+    return None
+
+
 def emit_record_messages(
     df: DataFrame, spec: StreamSpec, write, collect: bool | None = None
 ) -> int:
@@ -310,7 +341,9 @@ def emit_record_messages(
     ``toArrow``'s final cast to the declared schema rejects a null struct
     whose fields are declared non-null. ``collect=False`` streams rows one
     partition at a time through ``toLocalIterator`` — driver memory stays
-    bounded for frames of any size. ``None`` chooses by
+    bounded for frames of any size; its ``Row`` values read TIMESTAMP in
+    the driver's zone, so converters from the Spark schema pin them to UTC
+    and both paths write the same lines. ``None`` chooses by
     ``fits_record_budget``.
 
     Observed metrics on ``df`` (``DataFrame.observe``) are reported by the
@@ -323,8 +356,12 @@ def emit_record_messages(
     stream = spec.fully_qualified_name
     n = 0
     if not collect:
+        convs = {f.name: c for f in df.schema.fields if (c := _row_converter(f.dataType))}
         for row in df.toLocalIterator():
-            rec = {k: jsonable_value(v) for k, v in row.asDict(recursive=True).items()}
+            rec = row.asDict(recursive=True)
+            for k, conv in convs.items():
+                rec[k] = conv(rec[k])
+            rec = {k: jsonable_value(v) for k, v in rec.items()}
             write(json.dumps({"type": "RECORD", "stream": stream, "record": rec}) + "\n")
             n += 1
         return n

@@ -7,7 +7,10 @@ Model:
   named per commit (a commit never rewrites another commit's files);
 - a snapshot is a version manifest ``v{N:012d}.json`` listing exactly the
   data files visible at version N, their per-file column statistics (the
-  data-skipping index) and the snapshot schema;
+  data-skipping index) and the snapshot's read schema: the union of its
+  files' schemas, which every read hands to Spark, so no read runs a
+  parquet footer-inference job. Manifests without the ``read_schema``
+  marker (written before it existed) are read by inference;
 - commit = write data files, then publish the manifest ATOMICALLY via
   ``os.link`` (hard-link fails with EEXIST if the version exists — the
   true test-and-set; a check-then-rename would let two racers both
@@ -40,6 +43,12 @@ import uuid as _uuid
 from pyspark.sql import DataFrame, SparkSession
 
 _MANIFEST_GLOB = "v*.json"
+# Manifest field marking its "schema" as the snapshot's read schema (the
+# union of the schemas of every listed file).
+_READ_SCHEMA = "read_schema"
+# JSON type keys that parquet files need not agree on for their schemas to
+# merge.
+_LOOSE_TYPE_KEYS = {"nullable", "containsNull", "valueContainsNull", "metadata"}
 
 
 def _root_path(root: str) -> str:
@@ -71,6 +80,48 @@ def current_version(root: str) -> int | None:
 def _read_manifest(root: str, version: int) -> dict:
     with open(_manifest_path(root, version)) as fh:
         return json.load(fh)
+
+
+def _schema(man: dict):
+    from pyspark.sql.types import StructType
+
+    return StructType.fromJson(json.loads(man["schema"]))
+
+
+def _type_shape(v):
+    if isinstance(v, dict):
+        return {k: _type_shape(x) for k, x in v.items() if k not in _LOOSE_TYPE_KEYS}
+    if isinstance(v, list):
+        return [_type_shape(x) for x in v]
+    return v
+
+
+def _union_schema(base, new):
+    """``base``'s fields, then those of ``new`` that ``base`` lacks: the
+    schema ``mergeSchema`` infers over files of both. ``None`` when a
+    column's types disagree."""
+    from pyspark.sql.types import StructType
+
+    have = {f.name: f.dataType for f in base.fields}
+    added = []
+    for f in new.fields:
+        if f.name not in have:
+            added.append(f)
+        elif _type_shape(have[f.name].jsonValue()) != _type_shape(f.dataType.jsonValue()):
+            return None
+    return StructType(base.fields + added)
+
+
+def _scan(spark: SparkSession, man: dict, files: list[str], merge: bool = False) -> DataFrame:
+    """Read ``files`` of the snapshot ``man``: with its recorded read
+    schema, so Spark runs no footer-inference job; an unmarked (older)
+    manifest infers the schema as before, merging footers if ``merge``."""
+    reader = spark.read
+    if man.get(_READ_SCHEMA):
+        reader = reader.schema(_schema(man))
+    elif merge:
+        reader = reader.option("mergeSchema", "true")
+    return reader.parquet(*files)
 
 
 class CommitConflict(RuntimeError):
@@ -169,7 +220,15 @@ def commit_snapshot(
     ``carry_files``/``carry_stats`` prepend files surviving from a
     previous snapshot with their known stats (the pruned-upsert path).
     ``extra`` merges additional metadata into the manifest (e.g. the
-    streaming sink's transaction marker)."""
+    streaming sink's transaction marker).
+
+    The manifest records the snapshot's read schema: ``df.schema``, or,
+    when files are carried forward, its union with the base's read
+    schema, so it is what ``mergeSchema`` would infer over the listed
+    files. When the base has no read schema, or a column's type changes,
+    the manifest records ``df.schema`` unmarked and reads infer."""
+    if mode not in ("overwrite", "append"):
+        raise ValueError(f"unknown mode {mode!r}")
     rp = _root_path(root)
     os.makedirs(os.path.join(rp, "data"), exist_ok=True)
     base = current_version(root)
@@ -183,12 +242,11 @@ def commit_snapshot(
 
     files: list[str] = []
     stats: dict[str, dict] = {}
+    carrying = (mode == "append" and base is not None) or bool(carry_files)
+    prev = _read_manifest(root, base) if carrying and base is not None else {}
     if mode == "append" and base is not None:
-        prev = _read_manifest(root, base)
         files.extend(prev["files"])
         stats.update(prev.get("stats", {}))
-    elif mode not in ("overwrite", "append"):
-        raise ValueError(f"unknown mode {mode!r}")
     if carry_files:
         files.extend(carry_files)
     if carry_stats:
@@ -198,14 +256,20 @@ def commit_snapshot(
         for f in new_files:
             stats[f] = _file_stats(f, stats_columns)
 
+    read_schema = df.schema
+    if carrying:
+        # carried files keep their own schemas
+        read_schema = _union_schema(_schema(prev), df.schema) if prev.get(_READ_SCHEMA) else None
     manifest = {
         "version": version,
         "op": op,
         "mode": mode,
         "files": files,
         "stats": stats,
-        "schema": df.schema.json(),
+        "schema": (df.schema if read_schema is None else read_schema).json(),
     }
+    if read_schema is not None:
+        manifest[_READ_SCHEMA] = True
     if extra:
         manifest.update(extra)
     _publish(rp, root, version, manifest)
@@ -213,10 +277,7 @@ def commit_snapshot(
 
 
 def _empty_frame(spark: SparkSession, man: dict) -> DataFrame:
-    from pyspark.sql.types import StructType
-
-    schema = StructType.fromJson(json.loads(man["schema"]))
-    return spark.createDataFrame([], schema=schema)
+    return spark.createDataFrame([], schema=_schema(man))
 
 
 def read_version(
@@ -224,15 +285,17 @@ def read_version(
 ) -> DataFrame:
     """Snapshot read: the file list of ``version`` (default: current).
     Files are immutable, so this DataFrame stays valid and consistent no
-    matter what later commits do. A zero-file snapshot reads as an empty
-    frame with the manifest's recorded schema."""
+    matter what later commits do. The read takes the manifest's recorded
+    schema (the union over the snapshot's files, as ``read_version_merged``
+    gives), so building it runs no Spark job. A zero-file snapshot reads
+    as an empty frame with that schema."""
     v = current_version(root) if version is None else version
     if v is None:
         raise FileNotFoundError(f"no committed version under {root}")
     man = _read_manifest(root, v)
     if not man["files"]:
         return _empty_frame(spark, man)
-    return spark.read.parquet(*man["files"])
+    return _scan(spark, man, man["files"])
 
 
 def read_version_merged(
@@ -241,14 +304,15 @@ def read_version_merged(
     """Snapshot read with schema merging across the version's files —
     the schema-evolution read path: files written before a column existed
     null-fill it (parquet mergeSchema), so appended snapshots can widen
-    the schema without rewriting history."""
+    the schema without rewriting history. A manifest with a recorded read
+    schema already holds that merged schema; an older one merges footers."""
     v = current_version(root) if version is None else version
     if v is None:
         raise FileNotFoundError(f"no committed version under {root}")
     man = _read_manifest(root, v)
     if not man["files"]:
         return _empty_frame(spark, man)
-    return spark.read.option("mergeSchema", "true").parquet(*man["files"])
+    return _scan(spark, man, man["files"], merge=True)
 
 
 def _overlaps(stat, lo, hi) -> bool:
@@ -277,7 +341,10 @@ def prune_files_bounds(
     so per-column disjointness proves the file holds no matching row.
     ``bounds`` maps column → (lo, hi); columns without stats in a file
     conservatively count as overlapping."""
-    man = _read_manifest(root, version)
+    return _split_files(_read_manifest(root, version), bounds)
+
+
+def _split_files(man: dict, bounds: dict) -> tuple[list[str], list[str]]:
     stats = man.get("stats", {})
     norm = {c: (_json_stat(lo), _json_stat(hi)) for c, (lo, hi) in bounds.items()}
     hit, miss = [], []
@@ -302,12 +369,10 @@ def read_version_pruned(
     v = current_version(root) if version is None else version
     if v is None:
         raise FileNotFoundError(f"no committed version under {root}")
-    hit, _miss = prune_files(root, v, column, lo, hi)
-    if not hit:
-        return _empty_frame(spark, _read_manifest(root, v)).filter(
-            F.col(column).between(lo, hi)
-        )
-    return spark.read.parquet(*hit).filter(F.col(column).between(lo, hi))
+    man = _read_manifest(root, v)
+    hit, _miss = _split_files(man, {column: (lo, hi)})
+    df = _scan(spark, man, hit) if hit else _empty_frame(spark, man)
+    return df.filter(F.col(column).between(lo, hi))
 
 
 def _keys(key: "str | list[str]") -> list[str]:
@@ -321,47 +386,51 @@ def _keys(key: "str | list[str]") -> list[str]:
     return keys
 
 
-def _check_unique_keys(updates: DataFrame, key: "str | list[str]") -> None:
-    """Reject updates that would corrupt MERGE semantics: duplicate keys,
-    or NULL in any key column. NULL keys never match an anti-join, so a
-    NULL-key row would re-append on every bookmark-reset re-sync (silent
-    idempotence break) — and an all-NULL key span would defeat statistics
-    pruning entirely (round-8 self-review; primary keys are non-null by
-    contract, so this fails loudly instead of guessing)."""
+def _profile_keys(df: DataFrame, keys: list[str], unique: bool):
+    """Profile ``df`` by key in ONE two-level aggregate: group by the
+    key, then one row with the row count ``__n`` (NULL when empty), the
+    largest group ``__max``, a NULL-key flag ``__null`` and each key
+    column's span ``__lo{i}``/``__hi{i}`` (the pruning bounds). groupBy
+    keeps NULL key groups, so the flag rides the same exchange.
+
+    ``unique=True`` rejects updates that would corrupt MERGE semantics:
+    duplicate keys, or NULL in any key column. NULL keys never match an
+    anti-join, so a NULL-key row would re-append on every bookmark-reset
+    re-sync (silent idempotence break), and an all-NULL key span would
+    defeat statistics pruning entirely; primary keys are non-null by
+    contract, so this fails loudly instead of guessing. Detail lookups
+    (which key offended) run only on the failure path."""
+    from functools import reduce
+
     from pyspark.sql import functions as F
 
-    keys = _keys(key)
-    null_pred = None
-    for k in keys:
-        c = F.col(k).isNull()
-        null_pred = c if null_pred is None else (null_pred | c)
-    # ONE validation job on the happy path (round-8 self-review: the
-    # first cut ran a NULL-probe job plus the duplicate job — an extra
-    # full scan per production sync): group once, then fold both checks
-    # into a single 1-row aggregate. groupBy keeps NULL key groups, so
-    # the null flag rides the same exchange. Detail lookups (which key
-    # offended) run only on the failure path.
-    grouped = updates.groupBy(*keys).agg(F.count(F.lit(1)).alias("n"))
-    probe = grouped.agg(
-        F.max("n").alias("max_n"),
-        F.max(F.when(null_pred, True).otherwise(False)).alias("has_null"),
-    ).first()
-    if probe["max_n"] is None:  # empty updates — nothing to validate
-        return
-    if probe["has_null"]:
+    null_key = reduce(lambda a, b: a | b, [F.col(k).isNull() for k in keys])
+    grouped = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("__n"))
+    aggs = [
+        F.sum("__n").alias("__n"),
+        F.max("__n").alias("__max"),
+        F.max(null_key).alias("__null"),
+    ]
+    for i, k in enumerate(keys):
+        aggs += [F.min(k).alias(f"__lo{i}"), F.max(k).alias(f"__hi{i}")]
+    prof = grouped.agg(*aggs).first()
+    if not unique or prof["__n"] is None:
+        return prof
+    if prof["__null"]:
         raise ValueError(
             f"upsert updates carry NULL in a key column ({', '.join(keys)})"
             " — primary keys are non-null by contract; filter or repair"
             " the extract first"
         )
-    if probe["max_n"] > 1:
-        dup = grouped.filter(F.col("n") > 1).limit(1).collect()
+    if prof["__max"] > 1:
+        dup = grouped.filter(F.col("__n") > 1).limit(1).collect()
         kv = ", ".join(f"{k}={dup[0][k]!r}" for k in keys)
         raise ValueError(
-            f"upsert updates carry {dup[0]['n']} rows for key ({kv}) — "
+            f"upsert updates carry {dup[0]['__n']} rows for key ({kv}) — "
             "MERGE semantics require one row per key (dedup the extract, "
             "e.g. DISTINCT ON latest, first)"
         )
+    return prof
 
 
 def upsert_snapshot(
@@ -382,13 +451,14 @@ def upsert_snapshot(
     files."""
     keys = _keys(key)
     base = current_version(root)
-    _check_unique_keys(updates, keys)
+    _profile_keys(updates, keys, unique=True)
     if base is None:
         return commit_snapshot(
             updates, root, mode="overwrite", op="upsert", stats_columns=keys
         )
     current = read_version(spark, root, base)
-    kept = current.join(updates.select(*keys).distinct(), keys, "left_anti")
+    # a left_anti result does not depend on duplicates on the right side
+    kept = current.join(updates.select(*keys), keys, "left_anti")
     merged = kept.unionByName(updates)
     return commit_snapshot(
         merged,
@@ -414,58 +484,36 @@ def _pruned_rewrite(
     spark: SparkSession,
     root: str,
     base: int,
-    key: "str | list[str]",
+    keys: list[str],
+    profile,
     keys_df: DataFrame,
     merge_df: DataFrame | None,
     op: str,
     extra: dict | None = None,
 ) -> tuple[int, int, int]:
-    """Shared statistics-pruned copy-on-write core: files overlapping
-    ``keys_df``'s key span (EVERY key column, for composite keys) are
-    re-read (mergeSchema — schema-evolved tables must not lose columns
-    in a rewrite), stripped of matching keys, optionally merged with
-    ``merge_df`` (upsert) or not (delete), and committed with disjoint
-    files carried over. Returns (version, n_rewritten, n_carried)."""
-    from pyspark.sql import functions as F
-
-    keys = _keys(key)
+    """Shared statistics-pruned copy-on-write core: files overlapping the
+    key span of ``keys_df`` (``profile``'s bounds on EVERY key column, for
+    composite keys) are re-read, stripped of matching keys, optionally
+    merged with ``merge_df`` (upsert) or not (delete), and committed with
+    disjoint files carried over. The re-read takes the base manifest's
+    read schema, so a schema-evolved table loses no column in a rewrite
+    and no ``mergeSchema`` footer job runs (an older unmarked manifest
+    still merges footers). Returns (version, n_rewritten, n_carried)."""
     man = _read_manifest(root, base)
-    aggs = [F.count(F.lit(1)).alias("__n")]
-    for i, k in enumerate(keys):
-        aggs += [F.min(k).alias(f"__lo{i}"), F.max(k).alias(f"__hi{i}")]
-    span = keys_df.agg(*aggs).first()
-    if span["__n"] == 0:  # empty key set — a no-op version
-        return (
-            commit_snapshot(
-                _empty_frame(spark, man),
-                root,
-                mode="append",
-                op=op + "-noop",
-                expected_base=base,
-                extra=extra,
-            ),
-            0,
-            len(man["files"]),
-        )
     # an all-NULL key column yields no usable span — skip it (conservative:
     # that column prunes nothing; NULL keys never match the anti-join anyway)
     bounds = {
-        k: (span[f"__lo{i}"], span[f"__hi{i}"])
+        k: (profile[f"__lo{i}"], profile[f"__hi{i}"])
         for i, k in enumerate(keys)
-        if span[f"__lo{i}"] is not None
+        if profile[f"__lo{i}"] is not None
     }
     if not bounds:
-        # EVERY key column is all-NULL: the anti-join can match nothing,
-        # so the correct result is a carry-all no-op — without this guard
-        # the empty dict's vacuous all() would mark every file overlapping
-        # and rewrite the whole table for nothing (round-8 self-review).
-        # Upserts never reach here (NULL keys are rejected up front); the
-        # delete path treats a NULL key set as deleting no rows.
-        if merge_df is not None:
-            raise ValueError(
-                "upsert reached the pruned rewrite with an all-NULL key "
-                "span — NULL keys must be rejected before commit"
-            )
+        # an empty key set, or EVERY key column all-NULL: the anti-join can
+        # match nothing, so the result is a carry-all no-op version — the
+        # empty dict's vacuous all() would otherwise mark every file
+        # overlapping and rewrite the whole table for nothing. Upserts
+        # reject NULL keys before they get here; the delete path treats a
+        # NULL key set as deleting no rows.
         return (
             commit_snapshot(
                 _empty_frame(spark, man),
@@ -478,12 +526,10 @@ def _pruned_rewrite(
             0,
             len(man["files"]),
         )
-    hit, miss = prune_files_bounds(root, base, bounds)
-    if hit:
-        touched = spark.read.option("mergeSchema", "true").parquet(*hit)
-    else:
-        touched = _empty_frame(spark, man)
-    kept = touched.join(keys_df.select(*keys).distinct(), keys, "left_anti")
+    hit, miss = _split_files(man, bounds)
+    touched = _scan(spark, man, hit, merge=True) if hit else _empty_frame(spark, man)
+    # a left_anti result does not depend on duplicates on the right side
+    kept = touched.join(keys_df.select(*keys), keys, "left_anti")
     rewritten = kept.unionByName(merge_df, allowMissingColumns=True) if merge_df is not None else kept
     base_stats = man.get("stats", {})
     carried = {f: base_stats[f] for f in miss if f in base_stats}
@@ -513,14 +559,15 @@ def upsert_snapshot_pruned(
     """Statistics-pruned copy-on-write upsert: only files whose ``key``
     range (every column of a composite key) overlaps the updates' key
     span are rewritten; disjoint files carry over untouched (with their
-    stats). Returns (version, n_rewritten_files, n_carried_files).
+    stats). Returns (version, n_rewritten_files, n_carried_files). One
+    aggregate both validates the keys and gives the span.
 
     Scale: THE production upsert shape — cost scales with the touched
     key range, not table size. A point update against a key-sorted
     100 TB table rewrites one file."""
     keys = _keys(key)
     base = current_version(root)
-    _check_unique_keys(updates, keys)
+    profile = _profile_keys(updates, keys, unique=True)
     if base is None:
         return (
             commit_snapshot(
@@ -531,7 +578,7 @@ def upsert_snapshot_pruned(
             0,
         )
     return _pruned_rewrite(
-        spark, root, base, keys, updates, updates, op, extra=extra
+        spark, root, base, keys, profile, updates, updates, op, extra=extra
     )
 
 
@@ -541,8 +588,8 @@ def delete_keys(
     """Row-level DELETE by key set (the data-governance / right-to-be-
     forgotten primitive): files whose ``key`` statistics overlap the
     deletion set's span are rewritten WITHOUT the matching rows
-    (anti-join); disjoint files carry over untouched. Returns
-    (version, n_files_rewritten).
+    (anti-join); disjoint files carry over untouched. ``keys_df`` may
+    repeat a key. Returns (version, n_files_rewritten).
 
     IMPORTANT: like every commit, old versions still reference the
     original files — completing an erasure requires VACUUM down to the
@@ -552,11 +599,13 @@ def delete_keys(
     Scale: cost follows the deletion set's key span, not table size —
     with clustered keys (the sync layout) a user's rows live in few
     files."""
+    keys = _keys(key)
     base = current_version(root)
     if base is None:
         raise FileNotFoundError(f"no committed version under {root}")
+    profile = _profile_keys(keys_df, keys, unique=False)
     version, n_new, _carried = _pruned_rewrite(
-        spark, root, base, key, keys_df, None, "delete"
+        spark, root, base, keys, profile, keys_df, None, "delete"
     )
     return version, n_new
 
@@ -655,7 +704,7 @@ def compact_version(
         stats_columns = sorted(cols) or None
     total_bytes = sum(os.path.getsize(f) for f in files)
     n_out = max(1, round(total_bytes / target_file_bytes))
-    df = spark.read.parquet(*files).coalesce(n_out)
+    df = _scan(spark, man, files).coalesce(n_out)
     version = commit_snapshot(
         df,
         root,

@@ -20,6 +20,7 @@ from youcruit_tap_rawpostgresql_spark.operators.conform import conform
 from youcruit_tap_rawpostgresql_spark.operators.flatten import flatten_struct_columns
 from youcruit_tap_rawpostgresql_spark.operators.incremental import (
     apply_replication_filter,
+    bookmark_max,
     resolve_starting_bookmark,
 )
 from youcruit_tap_rawpostgresql_spark.operators.maps import apply_stream_map
@@ -34,25 +35,6 @@ from youcruit_tap_rawpostgresql_spark.sink import (
 )
 from youcruit_tap_rawpostgresql_spark.spec import StreamSpec, TapConfig
 from youcruit_tap_rawpostgresql_spark.state import StateStore
-
-
-def _bookmark_max(df: DataFrame, key: str):
-    """The bookmark aggregate ``max(key)`` over ``df``, aliased ``mx``.
-
-    Python reads a TIMESTAMP value back (``Row``, ``Observation.get``) as
-    a naive datetime in the DRIVER process's local zone, while the stored
-    bookmark is bound back into the session as a naive literal: with a
-    driver ``TZ`` other than the session's, the next sync would skip (or
-    re-read) hours of rows. So a TIMESTAMP max is cast to TIMESTAMP_NTZ in
-    the JVM, which gives the session-zone wall clock and crosses to Python
-    unshifted. TIMESTAMP_NTZ and every other type pass through unchanged.
-    """
-    from pyspark.sql import functions as F
-
-    mx = F.max(key)
-    if dict(df.dtypes).get(key) == "timestamp":
-        mx = mx.cast("timestamp_ntz")
-    return mx.alias("mx")
 
 
 @dataclass
@@ -295,7 +277,7 @@ class SparkTap:
         new_bm = None
 
         def observe_bookmark(p: DataFrame) -> DataFrame:
-            return p if obs_bm is None else p.observe(obs_bm, _bookmark_max(p, rk))
+            return p if obs_bm is None else p.observe(obs_bm, bookmark_max(p, rk))
 
         if batch_mode and self.config.batch:
             # record count and bookmark ride the write job as observed
@@ -337,7 +319,7 @@ class SparkTap:
                 emit_schema_message(spec, self.write)
                 n = emit_record_messages(df, spec, self.write, collect=collect)
                 if persisted is not None:
-                    new_bm = persisted.agg(_bookmark_max(persisted, rk)).first()["mx"]
+                    new_bm = persisted.agg(bookmark_max(persisted, rk)).first()["mx"]
             finally:
                 if persisted is not None:
                     persisted.unpersist()
@@ -438,12 +420,13 @@ class SparkTap:
         declares no keys), so the
         current version always equals source state for the synced key
         range and every prior sync stays time-travel readable. The
-        extract is persisted for the duration: the bookmark aggregate,
-        the commit, and the record count all read ONE materialized
-        snapshot — a live (JDBC) source re-executing between them could
-        otherwise advance the bookmark past rows never committed
-        (permanent data loss), the same hazard sync_stream guards against
-        with one observed action (or a persist, over its RECORD budget).
+        extract is persisted for the duration: ONE aggregate gives the
+        record count and the bookmark while materializing it, and the
+        commit reads the same snapshot — a live (JDBC) source
+        re-executing between them could otherwise advance the bookmark
+        past rows never committed (permanent data loss), the same hazard
+        sync_stream guards against with one observed action (or a
+        persist, over its RECORD budget).
         The bookmark is written only AFTER the commit succeeds — a failed
         commit leaves state untouched and the next sync re-extracts the
         same slice (at-least-once extract, exactly-once visible state: the
@@ -490,13 +473,16 @@ class SparkTap:
         targets (versioned table, JDBC warehouse table). The consistency
         invariants live HERE, once:
 
-        - the extract is persisted so the commit, the record count, and
-          the bookmark aggregate all read ONE materialized snapshot — a
+        - the extract is persisted, and ONE aggregate over it gives the
+          count and the bookmark while materializing it, so the commit,
+          the record count and the bookmark all read ONE snapshot — a
           live (JDBC) source re-executing between them could otherwise
           advance the bookmark past rows never committed;
         - ``record_count`` is the POST-map frame (what the commit writes;
-          a filtering stream map must not overstate it) — served from the
-          cached pre-map snapshot, not a second extract;
+          a filtering stream map must not overstate it) — the aggregate's
+          count when no map or flattening changed the frame, else a
+          ``count()`` served from the cached snapshot, not a second
+          extract;
         - the bookmark aggregate runs on the PRE-map frame (Singer
           parity: maps cannot corrupt state);
         - the bookmark is stored only AFTER the commit succeeds — a
@@ -506,27 +492,26 @@ class SparkTap:
           immediately — required when the commit is NON-idempotent
           (plain JDBC append): losing an in-memory advance would
           re-append the same slice on the next run."""
+        from pyspark.sql import functions as F
         from pyspark.storagelevel import StorageLevel
 
+        rk = spec.replication_key
         df, premap, _ = self._prepare(spec)
         persisted = premap.persist(StorageLevel.MEMORY_AND_DISK)
         try:
-            n_premap = persisted.count()  # materializes the snapshot all paths read
-            n = n_premap if df is persisted else df.count()
-            new_bm_row = None
-            if spec.replication_key:
-                new_bm_row = persisted.agg(
-                    _bookmark_max(persisted, spec.replication_key)
-                ).first()
+            aggs = [F.count(F.lit(1)).alias("n")]
+            if rk:
+                aggs.append(bookmark_max(persisted, rk))
+            # materializes the snapshot all paths read
+            row = persisted.agg(*aggs).first()
+            n = row["n"] if df is persisted else df.count()
             commit(df)
         finally:
             persisted.unpersist()
         new_bm = None
-        if spec.replication_key and new_bm_row and new_bm_row["mx"] is not None:
+        if rk and row["mx"] is not None:
             with self._state_lock:
-                self.state.set_bookmark(
-                    spec.fully_qualified_name, spec.replication_key, new_bm_row["mx"]
-                )
+                self.state.set_bookmark(spec.fully_qualified_name, rk, row["mx"])
                 new_bm = self.state.get_bookmark(spec.fully_qualified_name)
                 if flush_state:
                     self.state.flush()
