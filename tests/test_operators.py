@@ -875,3 +875,37 @@ def test_grouped_map_topk_matches_apply_in_pandas(spark, sf_dir):
     plan = REGISTRY["grouped_map_topk"].fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapGroupsInPandas" not in plan
     assert "MapInPandas" in plan
+
+
+@pytest.mark.parametrize("batch_rows", ["10000", "1"], ids=["one-batch", "one-row-batches"])
+def test_grouped_map_topk_keeps_null_key_group(spark, monkeypatch, batch_rows):
+    """A NULL user_id is one group, as in the window form: the batched
+    top-2 must keep its rows (pandas ``groupby`` drops NaN keys by
+    default), and a NULL group split across Arrow batches must carry over
+    whole like any other (``NaN == NaN`` is False)."""
+    from youcruit_tap_rawpostgresql_spark.querybank import REGISTRY, extras
+
+    events = spark.createDataFrame(
+        [
+            (None, 1, 5.0), (None, 2, 9.0), (None, 3, 7.0), (None, 4, 1.0),
+            (1, 5, 3.0), (1, 6, 4.0), (1, 7, 2.0), (2, 8, 1.0),
+        ],
+        "user_id long, event_id long, value double",
+    )
+    monkeypatch.setattr(extras, "tables", lambda _spark, _sf: {"events": events})
+    events.createOrReplaceTempView("topk_null_events")
+    old_val = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    try:
+        want = spark.sql(
+            "SELECT user_id, event_id, rnk FROM (SELECT user_id, event_id, "
+            "ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY value DESC, "
+            "event_id) AS rnk FROM topk_null_events) WHERE rnk <= 2"
+        ).collect()
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", batch_rows)
+        got = REGISTRY["grouped_map_topk"].fn(spark, "unused").collect()
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old_val)
+        spark.catalog.dropTempView("topk_null_events")
+    assert (None, 2, 1) in {tuple(r) for r in want}
+    assert len(got) == len(want) == 5
+    assert {tuple(r) for r in got} == {tuple(r) for r in want}

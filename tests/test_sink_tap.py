@@ -44,9 +44,10 @@ def test_batch_sink_exact_record(spark, tmp_path):
     spec = _batch_spec()
     df = conform(run_stream_sql(spark, spec), spec)
     batch = BatchSinkConfig(
-        root=f"file://{tmp_path}", prefix="test-batch", batch_size=5
+        root=f"file://{tmp_path}", prefix="test-batch", batch_size=5,
+        exact_rotation=True,
     )
-    manifests = write_batch_files(df, spec, batch, exact_rotation=True)
+    manifests = write_batch_files(df, spec, batch)
 
     assert len(manifests) == 1
     m = manifests[0]
@@ -78,8 +79,10 @@ def test_batch_rotation_multiple_files(spark, tmp_path):
     from youcruit_tap_rawpostgresql_spark.plans.executor import run_stream_sql
 
     df = conform(run_stream_sql(spark, spec), spec)
-    batch = BatchSinkConfig(root=f"file://{tmp_path}", batch_size=5)
-    manifests = write_batch_files(df, spec, batch, exact_rotation=True)
+    batch = BatchSinkConfig(
+        root=f"file://{tmp_path}", batch_size=5, exact_rotation=True
+    )
+    manifests = write_batch_files(df, spec, batch)
     files = manifests[0].files
     assert len(files) == 3  # 5 + 5 + 2
     total = 0
@@ -863,8 +866,9 @@ def test_batch_sink_non_gzip_codec_roundtrip(spark, tmp_path):
         prefix="lz4-batch",
         batch_size=5,
         encoding_compression="lz4",
+        exact_rotation=True,
     )
-    manifests = write_batch_files(df, spec, batch, exact_rotation=True)
+    manifests = write_batch_files(df, spec, batch)
     assert len(manifests) == 1
     m = manifests[0]
     assert m.compression == "lz4"

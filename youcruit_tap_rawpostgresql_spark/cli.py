@@ -229,8 +229,7 @@ def main(argv: list[str] | None = None) -> int:
                     "are selected — omit 'table' so each stream loads its "
                     "own fully-qualified-name table"
                 )
-            # sync_stream_to_jdbc flushes state per stream itself (plain
-            # JDBC append is non-idempotent — see the method docstring)
+            # each stream's sync flushes the state file after its commit
             results = [
                 tap.sync_stream_to_jdbc(
                     spec, config.jdbc_target, mode=args.jdbc_target
@@ -276,13 +275,6 @@ def main(argv: list[str] | None = None) -> int:
                     )
                     root = legacy
                 results.append(tap.sync_stream_to_versioned(spec, root))
-                # flush IMMEDIATELY after each stream's commit: deferring
-                # to one end-of-run flush would let a later stream's
-                # failure discard this stream's bookmark advance, and the
-                # keyless APPEND path would then re-append the same slice
-                # on retry (duplicate rows — upserts are idempotent,
-                # appends are not)
-                tap.state.flush()
         else:
             results = tap.sync_all(batch_mode=args.batch, parallel=args.parallel)
     except BrokenPipeError:

@@ -511,8 +511,9 @@ def grouped_map_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 carry = None
             if len(pdf) == 0:
                 continue
-            last_uid = pdf["user_id"].iat[-1]
-            tail_mask = pdf["user_id"] == last_uid
+            uid = pdf["user_id"]
+            # a NULL key is one group too, and NaN == NaN is False
+            tail_mask = uid.isna() if pd.isna(uid.iat[-1]) else uid == uid.iat[-1]
             carry = pdf[tail_mask]
             pdf = pdf[~tail_mask.to_numpy()]
             if len(pdf):
@@ -528,7 +529,7 @@ def grouped_map_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ascending=[True, False, True],
             kind="mergesort",
         )
-        rnk = pdf.groupby("user_id", sort=False).cumcount() + 1
+        rnk = pdf.groupby("user_id", sort=False, dropna=False).cumcount() + 1
         out = pdf.loc[rnk <= 2, ["user_id", "event_id"]].copy()
         out["rnk"] = rnk[rnk <= 2]
         return out

@@ -123,11 +123,10 @@ def graph_pagerank_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     # star join — 3× the scan cost for identical rows
     # deg is node-sized (≤ |nation| rows) but its post-agg size ESTIMATE
     # descends from the fact-table star join, so the static planner chose
-    # SortMergeJoin (2 exchanges + 2 sorts) for this tiny join
-    # (plans/r13/graph_pagerank_trade_before.txt node 42); the explicit
-    # broadcast pins the hash join without waiting for AQE's runtime
-    # rewrite (guide §3.1: estimates are often wrong after aggregation —
-    # hint when you know a side is small)
+    # SortMergeJoin (2 exchanges + 2 sorts) for this tiny join in the
+    # non-adaptive plan; the explicit broadcast pins the hash join without
+    # waiting for AQE's runtime rewrite (guide §3.1: estimates are often
+    # wrong after aggregation — hint when you know a side is small)
     ed = persist_scoped(
         "graph_pagerank_trade.edges", e.join(F.broadcast(deg), "src")
     )

@@ -2213,11 +2213,11 @@ def dsir_importance_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     # isnotnull(f) into the join-side subtrees (docfeat and cnt), but the
     # tot branch (under the cross join) carries no such constraint, so its
     # subtree no longer canonicalizes equal and the corpus was exploded +
-    # md5-hashed a SECOND time just to produce the 2-value total row
-    # (plans/r13/dsir_importance_select_before.txt: Generate at (5) AND
-    # (18)). Writing the trivially-true filter (f = md5-derived, never
-    # null) into docfeat itself puts it in every branch; the inference
-    # then adds nothing and all three branches reuse ONE corpus exchange.
+    # md5-hashed a SECOND time just to produce the 2-value total row (the
+    # plan without the filter shows two Generate nodes). Writing the
+    # trivially-true filter (f = md5-derived, never null) into docfeat
+    # itself puts it in every branch; the inference then adds nothing and
+    # all three branches reuse ONE corpus exchange.
     docfeat = (
         spread(d.filter(F.size(t) >= 2))
         .select("doc_id", "lang", F.explode(bigrams).alias("bg"))

@@ -44,6 +44,9 @@ from youcruit_tap_rawpostgresql_spark.spec import BatchSinkConfig, StreamSpec
 # ISO-8601 with microseconds and numeric offset: 2021-11-22T11:45:11.062824+00:00
 ISO_TS_FORMAT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSxxx"
 
+# leads every batch file name: {prefix}{TAP_NAME}--{stream}-{uuid}-{i}
+TAP_NAME = "tap-rawpostgresql-spark"
+
 # Largest optimizer size estimate (bytes) of a frame whose RECORD messages
 # are collected to the driver in one Arrow action; above it, records stream
 # one partition at a time.
@@ -105,26 +108,18 @@ class BatchManifest:
 
 
 def write_batch_files(
-    df: DataFrame,
-    spec: StreamSpec,
-    batch: BatchSinkConfig,
-    tap_name: str = "tap-rawpostgresql-spark",
-    exact_rotation: bool | None = None,
+    df: DataFrame, spec: StreamSpec, batch: BatchSinkConfig
 ) -> list[BatchManifest]:
     """Write ``df`` as gzip JSONL batch files; return manifests.
 
-    ``exact_rotation=True`` coalesces to one partition so file rotation is
-    globally exact every ``batch_size`` rows (reference-equivalent; use for
-    small exports only). Default keeps task parallelism: each task rotates
-    at ``batch_size``, so files are ≤ batch_size rows (acceptable drift
-    documented in SURVEY.md §3 Q3). ``None`` (the default) defers to
-    ``batch.exact_rotation``, so the reference-parity mode is reachable
-    from CONFIG (``batch_config.exact_rotation``), not just code.
+    ``batch.exact_rotation`` coalesces to one partition so file rotation
+    is globally exact every ``batch_size`` rows (reference-equivalent; use
+    for small exports only). Otherwise task parallelism stays: each task
+    rotates at ``batch_size``, so files are ≤ batch_size rows (acceptable
+    drift documented in SURVEY.md §3 Q3).
     """
-    if exact_rotation is None:
-        exact_rotation = batch.exact_rotation
     parsed = urlparse(batch.root if "://" in batch.root else f"file://{batch.root}")
-    sync_id = f"{tap_name}--{spec.name}-{_uuid.uuid4()}"
+    sync_id = f"{TAP_NAME}--{spec.name}-{_uuid.uuid4()}"
     out_dir = os.path.join(batch.root, sync_id)
 
     # reference contract is gzip (client.py:185-245); the config may opt
@@ -134,7 +129,7 @@ def write_batch_files(
     ext = {"gzip": "gz", "zstd": "zst", "bzip2": "bz2", "none": ""}.get(
         codec, codec
     )
-    if exact_rotation:
+    if batch.exact_rotation:
         writer = df.coalesce(1)
     else:
         # a LARGE extract that arrives in few splits (single giant parquet

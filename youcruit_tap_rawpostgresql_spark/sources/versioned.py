@@ -329,22 +329,16 @@ def prune_files(
     ``column ∈ [lo, hi]`` using manifest stats — the data-skipping core.
     Bounds are JSON-normalized like the stored stats (timestamps compare
     as ISO strings)."""
-    return prune_files_bounds(root, version, {column: (lo, hi)})
+    return _split_files(_read_manifest(root, version), {column: (lo, hi)})
 
 
-def prune_files_bounds(
-    root: str, version: int, bounds: dict
-) -> tuple[list[str], list[str]]:
+def _split_files(man: dict, bounds: dict) -> tuple[list[str], list[str]]:
     """Multi-column prune: a file is DISJOINT (prunable) if ANY bounded
     column's stats miss its [lo, hi] — sound for composite keys because a
     row matching a composite key matches every key column individually,
     so per-column disjointness proves the file holds no matching row.
     ``bounds`` maps column → (lo, hi); columns without stats in a file
     conservatively count as overlapping."""
-    return _split_files(_read_manifest(root, version), bounds)
-
-
-def _split_files(man: dict, bounds: dict) -> tuple[list[str], list[str]]:
     stats = man.get("stats", {})
     norm = {c: (_json_stat(lo), _json_stat(hi)) for c, (lo, hi) in bounds.items()}
     hit, miss = [], []
@@ -473,7 +467,7 @@ def upsert_snapshot(
 def _base_stats_columns(man: dict, keys: list[str]) -> list[str]:
     """Stats columns to record on a rewrite: the base manifest's tracked
     set ∪ the operation keys — rewriting files must never silently drop
-    another column's data-skipping index (same guard as compact_version)."""
+    another column's data-skipping index."""
     cols: set[str] = set(keys)
     for st in man.get("stats", {}).values():
         cols.update(c for c, v in st.items() if v is not None)
@@ -698,10 +692,7 @@ def compact_version(
     if stats_columns is None:
         # preserve the table's data-skipping index by default: compacting
         # away the stats would silently un-prune every later read/upsert
-        cols: set[str] = set()
-        for st in man.get("stats", {}).values():
-            cols.update(c for c, v in st.items() if v is not None)
-        stats_columns = sorted(cols) or None
+        stats_columns = _base_stats_columns(man, []) or None
     total_bytes = sum(os.path.getsize(f) for f in files)
     n_out = max(1, round(total_bytes / target_file_bytes))
     df = _scan(spark, man, files).coalesce(n_out)

@@ -5,16 +5,24 @@ per selected stream, resolve bookmark → execute SQL with bound params →
 conform records → stream maps → flattening → emit messages or batch files →
 advance state. Here the same stages compose as DataFrame transforms, and
 "execute" is ``spark.sql`` over registered views (or a JDBC source when the
-stream config names one).
+stream config names one). Every target — RECORD or BATCH messages, a
+versioned table, a JDBC table — runs through one extract → deliver →
+bookmark scaffold, ``SparkTap._sync``, whose docstring states the
+consistency invariants.
 """
 
 from __future__ import annotations
 
+import json
+import logging
 import sys
+import time
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from youcruit_tap_rawpostgresql_spark.operators.conform import conform
 from youcruit_tap_rawpostgresql_spark.operators.flatten import flatten_struct_columns
@@ -35,6 +43,8 @@ from youcruit_tap_rawpostgresql_spark.sink import (
 )
 from youcruit_tap_rawpostgresql_spark.spec import StreamSpec, TapConfig
 from youcruit_tap_rawpostgresql_spark.state import StateStore
+
+logger = logging.getLogger(__name__)
 
 
 @dataclass
@@ -155,27 +165,14 @@ class SparkTap:
             changes["replication_key"] = md["replication-key"]
         return dataclasses.replace(spec, **changes) if changes else spec
 
-    def _prepare(
-        self,
-        spec: StreamSpec,
-        premap_wrap: Callable[[DataFrame], DataFrame] | None = None,
-    ) -> tuple[DataFrame, DataFrame, Any]:
-        """Returns (mapped_df, conformed_premap_df, bookmark).
-
-        ``premap_wrap`` (optional) is applied to the conformed pre-map
-        frame before stream maps/flattening derive from it — the hook
-        ``sync_stream`` uses to attach an ``observe()`` node so the
-        bookmark aggregate rides the write/collect job instead of running
-        its own (or, over the RECORD budget, to persist the snapshot).
-
-        The bookmark aggregate runs on the PRE-map conformed frame — the
-        Singer SDK increments state from the unmapped record, so a map
-        that masks/renames/drops the replication key cannot corrupt the
-        bookmark. When the SQL has no ``:rep_key_val`` marker, the
-        incremental predicate applies as a DataFrame filter instead
-        (operators/incremental.py path b) — otherwise a replication-key
-        stream without the marker would silently re-emit the full table
-        every sync while still advancing state."""
+    def _extract(self, spec: StreamSpec) -> tuple[DataFrame, Any]:
+        """Returns (conformed_df, starting_bookmark): the stream SQL (or
+        JDBC query) with the bookmark bound, conformed. When the SQL has
+        no ``:rep_key_val`` marker, the incremental predicate applies as a
+        DataFrame filter instead (operators/incremental.py path b) —
+        otherwise a replication-key stream without the marker would
+        silently re-emit the full table every sync while still advancing
+        state."""
         bookmark = (
             resolve_starting_bookmark(spec, self.state)
             if spec.replication_key
@@ -197,10 +194,11 @@ class SparkTap:
         df = conform(df, spec)
         if spec.replication_key and bookmark is not None and not uses_marker:
             df = apply_replication_filter(df, spec, bookmark)
-        premap = df
-        if premap_wrap is not None:
-            premap = premap_wrap(premap)
-            df = premap
+        return df, bookmark
+
+    def _map(self, spec: StreamSpec, df: DataFrame) -> DataFrame:
+        """Stream maps, then flattening; ``df`` itself when neither
+        applies."""
         map_cfg = self.config.stream_maps.get(spec.name)
         if map_cfg:
             df = apply_stream_map(
@@ -208,7 +206,12 @@ class SparkTap:
             )
         if self.config.flattening_enabled:
             df = flatten_struct_columns(df, self.config.flattening_max_depth)
-        return df, premap, bookmark
+        return df
+
+    def _prepare(self, spec: StreamSpec) -> tuple[DataFrame, DataFrame, Any]:
+        """Returns (mapped_df, conformed_premap_df, bookmark)."""
+        premap, bookmark = self._extract(spec)
+        return self._map(spec, premap), premap, bookmark
 
     def _run_jdbc_stream(
         self, spec: StreamSpec, params: dict[str, Any] | None
@@ -238,130 +241,135 @@ class SparkTap:
         partitioning = dict(spec.jdbc_partition or {})
         return read_jdbc_stream(self.spark, self.config.jdbc, sql, **partitioning)
 
-    def sync_stream(self, spec: StreamSpec, batch_mode: bool = False) -> SyncResult:
-        """Sync one stream: SCHEMA, then RECORD messages or BATCH
-        manifests, then STATE.
+    def _sync(
+        self,
+        spec: StreamSpec,
+        batch: bool = False,
+        commit: Callable[[DataFrame], None] | None = None,
+    ) -> SyncResult:
+        """Extract → deliver → bookmark for every target: RECORD messages,
+        BATCH files (``batch``), or a ``commit`` of the slice into a table
+        (the versioned and JDBC targets). The consistency invariants live
+        here, once:
 
-        Both outputs follow one observe-then-write pattern: the bookmark
-        ``max`` is observed (``DataFrame.observe``) on the PRE-map frame
-        (Singer parity: maps cannot corrupt state) and rides the ONE action
-        that writes the records, so the bookmark comes from the same
-        execution that produced them — by construction, also for a live
-        (JDBC) source that could return different rows on re-execution.
-        Invariant: an ``Observation`` reports only the FIRST action on the
-        observed frame, so nothing may run an action on ``df`` before the
-        write/collect.
+        - The bookmark is the replication key's ``max`` over the PRE-map
+          frame (Singer parity: a map that masks, renames or drops the key
+          cannot corrupt state), taken from the same execution the
+          delivery reads. So it never passes a row that was not emitted or
+          committed, also for a live (JDBC) source that returns different
+          rows on re-execution. The delivery reads the extract one of
+          three ways:
 
-        The RECORD output collects the frame to the driver in one Arrow
-        action only when the optimizer's size estimate of the pre-map frame
-        fits ``sink.RECORD_COLLECT_BUDGET``. Otherwise rows stream one
-        partition at a time (``toLocalIterator``, which never completes an
-        ``Observation``) and the bookmark is aggregated over a persisted
-        snapshot that also feeds the emission. A JDBC relation reports
-        ``spark.sql.defaultSizeInBytes``, so live JDBC streams take that
-        path. The estimate ignores filter selectivity, so a small delta
-        over a very large table takes it as well."""
-        import json as _json
-        import logging
-        import time as _time
-
-        from pyspark.sql import Observation
-        from pyspark.sql import functions as F
-        from pyspark.storagelevel import StorageLevel
-
-        t0 = _time.perf_counter()
-        manifests: list[BatchManifest] = []
+          - observe (BATCH, and RECORD whose pre-map size estimate fits
+            ``sink.RECORD_COLLECT_BUDGET``): the bookmark is an
+            ``Observation`` on the delivery's one action. An
+            ``Observation`` reports only the FIRST action on the observed
+            frame, so nothing may run an action on it before the delivery;
+          - persist (commits, and keyed RECORD over the budget, whose
+            ``toLocalIterator`` never completes an ``Observation``): ONE
+            aggregate over the persisted extract gives the count and the
+            bookmark while materializing it, and the delivery reads the
+            same snapshot. A JDBC relation reports
+            ``spark.sql.defaultSizeInBytes``, so live RECORD streams take
+            this path; the estimate ignores filter selectivity, so a small
+            delta over a very large table does too;
+          - stream (keyless RECORD over the budget): rows stream one
+            partition at a time with no snapshot; there is no bookmark.
+        - ``record_count`` counts the POST-map frame (what was delivered;
+          a filtering map must not overstate it): the emitted lines, the
+          BATCH write's observed count, or for a commit the aggregate's
+          count when no map changed the frame, else a ``count()`` served
+          from the snapshot.
+        - The bookmark is stored under ``_state_lock`` only AFTER the
+          delivery succeeds, followed by the STATE line (Singer outputs) or
+          a ``StateStore.flush`` (commits: a keyless append is not
+          idempotent, so losing an in-memory advance would re-append the
+          slice). A failed delivery leaves state untouched, and the next
+          sync re-extracts the same slice.
+        - ``record_count`` and ``sync_duration`` go out as Singer
+          SDK-style METRIC lines on the logger, never stdout (the message
+          stream must stay parseable)."""
+        t0 = time.perf_counter()
         rk = spec.replication_key
-        obs_bm = Observation() if rk else None
-        persisted = None
-        new_bm = None
-
-        def observe_bookmark(p: DataFrame) -> DataFrame:
-            return p if obs_bm is None else p.observe(obs_bm, bookmark_max(p, rk))
-
-        if batch_mode and self.config.batch:
-            # record count and bookmark ride the write job as observed
-            # metrics — no second count() job, no persist; the count is
-            # observed on the post-map frame (what was actually written)
-            obs_n = Observation()
-            df, _premap, _ = self._prepare(spec, premap_wrap=observe_bookmark)
-            emit_schema_message(spec, self.write)
-            manifests = write_batch_files(
-                df.observe(obs_n, F.count(F.lit(1)).alias("n")),
-                spec,
-                self.config.batch,
-            )
-            for m in manifests:
-                self.write(
-                    _json.dumps(m.to_message(spec.fully_qualified_name)) + "\n"
-                )
-            n = obs_n.get["n"]
-        else:
-            collect = True
-
-            def wrap(p: DataFrame) -> DataFrame:
-                nonlocal collect, persisted
-                collect = fits_record_budget(p)
-                if collect:
-                    return observe_bookmark(p)
+        premap, _ = self._extract(spec)
+        observe = commit is None and (batch or fits_record_budget(premap))
+        persist = not observe and (commit is not None or rk is not None)
+        obs_bm = row = None
+        manifests: list[BatchManifest] = []
+        if observe and rk:
+            obs_bm = Observation()
+            premap = premap.observe(obs_bm, bookmark_max(premap, rk))
+        elif persist:
+            premap = premap.persist(StorageLevel.MEMORY_AND_DISK)
+        try:
+            if persist:
+                aggs = [F.count(F.lit(1)).alias("n")]
                 if rk:
-                    # over budget: one snapshot feeds the streamed emission
-                    # AND the bookmark aggregate — without it, a live source
-                    # re-executes for the max() and can advance the bookmark
-                    # past rows never emitted (data loss on the next sync).
-                    # The mapped frame derives from this plan, so the cache
-                    # serves both via plan match.
-                    persisted = p.persist(StorageLevel.MEMORY_AND_DISK)
-                return p
-
-            try:
-                df, _premap, _ = self._prepare(spec, premap_wrap=wrap)
+                    aggs.append(bookmark_max(premap, rk))
+                row = premap.agg(*aggs).first()
+            # maps derive from the observed or persisted frame, so the
+            # delivery reads the extract the bookmark comes from
+            df = self._map(spec, premap)
+            if commit is not None:
+                n = row["n"] if df is premap else df.count()
+                commit(df)
+            elif batch:
+                obs_n = Observation()
                 emit_schema_message(spec, self.write)
-                n = emit_record_messages(df, spec, self.write, collect=collect)
-                if persisted is not None:
-                    new_bm = persisted.agg(bookmark_max(persisted, rk)).first()["mx"]
-            finally:
-                if persisted is not None:
-                    persisted.unpersist()
-        if obs_bm is not None and persisted is None:
+                manifests = write_batch_files(
+                    df.observe(obs_n, F.count(F.lit(1)).alias("n")),
+                    spec,
+                    self.config.batch,
+                )
+                for m in manifests:
+                    self.write(
+                        json.dumps(m.to_message(spec.fully_qualified_name)) + "\n"
+                    )
+                n = obs_n.get["n"]
+            else:
+                emit_schema_message(spec, self.write)
+                n = emit_record_messages(df, spec, self.write, collect=observe)
+        finally:
+            if persist:
+                premap.unpersist()
+        if obs_bm is not None:
             new_bm = obs_bm.get["mx"]
+        else:
+            new_bm = row["mx"] if persist and rk else None
         # only the dict mutation and the consistent STATE snapshot+write
         # serialize; the Spark jobs above run outside the lock (parallel
         # streams keep their jobs concurrent)
         with self._state_lock:
             if new_bm is not None:
-                self.state.set_bookmark(
-                    spec.fully_qualified_name, spec.replication_key, new_bm
-                )
+                self.state.set_bookmark(spec.fully_qualified_name, rk, new_bm)
                 new_bm = self.state.get_bookmark(spec.fully_qualified_name)
-            emit_state_message(self.state.to_dict(), self.write)
-        # Singer SDK-style METRIC lines on the logger (never stdout — the
-        # message stream must stay parseable): record counter + sync timer
-        logger = logging.getLogger(__name__)
+            if commit is None:
+                emit_state_message(self.state.to_dict(), self.write)
+            else:
+                self.state.flush()
         tags = {"stream": spec.fully_qualified_name}
-        logger.info(
-            "METRIC: %s",
-            _json.dumps(
-                {"type": "counter", "metric": "record_count", "value": n, "tags": tags}
-            ),
-        )
-        logger.info(
-            "METRIC: %s",
-            _json.dumps(
-                {
-                    "type": "timer",
-                    "metric": "sync_duration",
-                    "value": round(_time.perf_counter() - t0, 4),
-                    "tags": tags,
-                }
-            ),
-        )
+        for kind, metric, value in (
+            ("counter", "record_count", n),
+            ("timer", "sync_duration", round(time.perf_counter() - t0, 4)),
+        ):
+            logger.info(
+                "METRIC: %s",
+                json.dumps(
+                    {"type": kind, "metric": metric, "value": value, "tags": tags}
+                ),
+            )
         return SyncResult(
             stream=spec.fully_qualified_name,
             record_count=n,
             new_bookmark=new_bm,
             manifests=manifests,
         )
+
+    def sync_stream(self, spec: StreamSpec, batch_mode: bool = False) -> SyncResult:
+        """Sync one stream: SCHEMA, then RECORD messages or (``batch_mode``
+        with a batch config) BATCH manifests, then STATE. Consistency
+        invariants: ``_sync``."""
+        return self._sync(spec, batch=bool(batch_mode and self.config.batch))
 
     def sync_all(
         self, batch_mode: bool = False, parallel: int = 1
@@ -409,38 +417,24 @@ class SparkTap:
         self.state.flush()
         return results
 
-
     def sync_stream_to_versioned(self, spec: StreamSpec, root: str) -> SyncResult:
         """Sync one stream into a versioned snapshot table
         (``sources/versioned.py``) — the warehouse-target mode: the first
         sync commits a full snapshot; each later sync commits its
         incremental slice as a statistics-PRUNED upsert on the key
         properties — single or composite, Singer's ``key_properties`` is
-        a list (reference tap.py:92-99) — (or an append when the stream
-        declares no keys), so the
-        current version always equals source state for the synced key
-        range and every prior sync stays time-travel readable. The
-        extract is persisted for the duration: ONE aggregate gives the
-        record count and the bookmark while materializing it, and the
-        commit reads the same snapshot — a live (JDBC) source
-        re-executing between them could otherwise advance the bookmark
-        past rows never committed (permanent data loss), the same hazard
-        sync_stream guards against with one observed action (or a
-        persist, over its RECORD budget).
-        The bookmark is written only AFTER the commit succeeds — a failed
-        commit leaves state untouched and the next sync re-extracts the
-        same slice (at-least-once extract, exactly-once visible state: the
-        keyed upsert is idempotent).
-
-        ``record_count`` is the number of records synced THIS run (the
-        slice), matching sync_stream's semantics — never a full-table
-        count."""
+        a list (reference tap.py:92-99) — or an append when the stream
+        declares no keys. The current version always equals source state
+        for the synced key range, and every prior sync stays time-travel
+        readable. The keyed upsert is idempotent, so a re-run after a
+        failed commit converges (at-least-once extract, exactly-once
+        visible state). ``record_count`` is the slice synced THIS run,
+        never a full-table count. Consistency invariants: ``_sync``."""
         from youcruit_tap_rawpostgresql_spark.sources import versioned
 
         def commit(df: DataFrame) -> None:
-            # Singer key_properties is a LIST (reference tap.py:92-99) —
             # composite keys upsert on all columns, with per-column
-            # statistics pruning (round-8 judge directive 4)
+            # statistics pruning
             stats_cols = spec.key_properties or None
             if versioned.current_version(root) is None:
                 versioned.commit_snapshot(
@@ -459,68 +453,7 @@ class SparkTap:
                     df, root, mode="append", op="incremental-append"
                 )
 
-        # the keyed upsert is idempotent, so deferring the state flush to
-        # the caller (CLI flushes per stream) cannot duplicate rows
-        return self._sync_snapshot_to_target(spec, commit, flush_state=False)
-
-    def _sync_snapshot_to_target(
-        self,
-        spec: StreamSpec,
-        commit: Callable[[DataFrame], None],
-        flush_state: bool,
-    ) -> SyncResult:
-        """Shared extract→commit→bookmark scaffold for snapshot-style
-        targets (versioned table, JDBC warehouse table). The consistency
-        invariants live HERE, once:
-
-        - the extract is persisted, and ONE aggregate over it gives the
-          count and the bookmark while materializing it, so the commit,
-          the record count and the bookmark all read ONE snapshot — a
-          live (JDBC) source re-executing between them could otherwise
-          advance the bookmark past rows never committed;
-        - ``record_count`` is the POST-map frame (what the commit writes;
-          a filtering stream map must not overstate it) — the aggregate's
-          count when no map or flattening changed the frame, else a
-          ``count()`` served from the cached snapshot, not a second
-          extract;
-        - the bookmark aggregate runs on the PRE-map frame (Singer
-          parity: maps cannot corrupt state);
-        - the bookmark is stored only AFTER the commit succeeds — a
-          failed commit leaves state untouched and the next sync
-          re-extracts the same slice (at-least-once extract);
-        - ``flush_state=True`` additionally persists the state store
-          immediately — required when the commit is NON-idempotent
-          (plain JDBC append): losing an in-memory advance would
-          re-append the same slice on the next run."""
-        from pyspark.sql import functions as F
-        from pyspark.storagelevel import StorageLevel
-
-        rk = spec.replication_key
-        df, premap, _ = self._prepare(spec)
-        persisted = premap.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            aggs = [F.count(F.lit(1)).alias("n")]
-            if rk:
-                aggs.append(bookmark_max(persisted, rk))
-            # materializes the snapshot all paths read
-            row = persisted.agg(*aggs).first()
-            n = row["n"] if df is persisted else df.count()
-            commit(df)
-        finally:
-            persisted.unpersist()
-        new_bm = None
-        if rk and row["mx"] is not None:
-            with self._state_lock:
-                self.state.set_bookmark(spec.fully_qualified_name, rk, row["mx"])
-                new_bm = self.state.get_bookmark(spec.fully_qualified_name)
-                if flush_state:
-                    self.state.flush()
-        return SyncResult(
-            stream=spec.fully_qualified_name,
-            record_count=n,
-            new_bookmark=new_bm,
-            manifests=[],
-        )
+        return self._sync(spec, commit=commit)
 
     def sync_stream_to_jdbc(
         self,
@@ -541,13 +474,11 @@ class SparkTap:
         belong to the versioned-table target (``sync_stream_to_versioned``)
         — plain JDBC has no engine-portable MERGE.
 
-        Consistency discipline lives in ``_sync_snapshot_to_target``;
-        because a plain JDBC append is NOT idempotent, the bookmark
-        advance is flushed to the state store immediately after the write
-        (flush_state=True) — a crash between write and flush is the only
-        remaining at-least-once window, and a re-run after a mid-write
-        failure can duplicate; exactly-once needs the idempotent targets
-        (versioned upsert / batch manifests)."""
+        A plain JDBC append is NOT idempotent: a crash between the write
+        and the state flush that follows it, or a re-run after a mid-write
+        failure, can duplicate the slice; exactly-once needs the
+        idempotent targets (versioned upsert / batch manifests).
+        Consistency invariants: ``_sync``."""
         import re as _re
 
         from youcruit_tap_rawpostgresql_spark.sources.jdbc import jdbc_url
@@ -574,4 +505,4 @@ class SparkTap:
                 )
             writer.save()
 
-        return self._sync_snapshot_to_target(spec, commit, flush_state=True)
+        return self._sync(spec, commit=commit)
