@@ -25,8 +25,33 @@ from __future__ import annotations
 import json
 import os
 import sys
+import threading
 import time
 import traceback
+
+# seconds to wait for spark.stop() before the result line prints anyway
+STOP_TIMEOUT_S = 60.0
+
+
+def _stop_bounded(spark) -> None:
+    """``spark.stop()``, waited for at most ``STOP_TIMEOUT_S``; a failure
+    or a hang is reported on stderr, never raised."""
+    failure: list[str] = []
+
+    def stop() -> None:
+        try:
+            spark.stop()
+        except Exception:  # noqa: BLE001 — the result line still prints
+            failure.append(traceback.format_exc())
+
+    worker = threading.Thread(target=stop, name="spark-stop", daemon=True)
+    worker.start()
+    worker.join(STOP_TIMEOUT_S)
+    if worker.is_alive():
+        print(f"spark.stop() still running after {STOP_TIMEOUT_S}s", file=sys.stderr)
+    elif failure:
+        print("spark.stop() failed:", file=sys.stderr)
+        sys.stderr.write(failure[0])
 
 
 def main() -> None:
@@ -103,11 +128,7 @@ def main() -> None:
     # stdout line with nothing after it (the r12 driver capture lost the
     # line to truncation; nothing this process can do about a 2000-char
     # tail, but it can guarantee no trailing output displaces the line)
-    try:
-        spark.stop()
-    except Exception:  # noqa: BLE001 — the result line still prints
-        print("spark.stop() failed:", file=sys.stderr)
-        traceback.print_exc()
+    _stop_bounded(spark)
     print(json.dumps(out), flush=True)
 
 

@@ -19,3 +19,31 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def jobs_in(spark):
+    """``jobs_in(fn)``: the number of Spark jobs ``fn()`` starts on this
+    thread. A marker job under a second job group follows ``fn``; listener
+    events arrive in order, so once the tracker lists the marker it lists
+    every job ``fn`` started."""
+    import time
+    import uuid
+
+    def count(fn) -> int:
+        sc = spark.sparkContext
+        group, marker = (f"{k}-{uuid.uuid4().hex}" for k in ("counted", "marker"))
+        try:
+            sc.setJobGroup(group, "counted")
+            fn()
+            sc.setJobGroup(marker, "marker")
+            spark.range(1).collect()
+        finally:
+            sc._jsc.clearJobGroup()
+        deadline = time.monotonic() + 30
+        while not sc.statusTracker().getJobIdsForGroup(marker):
+            assert time.monotonic() < deadline, "the marker job never showed"
+            time.sleep(0.05)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

@@ -22,7 +22,7 @@ from pyspark.sql.window import Window as W
 
 from youcruit_tap_rawpostgresql_spark.functions.vectors import cosine_pairs
 from youcruit_tap_rawpostgresql_spark.querybank.helpers import EMB_DIM as _DIM
-from youcruit_tap_rawpostgresql_spark.querybank.helpers import persist_scoped
+from youcruit_tap_rawpostgresql_spark.querybank.helpers import local_frame, persist_scoped
 from youcruit_tap_rawpostgresql_spark.querybank.registry import register, tables
 
 _N_PLANES = 6
@@ -1814,7 +1814,7 @@ def sim_ann_ivf_pruned_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     # silently recomputed the ranking kernel on every scan.
     rows = out.collect()
     shutil.rmtree(out_root, ignore_errors=True)
-    return spark.createDataFrame(rows, out.schema)
+    return local_frame(spark, rows, out.schema)
 
 
 def exact_cosine_topk(

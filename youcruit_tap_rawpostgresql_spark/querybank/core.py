@@ -19,6 +19,7 @@ from youcruit_tap_rawpostgresql_spark.querybank.helpers import (
     davg,
     dsum,
     iso_date,
+    local_frame,
     o_davg,
     o_dsum,
     o_iso_date,
@@ -1115,6 +1116,6 @@ def join_null_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     plain = c.join(s, c["nk"] == s["nk"]).count()
     nullsafe = c.join(s, c["nk"].eqNullSafe(s["nk"])).count()
-    return spark.createDataFrame(
-        [(plain, nullsafe)], "n_plain_eq bigint, n_null_safe bigint"
+    return local_frame(
+        spark, [(plain, nullsafe)], "n_plain_eq bigint, n_null_safe bigint"
     )

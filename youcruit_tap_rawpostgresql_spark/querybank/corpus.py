@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from youcruit_tap_rawpostgresql_spark.querybank.helpers import local_frame
 from youcruit_tap_rawpostgresql_spark.querybank.llm import O_FINGERPRINT, O_TOKS
 from youcruit_tap_rawpostgresql_spark.querybank.registry import register, tables
 
@@ -517,7 +518,7 @@ def dedup_cascade_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         s1.unpersist(blocking=False)
         s2.unpersist(blocking=False)
-    return spark.createDataFrame(rows, report.schema)
+    return local_frame(spark, rows, report.schema)
 
 
 @register(
@@ -662,7 +663,7 @@ def pipeline_resumable_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         rows = report.collect()
-        return spark.createDataFrame(rows, report.schema)
+        return local_frame(spark, rows, report.schema)
     finally:
         if cleanup_local:
             shutil.rmtree(cleanup_local, ignore_errors=True)

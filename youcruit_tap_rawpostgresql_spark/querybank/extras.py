@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from youcruit_tap_rawpostgresql_spark.querybank.helpers import d, iso_ts
+from youcruit_tap_rawpostgresql_spark.querybank.helpers import d, iso_ts, local_frame
 from youcruit_tap_rawpostgresql_spark.querybank.registry import register, tables
 
 # ---------------------------------------------------------------------------
@@ -687,7 +687,7 @@ def stream_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = result.collect()
     shutil.rmtree(target, ignore_errors=True)
     shutil.rmtree(target + "_chk", ignore_errors=True)
-    return spark.createDataFrame(rows, result.schema)
+    return local_frame(spark, rows, result.schema)
 
 
 @register(

@@ -2,8 +2,11 @@
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+import datetime as _dt
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 # 12,2 (not 18,2): keeps chained decimal products within both engines'
 # 38-digit cap so no precision-loss rounding ever kicks in:
@@ -27,6 +30,38 @@ def davg(col, alias: str) -> Column:
     """Exact-sum / count average: one IEEE division, identical across engines."""
     c = F.col(col) if isinstance(col, str) else col
     return (F.sum(d(c)).cast("double") / F.count(c)).alias(alias)
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A small driver-side result (``rows``: tuples or Rows in field order)
+    as a DataFrame with the flat ``schema`` (a StructType or DDL string),
+    shipped to the JVM as an Arrow local relation.
+    ``spark.createDataFrame(<list>)`` instead runs a Python-RDD job on its
+    own worker pool, which costs seconds on the first call in a process.
+    TIMESTAMP values may be naive datetimes in the driver's zone, as
+    ``collect()`` returns them, or aware ones: both keep their instant under
+    any driver ``TZ``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T._parse_datatype_string(schema)
+    nested = [
+        f.name
+        for f in schema.fields
+        if isinstance(f.dataType, (T.ArrayType, T.MapType, T.StructType))
+    ]
+    if nested:
+        raise ValueError(f"local_frame: nested columns {nested} are not supported")
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    arrays = []
+    for col, f, af in zip(columns, schema.fields, arrow_schema):
+        if isinstance(f.dataType, T.TimestampType):
+            col = [None if v is None else v.astimezone(_dt.timezone.utc) for v in col]
+        arrays.append(pa.array(col, type=af.type))
+    table = pa.Table.from_arrays(arrays, schema=arrow_schema)
+    return spark.createDataFrame(table, schema)
 
 
 def iso_ts(col, alias: str | None = None) -> Column:

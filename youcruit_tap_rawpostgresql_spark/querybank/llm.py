@@ -32,6 +32,7 @@ from youcruit_tap_rawpostgresql_spark.functions.text_funcs import (
     word_shingles,
 )
 from youcruit_tap_rawpostgresql_spark.functions.vectors import cosine_pairs
+from youcruit_tap_rawpostgresql_spark.querybank.helpers import local_frame
 from youcruit_tap_rawpostgresql_spark.querybank.registry import register, tables
 
 # ---------------------------------------------------------------------------
@@ -874,7 +875,7 @@ def stream_minhash_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the report is one row per quarantined batch doc (dup-rate
         # bounded) — materialize it so the sink dir can be removed
         rows = report.collect()
-        return spark.createDataFrame(rows, report.schema)
+        return local_frame(spark, rows, report.schema)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from youcruit_tap_rawpostgresql_spark.querybank.helpers import d, o_dsum
+from youcruit_tap_rawpostgresql_spark.querybank.helpers import d, local_frame, o_dsum
 from youcruit_tap_rawpostgresql_spark.querybank.registry import register, tables
 
 
@@ -353,7 +353,8 @@ def kmeans_embed_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
                 cents[cid] = [newc[cid][p] for p in range(len(cents[cid]))]
     # the cache only serves the in-loop collects; the result is local
     q.unpersist()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(cid, sizes[cid], sum(cents[cid])) for cid in sorted(sizes)],
         "cluster_id bigint, n_members bigint, centroid_sum bigint",
     )
@@ -627,8 +628,8 @@ def embed_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
         u = [_tdiv(w[p] * _PI_ONE, m) for p in range(dim)]
     q.unpersist()
     # oracle positions are 1-based (generate_subscripts)
-    return spark.createDataFrame(
-        [(p + 1, c) for p, c in enumerate(u)], "pos int, component bigint"
+    return local_frame(
+        spark, [(p + 1, c) for p, c in enumerate(u)], "pos int, component bigint"
     )
 
 

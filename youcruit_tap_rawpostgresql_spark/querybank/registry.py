@@ -32,26 +32,10 @@ class QueryCase:
 
 REGISTRY: dict[str, QueryCase] = {}
 
-# cache of (id(spark), sf_dir) -> {table: DataFrame} so 50+ queries don't
-# re-read parquet footers over and over during a correctness sweep
-_TABLE_CACHE: dict[tuple[int, str], dict[str, DataFrame]] = {}
-# temp views are session-global and last-writer-wins, so when one session
-# alternates scale factors the views must be re-registered even though the
-# per-SF DataFrames are cached — otherwise spark.sql()-based queries read
-# the OTHER scale factor's views while DataFrame-based queries read the
-# right data (caught by a cross-SF test run)
-_ACTIVE_SF: dict[int, str] = {}
-
-
 def tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    key = (id(spark), sf_dir)
-    if key not in _TABLE_CACHE:
-        _TABLE_CACHE[key] = register_testdata(spark, sf_dir)
-    elif _ACTIVE_SF.get(id(spark)) != sf_dir:
-        for name, df in _TABLE_CACHE[key].items():
-            df.createOrReplaceTempView(name)
-    _ACTIVE_SF[id(spark)] = sf_dir
-    return _TABLE_CACHE[key]
+    """The testdata tables at ``sf_dir``, with their views pointed at them
+    (``register_testdata`` loads each table once per file snapshot)."""
+    return register_testdata(spark, sf_dir)
 
 
 def register(name: str, oracle: Optional[str] = None, headline: bool = False):

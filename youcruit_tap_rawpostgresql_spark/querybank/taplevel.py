@@ -20,7 +20,7 @@ from youcruit_tap_rawpostgresql_spark.operators.incremental import (
     resolve_starting_bookmark,
 )
 from youcruit_tap_rawpostgresql_spark.operators.maps import apply_stream_map
-from youcruit_tap_rawpostgresql_spark.querybank.helpers import iso_ts
+from youcruit_tap_rawpostgresql_spark.querybank.helpers import iso_ts, local_frame
 from youcruit_tap_rawpostgresql_spark.querybank.registry import register, tables
 from youcruit_tap_rawpostgresql_spark.spec import ColumnSpec, StreamSpec
 from youcruit_tap_rawpostgresql_spark.state import StateStore
@@ -237,8 +237,10 @@ def tap_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
                     c.name in s.key_properties,
                 )
             )
-    return spark.createDataFrame(
-        rows, "stream_id string, column_name string, json_type string, nullable boolean, is_key boolean"
+    return local_frame(
+        spark,
+        rows,
+        "stream_id string, column_name string, json_type string, nullable boolean, is_key boolean",
     )
 
 
@@ -445,7 +447,7 @@ def tap_batch_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     rows = agg.collect()
     shutil.rmtree(out_root, ignore_errors=True)
-    return spark.createDataFrame(rows, agg.schema)
+    return local_frame(spark, rows, agg.schema)
 
 
 @register(
@@ -914,7 +916,7 @@ def tap_schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rows = agg.collect()
     shutil.rmtree(out_root, ignore_errors=True)
-    return spark.createDataFrame(rows, agg.schema)
+    return local_frame(spark, rows, agg.schema)
 
 
 @register(
@@ -1016,4 +1018,4 @@ def tap_orc_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rows = agg.collect()
     shutil.rmtree(out_root, ignore_errors=True)
-    return spark.createDataFrame(rows, agg.schema)
+    return local_frame(spark, rows, agg.schema)

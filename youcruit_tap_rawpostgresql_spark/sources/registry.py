@@ -14,9 +14,14 @@ change. Views are plain metadata — registration cost is O(1) per table.
 
 from __future__ import annotations
 
+import logging
 import os
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
+
+logger = logging.getLogger(__name__)
+_footer_warned = False
 
 # Tables the driver generates (TESTDATA.md); identical schema across SFs.
 TESTDATA_TABLES: tuple[str, ...] = (
@@ -33,21 +38,51 @@ TESTDATA_TABLES: tuple[str, ...] = (
 )
 
 
+def _data_file(path: str) -> str | None:
+    """``path`` itself, or for a table directory its first data file in
+    name order (Spark skips names that start with ``_`` or ``.``); None for
+    a directory with no data file."""
+    if not os.path.isdir(path):
+        return path
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        for f in sorted(files):
+            if not f.startswith(("_", ".")):
+                return os.path.join(root, f)
+    return None
+
+
 def _nanos_timestamp_cols(path: str) -> list[str]:
     """Columns stored as parquet TIMESTAMP(NANOS) — Spark can't map them
-    natively; we read them as longs and convert."""
-    try:
-        import pyarrow.parquet as pq
-        import pyarrow as pa
+    natively; we read them as longs and convert. A table directory is
+    judged by its first data file. A footer pyarrow cannot read is warned
+    about once per process and counts as having no such column (Spark's own
+    read then reports what is wrong with it)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-        schema = pq.read_schema(path)
-        return [
-            f.name
-            for f in schema
-            if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
-        ]
-    except Exception:
+    global _footer_warned
+    data_file = _data_file(path)
+    if data_file is None:
         return []
+    try:
+        schema = pq.read_schema(data_file)
+    except (OSError, pa.ArrowException) as exc:
+        if not _footer_warned:
+            _footer_warned = True
+            logger.warning(
+                "cannot read the parquet footer of %s (%s: %s); reading it "
+                "with no TIMESTAMP(NANOS) conversion",
+                data_file,
+                type(exc).__name__,
+                exc,
+            )
+        return []
+    return [
+        f.name
+        for f in schema
+        if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
+    ]
 
 
 def normalize_timestamps(df: DataFrame) -> DataFrame:
@@ -99,6 +134,31 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return normalize_timestamps(spark.read.parquet(path))
 
 
+# session → {table path: (file listing, the loaded frame's JVM Dataset)}.
+# The Python frame is rebuilt on each hit: it references its session, which
+# would keep the weak key alive for good.
+_FRAMES: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
+    weakref.WeakKeyDictionary()
+)
+
+
+def _file_listing(path: str) -> tuple | None:
+    """(relative name, size, mtime) of every file under ``path``, or None
+    when ``path`` does not exist."""
+    if not os.path.exists(path):
+        return None
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return (("", st.st_size, st.st_mtime_ns),)
+    out = []
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            full = os.path.join(root, f)
+            st = os.stat(full)
+            out.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
+
+
 def register_testdata(
     spark: SparkSession,
     sf_dir: str,
@@ -106,7 +166,12 @@ def register_testdata(
 ) -> dict[str, DataFrame]:
     """Register each table as a temp view named after the table.
 
-    Returns the name → DataFrame mapping for direct DataFrame use.
+    Returns the name → DataFrame mapping for direct DataFrame use. A table
+    is loaded once per session and file snapshot: while the files under its
+    path (names, sizes, mtimes) are unchanged, the frame loaded before is
+    reused, so its footer-inference job does not run again; an added,
+    removed or rewritten file reloads it. The views are re-pointed on every
+    call, since temp views are session-global and last-writer-wins.
     """
     # every query funnels through here: pin the session timezone so
     # timestamp formatting/comparison matches the (TZ-naive) oracle even on
@@ -121,9 +186,18 @@ def register_testdata(
             spark.conf.set("spark.sql.shuffle.partitions", "32")
     except ValueError:
         pass  # "auto" (AQE-managed) — leave it alone
+    frames = _FRAMES.setdefault(spark, {})
     out: dict[str, DataFrame] = {}
     for name in tables:
-        df = load_table(spark, sf_dir, name)
+        path = os.path.join(sf_dir, f"{name}.parquet")
+        listing = _file_listing(path)
+        hit = frames.get(path)
+        if listing is not None and hit is not None and hit[0] == listing:
+            df = DataFrame(hit[1], spark)
+        else:
+            df = load_table(spark, sf_dir, name)
+            if listing is not None:
+                frames[path] = (listing, df._jdf)
         df.createOrReplaceTempView(name)
         out[name] = df
     return out

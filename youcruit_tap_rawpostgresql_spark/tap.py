@@ -55,6 +55,20 @@ class SyncResult:
     manifests: list[BatchManifest] = field(default_factory=list)
 
 
+@dataclass
+class _Plan:
+    """One stream's delivery, planned (``SparkTap._plan``) and not yet run
+    (``SparkTap._deliver``)."""
+
+    spec: StreamSpec
+    premap: DataFrame  # the extract; observed in "observe" mode
+    df: DataFrame  # ``premap`` after maps and flattening
+    mode: str  # "observe" | "persist" | "stream"
+    batch: bool
+    obs_bm: Observation | None
+    plan_s: float
+
+
 class SparkTap:
     """The engine's ``TapRawPostgreSQL`` equivalent.
 
@@ -249,9 +263,13 @@ class SparkTap:
     ) -> SyncResult:
         """Extract → deliver → bookmark for every target: RECORD messages,
         BATCH files (``batch``), or a ``commit`` of the slice into a table
-        (the versioned and JDBC targets). The consistency invariants live
-        here, once:
+        (the versioned and JDBC targets). It is two steps, ``_plan`` then
+        ``_deliver``. The consistency invariants live here, once:
 
+        - The plan step builds the stream's DataFrames and runs no Spark
+          job: no action, no ``persist`` (which registers a cache entry at
+          once). Everything that runs a job, writes a line or touches state
+          is in the delivery step.
         - The bookmark is the replication key's ``max`` over the PRE-map
           frame (Singer parity: a map that masks, renames or drops the key
           cannot corrupt state), taken from the same execution the
@@ -266,13 +284,13 @@ class SparkTap:
             ``Observation`` reports only the FIRST action on the observed
             frame, so nothing may run an action on it before the delivery;
           - persist (commits, and keyed RECORD over the budget, whose
-            ``toLocalIterator`` never completes an ``Observation``): ONE
-            aggregate over the persisted extract gives the count and the
-            bookmark while materializing it, and the delivery reads the
-            same snapshot. A JDBC relation reports
-            ``spark.sql.defaultSizeInBytes``, so live RECORD streams take
-            this path; the estimate ignores filter selectivity, so a small
-            delta over a very large table does too;
+            ``toLocalIterator`` never completes an ``Observation``): the
+            delivery persists the extract, and ONE aggregate over it gives
+            the count and the bookmark while materializing it; the mapped
+            frame, built on the same object, reads the same snapshot. A
+            JDBC relation reports ``spark.sql.defaultSizeInBytes``, so live
+            RECORD streams take this path; the estimate ignores filter
+            selectivity, so a small delta over a very large table does too;
           - stream (keyless RECORD over the budget): rows stream one
             partition at a time with no snapshot; there is no bookmark.
         - ``record_count`` counts the POST-map frame (what was delivered;
@@ -286,34 +304,64 @@ class SparkTap:
           idempotent, so losing an in-memory advance would re-append the
           slice). A failed delivery leaves state untouched, and the next
           sync re-extracts the same slice.
-        - ``record_count`` and ``sync_duration`` go out as Singer
-          SDK-style METRIC lines on the logger, never stdout (the message
-          stream must stay parseable)."""
+        - ``record_count`` and ``sync_duration`` (the two steps' time) go
+          out as Singer SDK-style METRIC lines on the logger, never stdout
+          (the message stream must stay parseable)."""
+        return self._deliver(
+            self._plan(spec, batch=batch, commit=commit is not None), commit
+        )
+
+    def _plan(
+        self, spec: StreamSpec, batch: bool = False, commit: bool = False
+    ) -> _Plan:
+        """The plan step of ``_sync``: the extract, the delivery mode, the
+        bookmark ``Observation`` and the maps. Runs no Spark job and
+        persists nothing, so it may run ahead of another stream's
+        delivery (``sync_all``)."""
         t0 = time.perf_counter()
         rk = spec.replication_key
         premap, _ = self._extract(spec)
-        observe = commit is None and (batch or fits_record_budget(premap))
-        persist = not observe and (commit is not None or rk is not None)
-        obs_bm = row = None
-        manifests: list[BatchManifest] = []
-        if observe and rk:
+        if not commit and (batch or fits_record_budget(premap)):
+            mode = "observe"
+        elif commit or rk is not None:
+            mode = "persist"
+        else:
+            mode = "stream"
+        obs_bm = None
+        if mode == "observe" and rk:
             obs_bm = Observation()
             premap = premap.observe(obs_bm, bookmark_max(premap, rk))
-        elif persist:
-            premap = premap.persist(StorageLevel.MEMORY_AND_DISK)
+        # maps derive from the observed or (once delivered) persisted
+        # frame, so the delivery reads the extract the bookmark comes from
+        df = self._map(spec, premap)
+        return _Plan(
+            spec, premap, df, mode, batch, obs_bm, time.perf_counter() - t0
+        )
+
+    def _deliver(
+        self, plan: _Plan, commit: Callable[[DataFrame], None] | None = None
+    ) -> SyncResult:
+        """The delivery step of ``_sync``: every Spark action, every
+        output line, the bookmark and the METRIC lines."""
+        t0 = time.perf_counter()
+        spec, premap, df = plan.spec, plan.premap, plan.df
+        rk = spec.replication_key
+        persist = plan.mode == "persist"
+        row = None
+        manifests: list[BatchManifest] = []
+        if persist:
+            # the same object the maps derive from: they read the snapshot
+            premap.persist(StorageLevel.MEMORY_AND_DISK)
         try:
             if persist:
                 aggs = [F.count(F.lit(1)).alias("n")]
                 if rk:
                     aggs.append(bookmark_max(premap, rk))
                 row = premap.agg(*aggs).first()
-            # maps derive from the observed or persisted frame, so the
-            # delivery reads the extract the bookmark comes from
-            df = self._map(spec, premap)
             if commit is not None:
                 n = row["n"] if df is premap else df.count()
                 commit(df)
-            elif batch:
+            elif plan.batch:
                 obs_n = Observation()
                 emit_schema_message(spec, self.write)
                 manifests = write_batch_files(
@@ -328,12 +376,14 @@ class SparkTap:
                 n = obs_n.get["n"]
             else:
                 emit_schema_message(spec, self.write)
-                n = emit_record_messages(df, spec, self.write, collect=observe)
+                n = emit_record_messages(
+                    df, spec, self.write, collect=plan.mode == "observe"
+                )
         finally:
             if persist:
                 premap.unpersist()
-        if obs_bm is not None:
-            new_bm = obs_bm.get["mx"]
+        if plan.obs_bm is not None:
+            new_bm = plan.obs_bm.get["mx"]
         else:
             new_bm = row["mx"] if persist and rk else None
         # only the dict mutation and the consistent STATE snapshot+write
@@ -348,9 +398,10 @@ class SparkTap:
             else:
                 self.state.flush()
         tags = {"stream": spec.fully_qualified_name}
+        duration = plan.plan_s + time.perf_counter() - t0
         for kind, metric, value in (
             ("counter", "record_count", n),
-            ("timer", "sync_duration", round(time.perf_counter() - t0, 4)),
+            ("timer", "sync_duration", round(duration, 4)),
         ):
             logger.info(
                 "METRIC: %s",
@@ -376,7 +427,22 @@ class SparkTap:
     ) -> list[SyncResult]:
         """Sync every configured stream.
 
-        ``parallel`` lifts the reference's architectural bound of one
+        With ``parallel <= 1`` the streams sync in config order, pipelined:
+        one worker thread plans stream i+1 (``_plan``: SQL translation,
+        analysis, maps; no Spark job) while the calling thread delivers
+        stream i. The calling thread runs every Spark action, writes every
+        line, sets every bookmark and emits every STATE line, in config
+        order, so the output and state are byte-identical to calling
+        ``sync_stream`` per stream, and one stream's Spark work runs at a
+        time. An error from stream i+1's plan is raised only once stream i
+        is delivered; a failed delivery waits for the plan in flight and
+        discards it, so no later stream writes a line or moves state. The
+        planner inherits the caller's local properties (job group,
+        description) and tags. A stream that shares the fully qualified
+        name, and so the bookmark, of the stream before it is planned only
+        after that stream is delivered.
+
+        ``parallel > 1`` lifts the reference's architectural bound of one
         SQLAlchemy connection syncing streams sequentially
         (``client.py:106-119``): each worker thread submits its stream's
         Spark jobs concurrently and the scheduler interleaves them across
@@ -385,16 +451,28 @@ class SparkTap:
         is emitted before its records; a line-level lock prevents torn
         writes. Results keep config order regardless of completion order.
         """
+        from concurrent.futures import ThreadPoolExecutor
+
         streams = self._effective_streams()
+        batch = bool(batch_mode and self.config.batch)
         if parallel <= 1:
-            results = [
-                self.sync_stream(s, batch_mode=batch_mode) for s in streams
-            ]
+            from pyspark import inheritable_thread_target
+
+            results = []
+            with ThreadPoolExecutor(max_workers=1) as planner:
+                plan_ahead = inheritable_thread_target(self.spark)(self._plan)
+                ahead = None  # the next stream's plan, in flight
+                for spec, nxt in zip(streams, streams[1:] + [None]):
+                    plan = ahead.result() if ahead else self._plan(spec, batch)
+                    ahead = None
+                    fqn = spec.fully_qualified_name
+                    if nxt and nxt.fully_qualified_name != fqn:
+                        ahead = planner.submit(plan_ahead, nxt, batch)
+                    results.append(self._deliver(plan))
             self.state.flush()
             return results
 
         import threading
-        from concurrent.futures import ThreadPoolExecutor
 
         lock = threading.Lock()
         inner_write = self.write
