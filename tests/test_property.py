@@ -152,6 +152,10 @@ def test_plain_spark_sql_is_fixed_point(sql):
     # exclude accidental PG constructs generated by the regex
     if re.search(r"::|->|~|\bE'|random|strpos|array_length|unnest|string_agg", s, re.I):
         return
+    # PG 16 non-decimal integer literals (0x1f, 0o17, 0b101) fold to their
+    # decimal value by design; test_pg_pinned covers that fold
+    if re.search(r"(?<![\w.])0(?:x[0-9a-f]+|o[0-7]+|b[01]+)(?![\w.])", s, re.I):
+        return
     assert translate_pg_sql(s) == s
 
 
