@@ -335,3 +335,23 @@ def test_planner_inherits_the_callers_job_group(spark, pipe_src, monkeypatch):
         sc._jsc.clearJobGroup()
     # the first stream is planned on the calling thread, the rest ahead
     assert seen == [(True, group)] + [(False, group)] * 3
+
+
+def test_pipeline_runs_outside_pinned_thread_mode(
+    spark, pipe_src, tmp_path, monkeypatch
+):
+    import pyspark
+
+    # with PYSPARK_PIN_THREAD=false pyspark returns its argument unchanged
+    monkeypatch.setattr(pyspark, "inheritable_thread_target", lambda f=None: f)
+    piped_lines: list[str] = []
+    ref_lines: list[str] = []
+    piped = _tap(spark, tmp_path / "piped.json", piped_lines)
+    ref = _tap(spark, tmp_path / "ref.json", ref_lines)
+    got = piped.sync_all()
+    want = [ref.sync_stream(s) for s in ref._effective_streams()]
+    ref.state.flush()
+    assert [(r.stream, r.record_count) for r in got] == [
+        (r.stream, r.record_count) for r in want
+    ]
+    assert piped_lines == ref_lines

@@ -2,7 +2,8 @@
 
 ``register_testdata`` reads TIMESTAMP(NANOS) columns in single-file and
 directory tables alike, loads a table once per file snapshot and re-points
-its view on every call. ``querybank.helpers.local_frame`` builds a small
+its view on every call; ``querybank.registry.tables()`` reuses the last
+registration for the same scale factor. ``querybank.helpers.local_frame`` builds a small
 driver-side result as an Arrow local relation with the values
 ``spark.createDataFrame`` gives, under any driver zone.
 """
@@ -162,3 +163,32 @@ def test_local_frame_equals_create_dataframe(spark, driver_tz, tz):
 def test_local_frame_refuses_nested_columns(spark):
     with pytest.raises(ValueError, match=r"nested columns \['m'\]"):
         local_frame(spark, [(1, None)], "id int, m map<string, timestamp>")
+
+
+def test_tables_reuses_the_last_registration(spark, sf_dir, tmp_path, monkeypatch):
+    from youcruit_tap_rawpostgresql_spark.querybank import registry as qreg
+
+    calls = []
+
+    def counted(*args, **kwargs):
+        calls.append(args[1])
+        return register_testdata(*args, **kwargs)
+
+    monkeypatch.setattr(qreg, "register_testdata", counted)
+    first = qreg.tables(spark, sf_dir)
+    n_region = first["region"].count()
+    calls.clear()
+    # a repeat call for the same scale factor registers nothing again
+    again = qreg.tables(spark, sf_dir)
+    assert calls == []
+    assert again.keys() == first.keys()
+    assert again["region"].count() == n_region
+
+    # another registration on the session moves the views; the next call
+    # points them back
+    pq.write_table(pa.table({"r_regionkey": [0]}), tmp_path / "region.parquet")
+    register_testdata(spark, str(tmp_path), tables=("region",))
+    assert spark.table("region").count() == 1
+    qreg.tables(spark, sf_dir)
+    assert calls == [sf_dir]
+    assert spark.table("region").count() == n_region

@@ -19,7 +19,10 @@ from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
-from youcruit_tap_rawpostgresql_spark.sources.registry import register_testdata
+from youcruit_tap_rawpostgresql_spark.sources.registry import (
+    register_testdata,
+    registered_testdata,
+)
 
 
 @dataclass(frozen=True)
@@ -33,9 +36,14 @@ class QueryCase:
 REGISTRY: dict[str, QueryCase] = {}
 
 def tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """The testdata tables at ``sf_dir``, with their views pointed at them
-    (``register_testdata`` loads each table once per file snapshot)."""
-    return register_testdata(spark, sf_dir)
+    """The testdata tables at ``sf_dir``, with their views pointed at them.
+
+    A query case calls this once or more, so a repeat call for the scale
+    factor registered last on ``spark`` returns those frames at no cost;
+    otherwise ``register_testdata`` re-points the views, loading only the
+    tables whose files changed."""
+    frames = registered_testdata(spark, sf_dir)
+    return frames if frames is not None else register_testdata(spark, sf_dir)
 
 
 def register(name: str, oracle: Optional[str] = None, headline: bool = False):

@@ -140,6 +140,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 _FRAMES: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
     weakref.WeakKeyDictionary()
 )
+# session → (sf_dir, tables, {name: JVM Dataset}) of its last
+# register_testdata call: the frames its views point at now
+_ACTIVE: "weakref.WeakKeyDictionary[SparkSession, tuple]" = (
+    weakref.WeakKeyDictionary()
+)
 
 
 def _file_listing(path: str) -> tuple | None:
@@ -186,6 +191,7 @@ def register_testdata(
             spark.conf.set("spark.sql.shuffle.partitions", "32")
     except ValueError:
         pass  # "auto" (AQE-managed) — leave it alone
+    _ACTIVE.pop(spark, None)  # a failed load leaves the views mixed
     frames = _FRAMES.setdefault(spark, {})
     out: dict[str, DataFrame] = {}
     for name in tables:
@@ -200,4 +206,20 @@ def register_testdata(
                 frames[path] = (listing, df._jdf)
         df.createOrReplaceTempView(name)
         out[name] = df
+    _ACTIVE[spark] = (sf_dir, tuple(tables), {n: df._jdf for n, df in out.items()})
     return out
+
+
+def registered_testdata(
+    spark: SparkSession,
+    sf_dir: str,
+    tables: tuple[str, ...] = TESTDATA_TABLES,
+) -> dict[str, DataFrame] | None:
+    """The frames of the last ``register_testdata`` call on ``spark`` if
+    it registered ``tables`` at ``sf_dir``, else None. Makes no Spark call
+    and checks no file: a view replaced or a file changed since that call
+    goes unseen."""
+    last = _ACTIVE.get(spark)
+    if last is None or last[:2] != (sf_dir, tables):
+        return None
+    return {name: DataFrame(jdf, spark) for name, jdf in last[2].items()}

@@ -460,7 +460,12 @@ class SparkTap:
 
             results = []
             with ThreadPoolExecutor(max_workers=1) as planner:
-                plan_ahead = inheritable_thread_target(self.spark)(self._plan)
+                # outside pinned-thread mode (PYSPARK_PIN_THREAD=false)
+                # pyspark returns its argument, the session, not a decorator
+                inherit = inheritable_thread_target(self.spark)
+                plan_ahead = (
+                    self._plan if inherit is self.spark else inherit(self._plan)
+                )
                 ahead = None  # the next stream's plan, in flight
                 for spec, nxt in zip(streams, streams[1:] + [None]):
                     plan = ahead.result() if ahead else self._plan(spec, batch)
