@@ -206,7 +206,9 @@ def register_testdata(
                 frames[path] = (listing, df._jdf)
         df.createOrReplaceTempView(name)
         out[name] = df
-    _ACTIVE[spark] = (sf_dir, tuple(tables), {n: df._jdf for n, df in out.items()})
+    _ACTIVE[spark] = (
+        sf_dir, tuple(tables), {n: d._jdf for n, d in out.items()}
+    )
     return out
 
 

@@ -436,9 +436,9 @@ class SparkTap:
         ``sync_stream`` per stream, and one stream's Spark work runs at a
         time. An error from stream i+1's plan is raised only once stream i
         is delivered; a failed delivery waits for the plan in flight and
-        discards it, so no later stream writes a line or moves state. The
-        planner inherits the caller's local properties (job group,
-        description) and tags. A stream that shares the fully qualified
+        discards it, so no later stream writes a line or moves state. In
+        pyspark's pinned-thread mode (the default) the planner inherits the
+        caller's local properties (job group, description) and tags. A stream that shares the fully qualified
         name, and so the bookmark, of the stream before it is planned only
         after that stream is delivered.
 
