@@ -224,7 +224,12 @@ def test_verification_doc_is_current_round():
     oracle-sweep row must cite the CURRENT registry size (round-6 judge
     directive 3: the doc sat at 'round-5 state' through round 6, so the
     round's own full-sweep evidence lived only in commit messages). The
-    current round comes from PROGRESS.jsonl (driver-written)."""
+    current round comes from the last line of PROGRESS.jsonl when that
+    gitignored progress log is present; otherwise it is the
+    highest N among the committed round records at the repo root
+    (BENCH_rN.json, CORRECTNESS_rN.json, VERIFY_rN.json,
+    OPTIMIZATION_rN.md, ...), which advance with the header at each
+    round turnover."""
     import json
     import re
     from pathlib import Path
@@ -232,18 +237,34 @@ def test_verification_doc_is_current_round():
     from youcruit_tap_rawpostgresql_spark.querybank import REGISTRY
 
     root = Path(__file__).resolve().parent.parent
-    last = [
-        json.loads(line)
-        for line in (root / "PROGRESS.jsonl").read_text().splitlines()
-        if line.strip()
-    ][-1]
-    round_n = last["round"]
+    progress = root / "PROGRESS.jsonl"
+    if progress.exists():
+        last = [
+            json.loads(line)
+            for line in progress.read_text().splitlines()
+            if line.strip()
+        ][-1]
+        round_n = last["round"]
+        source = "PROGRESS.jsonl"
+    else:
+        record = re.compile(r"[A-Z]+_r(\d+)(?:_\w+)?\.(?:json|md)")
+        rounds = [
+            int(m.group(1))
+            for p in root.iterdir()
+            if (m := record.fullmatch(p.name))
+        ]
+        assert rounds, (
+            "no PROGRESS.jsonl and no committed *_rN.json / *_rN.md round "
+            "records at the repo root — cannot tell the current round"
+        )
+        round_n = max(rounds)
+        source = "the newest committed *_rN round record"
     doc = (root / "VERIFICATION.md").read_text()
     header = doc.splitlines()[0]
     m = re.search(r"round-(\d+)", header)
     assert m, f"VERIFICATION.md header has no round marker: {header!r}"
     assert int(m.group(1)) == round_n, (
-        f"VERIFICATION.md is headed round-{m.group(1)} but the driver "
+        f"VERIFICATION.md is headed round-{m.group(1)} but {source} "
         f"says round {round_n} — regenerate it"
     )
     n = len(REGISTRY)
