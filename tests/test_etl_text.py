@@ -719,12 +719,13 @@ def test_ann_index_fused_matches_standalone(spark):
     """r14 fused index build: the one-pass (sig, cell1/cell2, codes)
     kernel must reproduce each standalone builder's output EXACTLY —
     lsh_signatures (sig per vec), ivf_rank_cells (the top-2 cell ranking,
-    via the cached view's posexplode derivation), and pq_codes_df (the
-    M-subspace code word per vec)."""
+    read back from cell1/cell2 by the posexplode the cell consumers use),
+    and pq_codes_df (the M-subspace code word per vec)."""
+    from pyspark.sql import functions as F
+
     from youcruit_tap_rawpostgresql_spark.querybank.ann import (
         ann_index_df,
         ivf_rank_cells,
-        ivf_rank_cells_cached,
         lsh_signatures,
         pq_codes_df,
     )
@@ -740,9 +741,12 @@ def test_ann_index_fused_matches_standalone(spark):
     }
     assert fused_sigs == want_sigs and len(fused_sigs) > 0
 
-    fused_rank = sorted(
-        tuple(r) for r in ivf_rank_cells_cached(spark, sfd).collect()
+    cells = (
+        idx.select("vec_id", F.posexplode(F.array("cell1", "cell2")))
+        .filter(F.col("col").isNotNull())
+        .select("vec_id", "col", (F.col("pos") + 1).cast("int"))
     )
+    fused_rank = sorted(tuple(r) for r in cells.collect())
     want_rank = sorted(tuple(r) for r in ivf_rank_cells(spark, sfd).collect())
     assert fused_rank == want_rank and len(fused_rank) > 0
 

@@ -594,6 +594,43 @@ def test_cli_jdbc_target_sync(spark, derby_url, tmp_path, tmp_path_factory):
     )
 
 
+def test_cli_jdbc_target_table_with_two_streams_is_an_error(
+    spark, tmp_path, capsys
+):
+    """--jdbc-target with an explicit jdbc_target.table and two streams
+    would load both into one table: the CLI exits with a usage error
+    before any stream syncs, so no target database, table or state file
+    exists afterwards."""
+    from youcruit_tap_rawpostgresql_spark.cli import main
+
+    tgt_db = tmp_path / "tgt"
+    stream = {
+        "sql": "SELECT id FROM range(3)",
+        "columns": [{"name": "id", "type": "int8", "nullable": False}],
+    }
+    cfg = {
+        "jdbc_target": {
+            "jdbc_url": f"jdbc:derby:{tgt_db};create=true",
+            "driver": DERBY_DRIVER,
+            "table": "ONE_TABLE",
+        },
+        "streams": [{"name": "a", **stream}, {"name": "b", **stream}],
+    }
+    cfg_path = tmp_path / "config.json"
+    cfg_path.write_text(json.dumps(cfg))
+    state_path = tmp_path / "state.json"
+    with pytest.raises(SystemExit) as exc:
+        main(
+            ["--config", str(cfg_path), "--state", str(state_path), "--jdbc-target"]
+        )
+    assert exc.value.code == 2
+    assert "config.jdbc_target.table is set but multiple streams" in (
+        capsys.readouterr().err
+    )
+    assert not tgt_db.exists()  # Derby creates the database on connect
+    assert not state_path.exists()
+
+
 def test_hash_predicate_partitions_live(spark, derby_url):
     """The hash-split parallel read executes LIVE (round-5 directive): the
     ANSI MOD form of hash_predicates runs on Derby and the N slices are

@@ -850,6 +850,64 @@ def test_cli_versioned_root_flushes_state_per_stream(spark, tmp_path):
     )
 
 
+def test_cli_versioned_root_keeps_a_legacy_table(spark, tmp_path, capsys):
+    """--versioned-root: a stream whose table exists only at the pre-FQN
+    root/<name> keeps syncing that table, with a notice on stderr, and no
+    table appears at root/<fully qualified name>."""
+    from youcruit_tap_rawpostgresql_spark.cli import main
+    from youcruit_tap_rawpostgresql_spark.sources import versioned
+
+    cfg = {
+        "streams": [
+            {
+                "name": "probe",
+                "sql": "SELECT id AS one FROM range(3)",
+                "columns": [{"name": "one", "type": "int", "nullable": False}],
+                "key_properties": ["one"],
+            }
+        ],
+    }
+    cfg_path = tmp_path / "config.json"
+    cfg_path.write_text(json.dumps(cfg))
+    vroot = tmp_path / "warehouse"
+    config = TapConfig.from_dict(cfg)
+    SparkTap(config, spark, write=lambda _line: None).sync_stream_to_versioned(
+        config.streams[0], str(vroot / "probe")
+    )
+    capsys.readouterr()
+    assert main(["--config", str(cfg_path), "--versioned-root", str(vroot)]) == 0
+    assert versioned.current_version(str(vroot / "probe")) == 1
+    assert versioned.read_version(spark, str(vroot / "probe")).count() == 3
+    assert not (vroot / "spark-public-probe").exists()
+    assert (
+        "-- spark-public-probe: using legacy versioned root "
+        f"{str(vroot / 'probe')!r} (rename it to 'spark-public-probe' to "
+        "migrate)"
+    ) in capsys.readouterr().err
+
+
+def test_cli_rejects_two_sync_targets(tmp_path, capsys):
+    """--batch, --versioned-root and --jdbc-target name the sync target:
+    any two of them are a usage error before anything runs."""
+    import pytest
+
+    from youcruit_tap_rawpostgresql_spark.cli import main
+
+    cfg_path = tmp_path / "config.json"
+    cfg_path.write_text(json.dumps({"streams": []}))
+    vroot = str(tmp_path / "warehouse")
+    for flags in (
+        ["--batch", "--versioned-root", vroot],
+        ["--jdbc-target", "--versioned-root", vroot],
+        ["--batch", "--jdbc-target", "append"],
+    ):
+        with pytest.raises(SystemExit) as exc:
+            main(["--config", str(cfg_path), *flags])
+        assert exc.value.code == 2
+        assert "not allowed with argument" in capsys.readouterr().err
+    assert not (tmp_path / "warehouse").exists()
+
+
 def test_batch_sink_non_gzip_codec_roundtrip(spark, tmp_path):
     """BatchSinkConfig.encoding_compression is honored by the writer
     (round-5: previously hard-coded gzip). lz4 write → manifest extension

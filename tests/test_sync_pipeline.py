@@ -3,10 +3,12 @@ stream i+1 while the calling thread delivers stream i.
 
 The output must not show the pipeline: the lines, the final state and the
 results equal per-stream ``sync_stream`` calls, on the Arrow, persisted and
-streamed RECORD paths, with maps and a ``__source__`` alias. Planning runs
-no Spark job and caches nothing. A failed delivery stops the sync with no
-trace of the streams after it; a failed plan surfaces only once the stream
-before it is fully out. The planner runs under the caller's job group.
+streamed RECORD paths, with maps and a ``__source__`` alias; the versioned
+tables equal per-stream ``sync_stream_to_versioned`` calls. Planning runs
+no Spark job and caches nothing. A failed delivery or commit stops the
+sync with no trace of the streams after it; a failed plan surfaces only
+once the stream before it is fully out. The planner runs under the
+caller's job group.
 """
 
 from __future__ import annotations
@@ -355,3 +357,132 @@ def test_pipeline_runs_outside_pinned_thread_mode(
         (r.stream, r.record_count) for r in want
     ]
     assert piped_lines == ref_lines
+
+
+def _versioned_specs() -> list[StreamSpec]:
+    cols = [ColumnSpec("id", "int8", nullable=False), ColumnSpec("grp", "int8")]
+    return [
+        # keyed: a snapshot, then a pruned upsert of the new ids
+        StreamSpec(
+            name="keyed",
+            sql="SELECT id, grp FROM vsync_src WHERE id > :rep_key_val",
+            columns=cols,
+            key_properties=["id"],
+            replication_key="id",
+            replication_key_value_start=0,
+        ),
+        # keyless: a snapshot, then an append of the new ids
+        StreamSpec(
+            name="appended",
+            sql="SELECT id, grp FROM vsync_src WHERE grp = 1",
+            columns=cols,
+            replication_key="id",
+            replication_key_value_start=0,
+        ),
+    ]
+
+
+def _versioned_tables(spark, base) -> dict:
+    """Every version of every table under ``base``: its sorted rows."""
+    from youcruit_tap_rawpostgresql_spark.sources import versioned
+
+    return {
+        name: [
+            sorted(tuple(r) for r in versioned.read_version(spark, root, v).collect())
+            for v in versioned.list_versions(root)
+        ]
+        for name in sorted(os.listdir(base))
+        for root in [os.path.join(base, name)]
+    }
+
+
+def test_versioned_sync_all_equals_per_stream_syncs(spark, tmp_path):
+    """``sync_all`` with versioned commits, pipelined and with two workers,
+    commits the same versions, rows and state as per-stream
+    ``sync_stream_to_versioned`` calls, over a snapshot sync and an
+    upsert (keyed) or append (keyless) sync."""
+    runs = ("ref", "piped", "parallel")
+    taps = {
+        run: SparkTap(
+            TapConfig(streams=_versioned_specs()),
+            spark,
+            state=StateStore(str(tmp_path / f"{run}.json")),
+        )
+        for run in runs
+    }
+    try:
+        for n in (5, 8):
+            src = spark.range(1, n + 1).selectExpr("id", "id % 2 AS grp")
+            src.createOrReplaceTempView("vsync_src")
+            ref = taps["ref"]
+            want = [
+                ref.sync_stream_to_versioned(
+                    s, str(tmp_path / "ref" / s.fully_qualified_name)
+                )
+                for s in ref._effective_streams()
+            ]
+            for run, parallel in (("piped", 1), ("parallel", 2)):
+                tap = taps[run]
+                got = tap.sync_all(
+                    parallel=parallel,
+                    commit=tap.versioned_commits(str(tmp_path / run)),
+                )
+                assert [(r.stream, r.record_count, r.new_bookmark) for r in got] == [
+                    (r.stream, r.record_count, r.new_bookmark) for r in want
+                ]
+    finally:
+        spark.catalog.dropTempView("vsync_src")
+
+    odd = [(1, 1), (3, 1), (5, 1)]
+    tables = _versioned_tables(spark, tmp_path / "ref")
+    assert tables == {
+        "spark-public-appended": [odd, odd + [(7, 1)]],
+        "spark-public-keyed": [
+            [(i, i % 2) for i in range(1, 6)],
+            [(i, i % 2) for i in range(1, 9)],
+        ],
+    }
+    for run in runs[1:]:
+        assert _versioned_tables(spark, tmp_path / run) == tables
+        assert (tmp_path / f"{run}.json").read_bytes() == (
+            tmp_path / "ref.json"
+        ).read_bytes()
+
+
+def test_failed_commit_stops_the_versioned_pipeline(spark, tmp_path):
+    """The first stream's commit raises while the second is being planned:
+    the second stream commits nothing and its bookmark stays put."""
+    from youcruit_tap_rawpostgresql_spark.sources import versioned
+
+    path = tmp_path / "state.json"
+    seed = StateStore(str(path))
+    seed.set_bookmark("spark-public-appended", "id", 2)
+    seed.flush()
+    before = path.read_bytes()
+    tap = SparkTap(
+        TapConfig(streams=_versioned_specs()), spark, state=StateStore(str(path))
+    )
+    commits = tap.versioned_commits(str(tmp_path / "vt"))
+
+    def commit(spec):
+        if spec.name != "keyed":
+            return commits(spec)
+
+        def fail(df):
+            raise Injected("commit failed")
+
+        return fail
+
+    spark.range(1, 6).selectExpr("id", "id % 2 AS grp").createOrReplaceTempView(
+        "vsync_src"
+    )
+    try:
+        with pytest.raises(Injected):
+            tap.sync_all(parallel=1, commit=commit)
+    finally:
+        spark.catalog.dropTempView("vsync_src")
+    appended = tmp_path / "vt" / "spark-public-appended"
+    assert versioned.current_version(str(appended)) is None
+    assert tap.state.get_bookmark("spark-public-appended", "id") == 2
+    assert tap.state.get_bookmark("spark-public-keyed") is None
+    assert path.read_bytes() == before

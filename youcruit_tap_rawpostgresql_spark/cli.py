@@ -59,6 +59,7 @@ def _config_from_env() -> dict:
 
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="tap-rawpostgresql-spark")
+    dest = p.add_mutually_exclusive_group()  # one sync target, never a silent pick
     p.add_argument(
         "--config",
         help="path to tap config JSON, or the literal 'ENV' to build the "
@@ -75,7 +76,7 @@ def main(argv: list[str] | None = None) -> int:
     )
     p.add_argument("--version", action="store_true")
     p.add_argument("--discover", action="store_true")
-    p.add_argument(
+    dest.add_argument(
         "--jdbc-target",
         metavar="MODE",
         nargs="?",
@@ -97,7 +98,7 @@ def main(argv: list[str] | None = None) -> int:
         "live-source complement of config-declared --discover",
     )
     p.add_argument("--about", action="store_true")
-    p.add_argument("--batch", action="store_true", help="emit BATCH files/messages")
+    dest.add_argument("--batch", action="store_true", help="emit BATCH files/messages")
     p.add_argument(
         "--explain",
         action="store_true",
@@ -108,7 +109,7 @@ def main(argv: list[str] | None = None) -> int:
         "--parallel",
         type=int,
         default=1,
-        help="sync up to N streams concurrently (reference is sequential)",
+        help="sync up to N streams at once, into any target (reference is sequential)",
     )
     p.add_argument(
         "--test",
@@ -116,7 +117,7 @@ def main(argv: list[str] | None = None) -> int:
         help="connection/config test (Singer SDK --test parity): resolve "
         "each stream's plan and fetch one record; no messages emitted",
     )
-    p.add_argument(
+    dest.add_argument(
         "--versioned-root",
         default=None,
         help="sync into a versioned snapshot table under this root "
@@ -217,11 +218,12 @@ def main(argv: list[str] | None = None) -> int:
                 print(f"== {spec.fully_qualified_name} ==")
                 df.explain(mode="formatted")
             return 0
+        commit = None  # Singer messages
         if args.jdbc_target is not None:
-            if config.jdbc_target is None:
+            target = config.jdbc_target
+            if target is None:
                 p.error("--jdbc-target requires a jdbc_target in the config")
-            streams_eff = list(tap._effective_streams())
-            if config.jdbc_target.get("table") and len(streams_eff) > 1:
+            if target.get("table") and len(tap._effective_streams()) > 1:
                 # an explicit table name + several streams would interleave
                 # (append) or clobber (overwrite) them all into one table
                 p.error(
@@ -229,54 +231,10 @@ def main(argv: list[str] | None = None) -> int:
                     "are selected — omit 'table' so each stream loads its "
                     "own fully-qualified-name table"
                 )
-            # each stream's sync flushes the state file after its commit
-            results = [
-                tap.sync_stream_to_jdbc(
-                    spec, config.jdbc_target, mode=args.jdbc_target
-                )
-                for spec in streams_eff
-            ]
+            commit = tap.jdbc_commits(target, mode=args.jdbc_target)
         elif args.versioned_root:
-            import os as _os
-
-            # per-stream root keyed by the FULLY QUALIFIED name: two
-            # streams named alike in different schemas/databases must not
-            # share one versioned table (they'd upsert over each other)
-            from youcruit_tap_rawpostgresql_spark.sources import versioned
-
-            results = []
-            effective = list(tap._effective_streams())
-            # the legacy (pre-FQN) fallback is only safe when the bare
-            # name is unambiguous — with two same-named streams, both
-            # would fall back onto ONE shared legacy table, which is the
-            # exact collision the FQN keying exists to prevent
-            name_counts: dict[str, int] = {}
-            for s in effective:
-                name_counts[s.name] = name_counts.get(s.name, 0) + 1
-            for spec in effective:
-                root = _os.path.join(
-                    args.versioned_root, spec.fully_qualified_name
-                )
-                legacy = _os.path.join(args.versioned_root, spec.name)
-                if (
-                    legacy != root
-                    and name_counts[spec.name] == 1
-                    and versioned.current_version(root) is None
-                    and versioned.current_version(legacy) is not None
-                ):
-                    # pre-FQN layout exists: keep syncing it rather than
-                    # silently seeding a NEW table with only the current
-                    # incremental slice and orphaning the history
-                    print(
-                        f"-- {spec.fully_qualified_name}: using legacy "
-                        f"versioned root {legacy!r} (rename it to "
-                        f"{spec.fully_qualified_name!r} to migrate)",
-                        file=sys.stderr,
-                    )
-                    root = legacy
-                results.append(tap.sync_stream_to_versioned(spec, root))
-        else:
-            results = tap.sync_all(batch_mode=args.batch, parallel=args.parallel)
+            commit = tap.versioned_commits(args.versioned_root)
+        results = tap.sync_all(args.batch, args.parallel, commit)
     except BrokenPipeError:
         # downstream (Singer target or a pager on --explain) closed the
         # pipe — exit quietly like any well-behaved pipeline stage

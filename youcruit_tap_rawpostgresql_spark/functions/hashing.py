@@ -42,28 +42,6 @@ def hash64(col) -> Column:
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("bigint")
 
 
-def o_hash64(expr: str) -> str:
-    """DuckDB SQL for the same hash."""
-    return f"CAST('0x' || substr(md5({expr}), 1, 15) AS BIGINT)"
-
-
-def minhash_over(hashes: Column, a: int, b: int) -> Column:
-    """min over an array<bigint> of ((a * (h % P) + b) % P)."""
-    return F.array_min(
-        F.transform(
-            hashes,
-            lambda h: (F.lit(a) * (h % MERSENNE_P) + F.lit(b)) % MERSENNE_P,
-        )
-    )
-
-
-def o_minhash_over(hashes_expr: str, a: int, b: int) -> str:
-    return (
-        f"list_min(list_transform({hashes_expr}, "
-        f"h -> ({a} * (h % {MERSENNE_P}) + {b}) % {MERSENNE_P}))"
-    )
-
-
 def simhash_bits(token_hashes: Column, n_bits: int = 16) -> Column:
     """SimHash: per bit j, sign of sum over tokens of (bit_j*2-1), packed to
     an integer. Pure array expressions — evaluated per row."""

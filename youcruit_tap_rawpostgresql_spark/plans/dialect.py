@@ -7477,13 +7477,6 @@ def _build_make_interval(args):
     )
 
 
-def _named_error_builder(msg: str):
-    def build(args):
-        raise ValueError(msg)
-
-    return build
-
-
 # interval-valued PG functions with no faithful Spark composition: age()
 # returns PG's symbolic years/months/days interval (a MIXED interval no
 # single Spark type holds; DuckDB's age() returns plain day counts —

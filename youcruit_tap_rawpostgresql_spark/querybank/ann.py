@@ -523,27 +523,6 @@ def ivf_rank_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def ivf_rank_cells_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, cent_id, crank) view of the fused ANN index — the IVF
-    cell ranking every cell consumer probes (sim_ann_ivf, sim_ann_ivf_pq,
-    dedup_semantic_cluster, cluster_quality_profile,
-    sim_ann_ivf_pruned_store). r14: derives from ``ann_index_df``'s
-    cell1/cell2 columns (a projection + 2-element posexplode of the
-    persisted frame) instead of its own memoized corpus pass — the row
-    multiset is identical to ``ivf_rank_cells`` by construction
-    (equivalence-pinned)."""
-    idx = ann_index_df(spark, sf_dir)
-    return (
-        idx.select("vec_id", F.posexplode(F.array("cell1", "cell2")))
-        .filter(F.col("col").isNotNull())
-        .select(
-            "vec_id",
-            F.col("col").alias("cent_id"),
-            (F.col("pos") + 1).cast("int").alias("crank"),
-        )
-    )
-
-
 _O_CELL_COS = (
     "(" + _O_DOT_PAIR.format(a="v.embedding", b="c.cemb") + ")"
     " / ((" + _O_NORM.format(a="v.embedding") + ") * (" + _O_NORM.format(a="c.cemb") + "))"

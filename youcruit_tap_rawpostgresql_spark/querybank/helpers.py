@@ -87,10 +87,6 @@ def o_davg(expr: str, alias: str) -> str:
     )
 
 
-def o_iso_ts(expr: str, alias: str) -> str:
-    return f"strftime({expr}, '%Y-%m-%d %H:%M:%S') AS {alias}"
-
-
 def o_iso_date(expr: str, alias: str) -> str:
     return f"strftime({expr}, '%Y-%m-%d') AS {alias}"
 

@@ -8,7 +8,8 @@ advance state. Here the same stages compose as DataFrame transforms, and
 stream config names one). Every target — RECORD or BATCH messages, a
 versioned table, a JDBC table — runs through one extract → deliver →
 bookmark scaffold, ``SparkTap._sync``, whose docstring states the
-consistency invariants.
+consistency invariants, and one multi-stream driver, ``SparkTap.sync_all``,
+whose ``commit`` (``versioned_commits``, ``jdbc_commits``) picks the table.
 """
 
 from __future__ import annotations
@@ -45,6 +46,8 @@ from youcruit_tap_rawpostgresql_spark.spec import StreamSpec, TapConfig
 from youcruit_tap_rawpostgresql_spark.state import StateStore
 
 logger = logging.getLogger(__name__)
+
+Commit = Callable[[DataFrame], None]  # one stream's slice into a table
 
 
 @dataclass
@@ -259,7 +262,7 @@ class SparkTap:
         self,
         spec: StreamSpec,
         batch: bool = False,
-        commit: Callable[[DataFrame], None] | None = None,
+        commit: Commit | None = None,
     ) -> SyncResult:
         """Extract → deliver → bookmark for every target: RECORD messages,
         BATCH files (``batch``), or a ``commit`` of the slice into a table
@@ -338,9 +341,7 @@ class SparkTap:
             spec, premap, df, mode, batch, obs_bm, time.perf_counter() - t0
         )
 
-    def _deliver(
-        self, plan: _Plan, commit: Callable[[DataFrame], None] | None = None
-    ) -> SyncResult:
+    def _deliver(self, plan: _Plan, commit: Commit | None = None) -> SyncResult:
         """The delivery step of ``_sync``: every Spark action, every
         output line, the bookmark and the METRIC lines."""
         t0 = time.perf_counter()
@@ -423,24 +424,31 @@ class SparkTap:
         return self._sync(spec, batch=bool(batch_mode and self.config.batch))
 
     def sync_all(
-        self, batch_mode: bool = False, parallel: int = 1
+        self,
+        batch_mode: bool = False,
+        parallel: int = 1,
+        commit: Callable[[StreamSpec], Commit] | None = None,
     ) -> list[SyncResult]:
-        """Sync every configured stream.
+        """Sync every configured stream: Singer messages (RECORD, or BATCH
+        with ``batch_mode`` and a batch config), or one table per stream
+        when ``commit`` builds each stream's commit (``versioned_commits``,
+        ``jdbc_commits``), all before the first stream syncs.
 
         With ``parallel <= 1`` the streams sync in config order, pipelined:
         one worker thread plans stream i+1 (``_plan``: SQL translation,
         analysis, maps; no Spark job) while the calling thread delivers
         stream i. The calling thread runs every Spark action, writes every
-        line, sets every bookmark and emits every STATE line, in config
-        order, so the output and state are byte-identical to calling
-        ``sync_stream`` per stream, and one stream's Spark work runs at a
-        time. An error from stream i+1's plan is raised only once stream i
-        is delivered; a failed delivery waits for the plan in flight and
-        discards it, so no later stream writes a line or moves state. In
-        pyspark's pinned-thread mode (the default) the planner inherits the
-        caller's local properties (job group, description) and tags. A stream that shares the fully qualified
-        name, and so the bookmark, of the stream before it is planned only
-        after that stream is delivered.
+        line, makes every commit, sets every bookmark and emits every STATE
+        line, in config order, so the output, tables and state are the same
+        as per-stream ``sync_stream`` (or ``sync_stream_to_*``) calls, and
+        one stream's Spark work runs at a time. An error from stream i+1's
+        plan is raised only once stream i is delivered; a failed delivery
+        waits for the plan in flight and discards it, so no later stream
+        commits, writes a line or moves state. In pyspark's pinned-thread
+        mode (the default) the planner inherits the caller's local
+        properties (job group, description) and tags. A stream that shares
+        the fully qualified name, and so the bookmark, of the stream before
+        it is planned only after that stream is delivered.
 
         ``parallel > 1`` lifts the reference's architectural bound of one
         SQLAlchemy connection syncing streams sequentially
@@ -455,6 +463,7 @@ class SparkTap:
 
         streams = self._effective_streams()
         batch = bool(batch_mode and self.config.batch)
+        commits = [commit(s) if commit else None for s in streams]
         if parallel <= 1:
             from pyspark import inheritable_thread_target
 
@@ -467,36 +476,32 @@ class SparkTap:
                     self._plan if inherit is self.spark else inherit(self._plan)
                 )
                 ahead = None  # the next stream's plan, in flight
-                for spec, nxt in zip(streams, streams[1:] + [None]):
-                    plan = ahead.result() if ahead else self._plan(spec, batch)
+                table = commit is not None  # a table target
+                for spec, nxt, c in zip(streams, streams[1:] + [None], commits):
+                    plan = ahead.result() if ahead else self._plan(spec, batch, table)
                     ahead = None
                     fqn = spec.fully_qualified_name
                     if nxt and nxt.fully_qualified_name != fqn:
-                        ahead = planner.submit(plan_ahead, nxt, batch)
-                    results.append(self._deliver(plan))
-            self.state.flush()
-            return results
+                        ahead = planner.submit(plan_ahead, nxt, batch, table)
+                    results.append(self._deliver(plan, c))
+        else:
+            import threading
 
-        import threading
+            lock = threading.Lock()
+            inner_write = self.write
 
-        lock = threading.Lock()
-        inner_write = self.write
+            def locked_write(line: str) -> None:
+                with lock:
+                    inner_write(line)
 
-        def locked_write(line: str) -> None:
-            with lock:
-                inner_write(line)
-
-        self.write = locked_write
-        try:
-            with ThreadPoolExecutor(max_workers=parallel) as pool:
-                results = list(
-                    pool.map(
-                        lambda s: self.sync_stream(s, batch_mode=batch_mode),
-                        streams,
+            self.write = locked_write
+            try:
+                with ThreadPoolExecutor(max_workers=parallel) as pool:
+                    results = list(
+                        pool.map(lambda s, c: self._sync(s, batch, c), streams, commits)
                     )
-                )
-        finally:
-            self.write = inner_write
+            finally:
+                self.write = inner_write
         self.state.flush()
         return results
 
@@ -513,16 +518,18 @@ class SparkTap:
         failed commit converges (at-least-once extract, exactly-once
         visible state). ``record_count`` is the slice synced THIS run,
         never a full-table count. Consistency invariants: ``_sync``."""
+        return self._sync(spec, commit=self._versioned_commit(spec, root))
+
+    def _versioned_commit(self, spec: StreamSpec, root: str) -> Commit:
         from youcruit_tap_rawpostgresql_spark.sources import versioned
 
         def commit(df: DataFrame) -> None:
             # composite keys upsert on all columns, with per-column
             # statistics pruning
-            stats_cols = spec.key_properties or None
             if versioned.current_version(root) is None:
                 versioned.commit_snapshot(
                     df, root, mode="overwrite", op="initial-sync",
-                    stats_columns=stats_cols,
+                    stats_columns=spec.key_properties or None,
                 )
             elif spec.key_properties:
                 # statistics-pruned: only files overlapping the slice's
@@ -536,13 +543,43 @@ class SparkTap:
                     df, root, mode="append", op="incremental-append"
                 )
 
-        return self._sync(spec, commit=commit)
+        return commit
+
+    def versioned_commits(self, base: str) -> Callable[[StreamSpec], Commit]:
+        """``sync_all``'s commits into one versioned table per stream
+        (``sync_stream_to_versioned``) at ``base/<fully qualified name>``,
+        so streams named alike in different schemas do not share a table.
+        A stream whose table exists only at the pre-FQN ``base/<name>``
+        keeps syncing it, with a notice on stderr, rather than orphaning
+        its history; not when another stream shares the bare name, as
+        both would then fall back onto one table."""
+        import os
+
+        from youcruit_tap_rawpostgresql_spark.sources import versioned
+
+        names = [s.name for s in self._effective_streams()]
+
+        def commits(spec: StreamSpec) -> Commit:
+            fqn = spec.fully_qualified_name
+            root = os.path.join(base, fqn)
+            legacy = os.path.join(base, spec.name)
+            if (
+                names.count(spec.name) == 1
+                and versioned.current_version(root) is None
+                and versioned.current_version(legacy) is not None
+            ):
+                print(
+                    f"-- {fqn}: using legacy versioned root {legacy!r} "
+                    f"(rename it to {fqn!r} to migrate)",
+                    file=sys.stderr,
+                )
+                root = legacy
+            return self._versioned_commit(spec, root)
+
+        return commits
 
     def sync_stream_to_jdbc(
-        self,
-        spec: StreamSpec,
-        target: dict,
-        mode: str = "append",
+        self, spec: StreamSpec, target: dict, mode: str = "append"
     ) -> SyncResult:
         """Sync one stream INTO a warehouse table over JDBC — the LOAD half
         of extract-load (BASELINE.json north star: "Spark JDBC source +
@@ -562,30 +599,34 @@ class SparkTap:
         failure, can duplicate the slice; exactly-once needs the
         idempotent targets (versioned upsert / batch manifests).
         Consistency invariants: ``_sync``."""
-        import re as _re
+        return self._sync(spec, commit=self.jdbc_commits(target, mode)(spec))
+
+    def jdbc_commits(
+        self, target: dict, mode: str = "append"
+    ) -> Callable[[StreamSpec], Commit]:
+        """``sync_all``'s commits into one JDBC table per stream
+        (``sync_stream_to_jdbc``)."""
+        import re
 
         from youcruit_tap_rawpostgresql_spark.sources.jdbc import jdbc_url
 
-        table = target.get(
-            "table", _re.sub(r"\W", "_", spec.fully_qualified_name)
-        )
+        opts = {
+            k: target[k]
+            for k in ("driver", "createTableColumnTypes")
+            if target.get(k)
+        }
+        for k in ("user", "password"):
+            if target.get(k) is not None:
+                opts[k] = str(target[k])
 
-        def commit(df: DataFrame) -> None:
-            writer = (
+        def commits(spec: StreamSpec) -> Commit:
+            fqn = spec.fully_qualified_name
+            table = target.get("table", re.sub(r"\W", "_", fqn))
+            return lambda df: (
                 df.write.format("jdbc")
-                .option("url", jdbc_url(target))
-                .option("dbtable", table)
+                .options(url=jdbc_url(target), dbtable=table, **opts)
                 .mode(mode)
+                .save()
             )
-            if target.get("driver"):
-                writer = writer.option("driver", str(target["driver"]))
-            for k in ("user", "password"):
-                if target.get(k) is not None:
-                    writer = writer.option(k, str(target[k]))
-            if target.get("createTableColumnTypes"):
-                writer = writer.option(
-                    "createTableColumnTypes", target["createTableColumnTypes"]
-                )
-            writer.save()
 
-        return self._sync(spec, commit=commit)
+        return commits
