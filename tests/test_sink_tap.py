@@ -271,10 +271,11 @@ def test_compact_output_merges_small_files(spark, sf_dir, tmp_path):
 
 def test_tap_parallel_sync_interleaves_safely(spark, sf_dir):
     """parallel=3 lifts the reference's one-connection sequential bound
-    (client.py:106-119). The interleaved Singer output must stay valid:
-    every line parses, each stream's SCHEMA precedes its first RECORD,
-    per-stream record counts equal a sequential sync, and results keep
-    config order regardless of completion order."""
+    (client.py:106-119): the Spark work of up to three streams overlaps.
+    The Singer output must stay valid: every line parses, each stream's
+    SCHEMA precedes its first RECORD, per-stream record counts equal a
+    sequential sync, results keep config order regardless of completion
+    order, and the output equals the sequential sync's line for line."""
     import threading
 
     from youcruit_tap_rawpostgresql_spark.sources.registry import register_testdata
@@ -303,7 +304,8 @@ def test_tap_parallel_sync_interleaves_safely(spark, sf_dir):
         with lk:
             buf.append(chunk)
 
-    seq = SparkTap(TapConfig(streams=specs), spark).sync_all
+    seq_lines: list[str] = []
+    seq = SparkTap(TapConfig(streams=specs), spark, write=seq_lines.append).sync_all
     sequential = {r.stream: r.record_count for r in seq()}
 
     tap = SparkTap(config, spark, write=write)
@@ -325,6 +327,7 @@ def test_tap_parallel_sync_interleaves_safely(spark, sf_dir):
     assert {r.stream: r.record_count for r in results} == sequential
     assert counts == {k: v for k, v in sequential.items() if v}
     assert [r.stream for r in results] == [s.fully_qualified_name for s in specs]
+    assert lines == "".join(seq_lines).splitlines()
 
 
 def test_cli_explain_prints_plans(tmp_path, capsys):
@@ -359,10 +362,10 @@ def test_cli_explain_prints_plans(tmp_path, capsys):
 
 
 def test_tap_parallel_sync_with_bookmarks_consistent_state(spark, sf_dir):
-    """The code-review race: parallel workers advancing bookmarks while
-    another serializes STATE. With the state lock, every emitted STATE
-    line parses, the LAST one contains every stream's bookmark, and the
-    store matches a sequential sync."""
+    """Bookmarks under parallel=5: the calling thread alone advances
+    bookmarks and serializes STATE, so every emitted STATE line parses,
+    the LAST one contains every stream's bookmark, the store matches a
+    sequential sync, and the output equals it line for line."""
     import threading
 
     from youcruit_tap_rawpostgresql_spark.sources.registry import register_testdata
@@ -408,11 +411,13 @@ def test_tap_parallel_sync_with_bookmarks_consistent_state(spark, sf_dir):
     last = states[-1]["value"]["bookmarks"]
     assert len(last) == 5  # the final STATE carries every bookmark
     seq_state = StateStore()
+    seq_lines: list[str] = []
     SparkTap(
-        TapConfig(streams=specs()), spark, state=seq_state, write=lambda s: None
+        TapConfig(streams=specs()), spark, state=seq_state, write=seq_lines.append
     ).sync_all()
     assert state.to_dict() == seq_state.to_dict()
     assert all(r.new_bookmark for r in results)
+    assert buf == seq_lines
 
 
 def test_stream_map_suppress_and_alias(spark):
@@ -906,6 +911,22 @@ def test_cli_rejects_two_sync_targets(tmp_path, capsys):
         assert exc.value.code == 2
         assert "not allowed with argument" in capsys.readouterr().err
     assert not (tmp_path / "warehouse").exists()
+
+
+def test_cli_rejects_parallel_below_one(tmp_path, capsys):
+    """--parallel 0 and -1 are usage errors, not a silent sequential
+    sync."""
+    import pytest
+
+    from youcruit_tap_rawpostgresql_spark.cli import main
+
+    cfg_path = tmp_path / "config.json"
+    cfg_path.write_text(json.dumps({"streams": []}))
+    for k in ("0", "-1"):
+        with pytest.raises(SystemExit) as exc:
+            main(["--config", str(cfg_path), "--parallel", k])
+        assert exc.value.code == 2
+        assert f"--parallel must be at least 1, got {k}" in capsys.readouterr().err
 
 
 def test_batch_sink_non_gzip_codec_roundtrip(spark, tmp_path):

@@ -7,17 +7,26 @@ the JDBC writer. After the failure the sync must have left no trace in
 state: the stored bookmark is the one it started from, no STATE line
 followed, the state file was not rewritten, and no persisted snapshot was
 left cached. A re-run then delivers the slice and advances the bookmark.
+
+Faults in the extract (on a ``sync_all`` worker thread), in
+``StateStore.set_bookmark`` and inside ``StateStore.flush``'s write must
+leave a state file that parses and never holds a bookmark past the rows
+emitted or committed; a restart from that file converges.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import logging
 import os
+import threading
+import types
 
 import pytest
 
 from youcruit_tap_rawpostgresql_spark import sink
+from youcruit_tap_rawpostgresql_spark import state as state_mod
 from youcruit_tap_rawpostgresql_spark import tap as tap_mod
 from youcruit_tap_rawpostgresql_spark.sources import versioned
 from youcruit_tap_rawpostgresql_spark.spec import (
@@ -31,6 +40,7 @@ from youcruit_tap_rawpostgresql_spark.tap import SparkTap
 
 DERBY_DRIVER = "org.apache.derby.iapi.jdbc.AutoloadedDriver"
 FQN = "spark-public-faults"
+SECOND = "spark-public-faults_b"
 START = 1  # stored bookmark: the slice is ids 2..5
 
 
@@ -66,18 +76,26 @@ def _persisted_rdds(spark) -> int:
 
 
 class Run:
-    """A tap over a state file that holds ``START`` for the stream, with
+    """A tap over a state file that holds ``START`` for each stream, with
     its Singer output captured line by line."""
 
-    def __init__(self, spark, tmp_path, **cfg):
+    def __init__(self, spark, tmp_path, streams=None, **cfg):
         self.state_path = tmp_path / "state.json"
+        streams = streams or [_spec()]
         seed = StateStore(str(self.state_path))
-        seed.set_bookmark(FQN, "id", START)
+        for s in streams:
+            seed.set_bookmark(s.fully_qualified_name, "id", START)
         seed.flush()
         self.lines: list[str] = []
+        self.config = TapConfig(streams=streams, **cfg)
+        self.spark = spark
+        self.restart()
+
+    def restart(self) -> None:
+        """A new tap over the state file, as a new process would start."""
         self.tap = SparkTap(
-            TapConfig(streams=[_spec()], **cfg),
-            spark,
+            self.config,
+            self.spark,
             state=StateStore(str(self.state_path)),
             write=self.lines.append,
         )
@@ -88,18 +106,6 @@ class Run:
     def file_snapshot(self):
         st = os.stat(self.state_path)
         return self.state_path.read_bytes(), st.st_mtime_ns
-
-
-def _raise_after(real):
-    """``real``, run to completion, then an injected failure: the
-    delivery's Spark work (and any Observation) finished, but the
-    delivery as a whole did not."""
-
-    def fail(*args, **kwargs):
-        real(*args, **kwargs)
-        raise Injected("delivery failed")
-
-    return fail
 
 
 def _raise(*_args, **_kwargs):
@@ -155,9 +161,13 @@ def test_failed_delivery_leaves_state_untouched(
     elif target == "record_persisted":
         collects = _record(monkeypatch, 0)
     elif target == "batch":
-        monkeypatch.setattr(
-            tap_mod, "write_batch_files", _raise_after(tap_mod.write_batch_files)
-        )
+        # the fetch has written the files; the emit fails at the BATCH line
+        def write(line):
+            if json.loads(line)["type"] == "BATCH":
+                raise Injected("delivery failed")
+            run.lines.append(line)
+
+        monkeypatch.setattr(run.tap, "write", write)
     elif target == "versioned_initial":
         monkeypatch.setattr(versioned, "commit_snapshot", _raise)
     elif target == "versioned_upsert":
@@ -245,3 +255,94 @@ def test_snapshot_targets_log_metrics(spark, fault_src, tmp_path, caplog, target
     assert metrics["sync_duration"]["type"] == "timer"
     assert metrics["sync_duration"]["value"] >= 0
     assert all(m["tags"] == {"stream": FQN} for m in metrics.values())
+
+
+def _stored(run) -> dict:
+    """The state file's bookmarks. Parsing it checks that it is not torn."""
+    bookmarks = json.loads(run.state_path.read_text())["bookmarks"]
+    return {fqn: bm["replication_key_value"] for fqn, bm in bookmarks.items()}
+
+
+def _delivered(spark, run, base) -> dict[str, set]:
+    """The ids each stream emitted as RECORD lines or committed to its
+    versioned table under ``base``."""
+    out: dict[str, set] = {}
+    for ln in run.lines:
+        msg = json.loads(ln)
+        if msg["type"] == "RECORD":
+            out.setdefault(msg["stream"], set()).add(msg["record"]["id"])
+    for fqn in os.listdir(base) if os.path.isdir(base) else []:
+        rows = versioned.read_version(spark, str(base / fqn)).collect()
+        out[fqn] = {r.id for r in rows}
+    return out
+
+
+def _torn_dump(obj, fh, **kwargs):
+    fh.write(json.dumps(obj, **kwargs)[:10])
+    raise Injected("flush failed mid-write")
+
+
+@pytest.mark.parametrize("target", ["record", "versioned"])
+@pytest.mark.parametrize("fault", ["extract", "set_bookmark", "flush"])
+def test_state_file_never_runs_ahead_of_delivery(
+    spark, fault_src, tmp_path, monkeypatch, fault, target
+):
+    """Two streams synced by ``sync_all(parallel=2)``, so the second is
+    planned and fetched on a worker while the first is emitted. A fault
+    in the second stream's extract (raised on that worker), in
+    ``set_bookmark`` or inside ``flush``'s write stops the sync. The state
+    file still parses, every bookmark in it is covered by rows emitted or
+    committed, no snapshot stays cached, and a restart from the file
+    delivers both slices (the keyed upsert exactly once)."""
+    streams = [_spec(), dataclasses.replace(_spec(), name="faults_b")]
+    run = Run(spark, tmp_path, streams=streams)
+    base = tmp_path / "vt"
+
+    def sync():
+        commit = run.tap.versioned_commits(str(base)) if target == "versioned" else None
+        return run.tap.sync_all(parallel=2, commit=commit)
+
+    threads = []
+    if fault == "extract":
+        real_extract = SparkTap._extract
+
+        def extract(self, spec):
+            if spec.name == "faults_b":
+                threads.append(threading.current_thread())
+                raise Injected("extract failed")
+            return real_extract(self, spec)
+
+        monkeypatch.setattr(SparkTap, "_extract", extract)
+    elif fault == "set_bookmark":
+        monkeypatch.setattr(StateStore, "set_bookmark", _raise)
+    else:
+        monkeypatch.setattr(
+            state_mod, "json", types.SimpleNamespace(dump=_torn_dump, load=json.load)
+        )
+
+    rdds = _persisted_rdds(spark)
+    with pytest.raises(Injected):
+        sync()
+
+    if fault == "extract":
+        assert threads and threads[0] is not threading.current_thread()
+    stored = _stored(run)
+    # a commit target flushes each stream's bookmark after its commit
+    flushed = fault == "extract" and target == "versioned"
+    assert stored == {FQN: 5 if flushed else START, SECOND: START}
+    delivered = _delivered(spark, run, base)
+    for fqn, bm in stored.items():
+        assert set(range(START + 1, bm + 1)) <= delivered.get(fqn, set())
+    if fault != "flush" or target == "versioned":
+        assert SECOND not in delivered  # no stream after the failure
+    assert _persisted_rdds(spark) == rdds
+
+    monkeypatch.undo()
+    run.restart()
+    res = sync()
+    assert [r.stream for r in res] == [FQN, SECOND]
+    assert _stored(run) == {FQN: 5, SECOND: 5}
+    delivered = _delivered(spark, run, base)
+    assert delivered[FQN] >= {2, 3, 4, 5} and delivered[SECOND] >= {2, 3, 4, 5}
+    if target == "versioned":
+        assert delivered == {FQN: {2, 3, 4, 5}, SECOND: {2, 3, 4, 5}}

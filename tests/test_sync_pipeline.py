@@ -1,18 +1,21 @@
-"""The pipelined sequential ``SparkTap.sync_all``: a worker thread plans
-stream i+1 while the calling thread delivers stream i.
+"""The ordered ``SparkTap.sync_all``: workers plan the k streams after the
+one the calling thread emits, and with ``parallel`` k > 1 also fetch the
+k - 1 streams after it; with k = 1 the calling thread fetches.
 
-The output must not show the pipeline: the lines, the final state and the
-results equal per-stream ``sync_stream`` calls, on the Arrow, persisted and
-streamed RECORD paths, with maps and a ``__source__`` alias; the versioned
-tables equal per-stream ``sync_stream_to_versioned`` calls. Planning runs
-no Spark job and caches nothing. A failed delivery or commit stops the
-sync with no trace of the streams after it; a failed plan surfaces only
-once the stream before it is fully out. The planner runs under the
-caller's job group.
+The output must not show the scheduler: the lines, the final state and the
+results equal per-stream ``sync_stream`` calls for every k, on the Arrow,
+persisted and streamed RECORD paths, with maps and a ``__source__`` alias,
+and for BATCH files; the versioned tables equal per-stream
+``sync_stream_to_versioned`` calls. Planning runs no Spark job and caches
+nothing; at most k streams are fetched and not yet emitted. A failed
+delivery or commit stops the sync with no trace of the streams after it; a
+failed plan surfaces only once the stream before it is fully out. The
+workers run under the caller's job group.
 """
 
 from __future__ import annotations
 
+import gzip
 import json
 import os
 import threading
@@ -22,7 +25,12 @@ import pytest
 
 from youcruit_tap_rawpostgresql_spark import sink
 from youcruit_tap_rawpostgresql_spark import tap as tap_mod
-from youcruit_tap_rawpostgresql_spark.spec import ColumnSpec, StreamSpec, TapConfig
+from youcruit_tap_rawpostgresql_spark.spec import (
+    BatchSinkConfig,
+    ColumnSpec,
+    StreamSpec,
+    TapConfig,
+)
 from youcruit_tap_rawpostgresql_spark.state import StateStore
 from youcruit_tap_rawpostgresql_spark.tap import SparkTap
 
@@ -223,13 +231,15 @@ def test_maps_built_before_the_persist_read_the_snapshot(
     assert "InMemoryRelation" in optimized
 
 
+@pytest.mark.parametrize("k", [1, 2])
 def test_failed_delivery_stops_the_pipeline(
-    spark, pipe_src, tmp_path, monkeypatch
+    spark, pipe_src, tmp_path, monkeypatch, k
 ):
     """The big stream's delivery raises after its first RECORD line while
-    the flat stream is being planned: nothing of the flat stream or of the
-    streams after it reaches the output or state, no state is flushed,
-    and the big stream's snapshot is released."""
+    the flat stream is being planned (with k = 2, fetched, and the alias
+    planned): nothing of the flat stream or of the streams after it
+    reaches the output or state, no state is flushed, and the big
+    stream's snapshot is released."""
     _split_budget(spark, monkeypatch)
     path = tmp_path / "state.json"
     seed = StateStore(str(path))
@@ -263,9 +273,13 @@ def test_failed_delivery_stops_the_pipeline(
     monkeypatch.setattr(tap_mod, "emit_record_messages", emit)
     rdds = _persisted_rdds(spark)
     with pytest.raises(Injected):
-        tap.sync_all()
+        tap.sync_all(parallel=k)
 
-    assert planned == ["small", "big", "flat"]  # flat's plan was in flight
+    if k == 1:
+        assert planned == ["small", "big", "flat"]  # flat's plan was in flight
+    else:  # k streams planned ahead, finishing in any order
+        assert planned[0] == "small"
+        assert sorted(planned[1:]) == ["big", "flat", "small_alias"]
     out = _streams(lines)
     small = [("SCHEMA", "spark-public-small")] + [("RECORD", "spark-public-small")] * 4
     assert out == small + [
@@ -280,10 +294,11 @@ def test_failed_delivery_stops_the_pipeline(
     assert _persisted_rdds(spark) == rdds
 
 
+@pytest.mark.parametrize("k", [1, 2])
 def test_failed_plan_surfaces_after_the_stream_before_it(
-    spark, pipe_src, tmp_path, monkeypatch
+    spark, pipe_src, tmp_path, monkeypatch, k
 ):
-    """The big stream's plan raises on the planner thread while the small
+    """The big stream's plan raises on a worker thread while the small
     stream delivers. The error reaches the caller only after the small
     stream's lines and STATE are out; nothing of the big stream is."""
     path = tmp_path / "state.json"
@@ -300,7 +315,7 @@ def test_failed_plan_surfaces_after_the_stream_before_it(
 
     monkeypatch.setattr(SparkTap, "_extract", extract)
     with pytest.raises(Injected):
-        tap.sync_all()
+        tap.sync_all(parallel=k)
 
     assert planner_threads and planner_threads[0] is not threading.current_thread()
     out = _streams(lines)
@@ -359,6 +374,131 @@ def test_pipeline_runs_outside_pinned_thread_mode(
     assert piped_lines == ref_lines
 
 
+KS = (1, 2, 4)
+
+
+def test_sync_all_output_is_the_same_for_any_k(
+    spark, pipe_src, tmp_path, monkeypatch
+):
+    """Observe, persist and stream RECORD paths, maps and a ``__source__``
+    alias: k = 1, 2 and 4 write the same lines, state file and results,
+    over a first sync and one from the stored bookmarks, and leave no
+    snapshot cached."""
+    _split_budget(spark, monkeypatch)
+    lines = {k: [] for k in KS}
+    taps = {k: _tap(spark, tmp_path / f"k{k}.json", lines[k]) for k in KS}
+    rdds = _persisted_rdds(spark)
+    for _ in range(2):
+        got = {}
+        for k, tap in taps.items():
+            res = tap.sync_all(parallel=k)
+            got[k] = [(r.stream, r.record_count, r.new_bookmark) for r in res]
+        for k in KS[1:]:
+            assert got[k] == got[1]
+            assert lines[k] == lines[1]
+            assert (tmp_path / f"k{k}.json").read_bytes() == (
+                tmp_path / "k1.json"
+            ).read_bytes()
+    assert [n for _s, n, _b in got[1]] == [0, 0, 1000, 0]
+    assert _persisted_rdds(spark) == rdds
+
+
+def _batch_files(lines: list[str]) -> dict[str, list[list[str]]]:
+    """Per stream, the decompressed lines of each BATCH manifest's files."""
+    out: dict[str, list[list[str]]] = {}
+    for ln in lines:
+        msg = json.loads(ln)
+        if msg["type"] == "BATCH":
+            rows = []
+            for url in msg["manifest"]:
+                with gzip.open(url.removeprefix("file://"), "rt") as fh:
+                    rows.extend(fh.read().splitlines())
+            out.setdefault(msg["stream"], []).append(rows)
+    return out
+
+
+def test_batch_sync_all_output_is_the_same_for_any_k(spark, pipe_src, tmp_path):
+    """Two BATCH streams: k = 1, 2 and 4 write the same manifests per
+    stream, the same decompressed file contents, the same line types and
+    the same state file. (File names carry a uuid.)"""
+    specs = _specs()
+    config = {
+        k: TapConfig(
+            streams=[specs[0], specs[2]],
+            batch=BatchSinkConfig(root=f"file://{tmp_path}/batch{k}"),
+        )
+        for k in KS
+    }
+    out = {}
+    for k in KS:
+        lines: list[str] = []
+        tap = _tap(spark, tmp_path / f"k{k}.json", lines, config[k])
+        res = tap.sync_all(batch_mode=True, parallel=k)
+        out[k] = (
+            [(r.stream, r.record_count, r.new_bookmark, len(r.manifests)) for r in res],
+            _streams(lines),
+            _batch_files(lines),
+            (tmp_path / f"k{k}.json").read_bytes(),
+        )
+    results, types, files, _state = out[1]
+    assert [n for _s, n, _b, _m in results] == [5, 1000]
+    assert [t for t, _s in types].count("BATCH") == 2
+    assert sorted(len(rows) for f in files.values() for rows in f) == [5, 1000]
+    for k in KS[1:]:
+        assert out[k] == out[1]
+
+
+def test_at_most_k_streams_are_fetched_and_not_emitted(
+    spark, pipe_src, monkeypatch
+):
+    """Four streams at k = 2: from the start of a stream's fetch to the end
+    of its emit, at most two streams are held, and the second stream's
+    fetch overlaps the first stream's emit, on a worker. At k = 1 every
+    fetch runs on the calling thread."""
+    _split_budget(spark, monkeypatch)
+    main = threading.current_thread()
+    real_fetch, real_emit = SparkTap._fetch, SparkTap._emit
+    for k in (1, 2):
+        lock = threading.Lock()
+        held: set[str] = set()
+        peak = [0]
+        fetched_on: dict[str, bool] = {}
+        big_fetching = threading.Event()
+
+        def fetch(self, plan):
+            with lock:
+                held.add(plan.spec.name)
+                peak[0] = max(peak[0], len(held))
+                fetched_on[plan.spec.name] = threading.current_thread() is main
+            if plan.spec.name == "big":
+                big_fetching.set()
+            return real_fetch(self, plan)
+
+        def emit(self, plan):
+            if k == 2 and plan.spec.name == "small":
+                assert big_fetching.wait(timeout=120)  # bounded
+            res = real_emit(self, plan)
+            with lock:
+                held.discard(plan.spec.name)
+            return res
+
+        monkeypatch.setattr(SparkTap, "_fetch", fetch)
+        monkeypatch.setattr(SparkTap, "_emit", emit)
+        res = _tap(spark).sync_all(parallel=k)
+        assert [r.stream for r in res] == [
+            f"spark-public-{n}" for n in ("small", "big", "flat", "small_alias")
+        ]
+        assert not held
+        if k == 1:
+            assert peak[0] == 1
+            assert all(fetched_on.values()) and len(fetched_on) == 4
+        else:
+            assert peak[0] == 2
+            assert fetched_on == {
+                "small": True, "big": False, "flat": False, "small_alias": False,
+            }
+
+
 def _versioned_specs() -> list[StreamSpec]:
     cols = [ColumnSpec("id", "int8", nullable=False), ColumnSpec("grp", "int8")]
     return [
@@ -397,11 +537,11 @@ def _versioned_tables(spark, base) -> dict:
 
 
 def test_versioned_sync_all_equals_per_stream_syncs(spark, tmp_path):
-    """``sync_all`` with versioned commits, pipelined and with two workers,
-    commits the same versions, rows and state as per-stream
+    """``sync_all`` with versioned commits, at k = 1, 2 and 4, commits the
+    same versions, rows and state as per-stream
     ``sync_stream_to_versioned`` calls, over a snapshot sync and an
     upsert (keyed) or append (keyless) sync."""
-    runs = ("ref", "piped", "parallel")
+    runs = ("ref", "piped", "parallel", "parallel4")
     taps = {
         run: SparkTap(
             TapConfig(streams=_versioned_specs()),
@@ -421,7 +561,7 @@ def test_versioned_sync_all_equals_per_stream_syncs(spark, tmp_path):
                 )
                 for s in ref._effective_streams()
             ]
-            for run, parallel in (("piped", 1), ("parallel", 2)):
+            for run, parallel in (("piped", 1), ("parallel", 2), ("parallel4", 4)):
                 tap = taps[run]
                 got = tap.sync_all(
                     parallel=parallel,
@@ -449,9 +589,11 @@ def test_versioned_sync_all_equals_per_stream_syncs(spark, tmp_path):
         ).read_bytes()
 
 
-def test_failed_commit_stops_the_versioned_pipeline(spark, tmp_path):
-    """The first stream's commit raises while the second is being planned:
-    the second stream commits nothing and its bookmark stays put."""
+@pytest.mark.parametrize("k", [1, 2])
+def test_failed_commit_stops_the_versioned_pipeline(spark, tmp_path, k):
+    """The first stream's commit raises while the second is being planned
+    (and, with k = 2, fetched): the second stream commits nothing, its
+    bookmark stays put and its snapshot is released."""
     from youcruit_tap_rawpostgresql_spark.sources import versioned
 
     path = tmp_path / "state.json"
@@ -476,9 +618,10 @@ def test_failed_commit_stops_the_versioned_pipeline(spark, tmp_path):
     spark.range(1, 6).selectExpr("id", "id % 2 AS grp").createOrReplaceTempView(
         "vsync_src"
     )
+    rdds = _persisted_rdds(spark)
     try:
         with pytest.raises(Injected):
-            tap.sync_all(parallel=1, commit=commit)
+            tap.sync_all(parallel=k, commit=commit)
     finally:
         spark.catalog.dropTempView("vsync_src")
     appended = tmp_path / "vt" / "spark-public-appended"
@@ -486,3 +629,4 @@ def test_failed_commit_stops_the_versioned_pipeline(spark, tmp_path):
     assert tap.state.get_bookmark("spark-public-appended", "id") == 2
     assert tap.state.get_bookmark("spark-public-keyed") is None
     assert path.read_bytes() == before
+    assert _persisted_rdds(spark) == rdds

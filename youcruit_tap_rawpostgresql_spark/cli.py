@@ -109,7 +109,7 @@ def main(argv: list[str] | None = None) -> int:
         "--parallel",
         type=int,
         default=1,
-        help="sync up to N streams at once, into any target (reference is sequential)",
+        help="overlap up to N streams' Spark work; output stays in config order",
     )
     p.add_argument(
         "--test",
@@ -129,6 +129,8 @@ def main(argv: list[str] | None = None) -> int:
         help="register testdata parquet tables from this dir as source views",
     )
     args = p.parse_args(argv)
+    if args.parallel < 1:
+        p.error(f"--parallel must be at least 1, got {args.parallel}")
 
     from youcruit_tap_rawpostgresql_spark.catalog import about, discover_catalog
     from youcruit_tap_rawpostgresql_spark.spec import TapConfig

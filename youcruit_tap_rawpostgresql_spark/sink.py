@@ -175,10 +175,7 @@ def write_batch_files(
     else:  # remote FS: list via Spark's own catalog of written files
         files = [
             f"{out_dir.rstrip('/')}/{os.path.basename(p)}"
-            for p in sorted(
-                f.path if hasattr(f, "path") else f
-                for f in _list_remote(df, out_dir)
-            )
+            for p in sorted(_list_remote(df, out_dir))
         ]
     return [
         BatchManifest(
@@ -328,18 +325,18 @@ def emit_record_messages(
 ) -> int:
     """Emit one RECORD message per row of ``df``; returns the row count.
 
-    ``collect=True`` runs ONE Arrow collect action and serializes the
-    batches column-wise (per-column converters chosen from the Arrow
-    schema; JSON-native columns skip ``jsonable_value``). TIMESTAMP values
-    arrive zone-aware and are written in UTC, so the lines do not depend
-    on the driver's time zone. The batches are read as the JVM sends them:
-    ``toArrow``'s final cast to the declared schema rejects a null struct
-    whose fields are declared non-null. ``collect=False`` streams rows one
-    partition at a time through ``toLocalIterator`` — driver memory stays
-    bounded for frames of any size; its ``Row`` values read TIMESTAMP in
-    the driver's zone, so converters from the Spark schema pin them to UTC
-    and both paths write the same lines. ``None`` chooses by
-    ``fits_record_budget``.
+    ``collect=True`` runs ONE Arrow collect action, or takes ``df`` as the
+    batches one returned, and serializes them column-wise (converters per
+    Arrow column type; JSON-native columns skip ``jsonable_value``).
+    TIMESTAMP values arrive zone-aware and are written in UTC, so the
+    lines do not depend on the driver's time zone. The batches are read as
+    the JVM sends them: ``toArrow``'s final cast to the declared schema
+    rejects a null struct whose fields are declared non-null.
+    ``collect=False`` streams rows one partition at a time through
+    ``toLocalIterator`` — driver memory stays bounded for frames of any
+    size; its ``Row`` values read TIMESTAMP in the driver's zone, so
+    converters from the Spark schema pin them to UTC and both paths write
+    the same lines. ``None`` chooses by ``fits_record_budget``.
 
     Observed metrics on ``df`` (``DataFrame.observe``) are reported by the
     Arrow collect; ``toLocalIterator`` never completes an ``Observation``.
@@ -360,7 +357,7 @@ def emit_record_messages(
             write(json.dumps({"type": "RECORD", "stream": stream, "record": rec}) + "\n")
             n += 1
         return n
-    batches = df._collect_as_arrow()
+    batches = df if isinstance(df, list) else df._collect_as_arrow()
     if not batches:
         return 0
     names = batches[0].schema.names

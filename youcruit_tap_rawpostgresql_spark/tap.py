@@ -9,7 +9,8 @@ stream config names one). Every target — RECORD or BATCH messages, a
 versioned table, a JDBC table — runs through one extract → deliver →
 bookmark scaffold, ``SparkTap._sync``, whose docstring states the
 consistency invariants, and one multi-stream driver, ``SparkTap.sync_all``,
-whose ``commit`` (``versioned_commits``, ``jdbc_commits``) picks the table.
+whose ``commit`` (``versioned_commits``, ``jdbc_commits``) picks the table
+and whose ``parallel`` k overlaps k streams' Spark work, output in config order.
 """
 
 from __future__ import annotations
@@ -60,16 +61,26 @@ class SyncResult:
 
 @dataclass
 class _Plan:
-    """One stream's delivery, planned (``SparkTap._plan``) and not yet run
-    (``SparkTap._deliver``)."""
+    """One stream's delivery: ``SparkTap._plan``, ``_fetch``, ``_emit``."""
 
     spec: StreamSpec
     premap: DataFrame  # the extract; observed in "observe" mode
     df: DataFrame  # ``premap`` after maps and flattening
     mode: str  # "observe" | "persist" | "stream"
     batch: bool
+    commit: Commit | None  # into a table, instead of Singer messages
     obs_bm: Observation | None
     plan_s: float
+    fetch_s: float | None = None  # None until the fetch ran
+    bookmark: Any | None = None
+    batches: list | None = None  # observe-mode RECORD: the Arrow batches
+    manifests: list[BatchManifest] = field(default_factory=list)
+    n: int | None = None  # BATCH and commits: the delivered count
+
+    def release(self) -> None:
+        """Drop the fetch's persisted snapshot, if it has one."""
+        if self.mode == "persist" and self.fetch_s is not None:
+            self.premap.unpersist()
 
 
 class SparkTap:
@@ -87,8 +98,6 @@ class SparkTap:
         write: Callable[[str], None] | None = None,
         catalog: dict | None = None,
     ):
-        import threading
-
         self.config = config
         self.spark = spark
         self.state = state or StateStore()
@@ -97,11 +106,6 @@ class SparkTap:
         # tap.py:252): drives stream selection and replication overrides
         # — applied in _effective_streams
         self.catalog = catalog
-        # serializes bookmark-advance + STATE serialization + STATE write:
-        # without it, parallel workers mutate the bookmarks dict while
-        # another thread's json.dumps iterates it (RuntimeError), and a
-        # stale snapshot could be the LAST state line a target persists
-        self._state_lock = threading.Lock()
 
     def _effective_streams(self) -> list[StreamSpec]:
         """Resolve stream-level map directives (Singer SDK parity,
@@ -250,10 +254,7 @@ class SparkTap:
         server-side either way."""
         from youcruit_tap_rawpostgresql_spark.plans.dialect import bind_params
         from youcruit_tap_rawpostgresql_spark.sources.jdbc import read_jdbc_stream
-        from youcruit_tap_rawpostgresql_spark.spec import SpecError
 
-        if not spec.sql or not spec.sql.strip():
-            raise SpecError("sql must not be empty")  # reference client.py:255-258
         sql = bind_params(spec.sql, params, style="standard") if params else spec.sql
         partitioning = dict(spec.jdbc_partition or {})
         return read_jdbc_stream(self.spark, self.config.jdbc, sql, **partitioning)
@@ -266,13 +267,13 @@ class SparkTap:
     ) -> SyncResult:
         """Extract → deliver → bookmark for every target: RECORD messages,
         BATCH files (``batch``), or a ``commit`` of the slice into a table
-        (the versioned and JDBC targets). It is two steps, ``_plan`` then
-        ``_deliver``. The consistency invariants live here, once:
+        (the versioned and JDBC targets). It is three steps, ``_plan``,
+        ``_fetch`` and ``_emit``. The consistency invariants live here, once:
 
         - The plan step builds the stream's DataFrames and runs no Spark
           job: no action, no ``persist`` (which registers a cache entry at
-          once). Everything that runs a job, writes a line or touches state
-          is in the delivery step.
+          once). The fetch step runs Spark work that nothing outside the
+          process sees; the emit step writes, commits and moves state.
         - The bookmark is the replication key's ``max`` over the PRE-map
           frame (Singer parity: a map that masks, renames or drops the key
           cannot corrupt state), taken from the same execution the
@@ -288,7 +289,7 @@ class SparkTap:
             frame, so nothing may run an action on it before the delivery;
           - persist (commits, and keyed RECORD over the budget, whose
             ``toLocalIterator`` never completes an ``Observation``): the
-            delivery persists the extract, and ONE aggregate over it gives
+            fetch persists the extract, and ONE aggregate over it gives
             the count and the bookmark while materializing it; the mapped
             frame, built on the same object, reads the same snapshot. A
             JDBC relation reports ``spark.sql.defaultSizeInBytes``, so live
@@ -301,21 +302,19 @@ class SparkTap:
           BATCH write's observed count, or for a commit the aggregate's
           count when no map changed the frame, else a ``count()`` served
           from the snapshot.
-        - The bookmark is stored under ``_state_lock`` only AFTER the
+        - The bookmark is set on the calling thread only, and only AFTER the
           delivery succeeds, followed by the STATE line (Singer outputs) or
           a ``StateStore.flush`` (commits: a keyless append is not
           idempotent, so losing an in-memory advance would re-append the
           slice). A failed delivery leaves state untouched, and the next
           sync re-extracts the same slice.
-        - ``record_count`` and ``sync_duration`` (the two steps' time) go
+        - ``record_count`` and ``sync_duration`` (the three steps' time) go
           out as Singer SDK-style METRIC lines on the logger, never stdout
           (the message stream must stay parseable)."""
-        return self._deliver(
-            self._plan(spec, batch=batch, commit=commit is not None), commit
-        )
+        return self._emit(self._fetch(self._plan(spec, batch, commit)))
 
     def _plan(
-        self, spec: StreamSpec, batch: bool = False, commit: bool = False
+        self, spec: StreamSpec, batch: bool = False, commit: Commit | None = None
     ) -> _Plan:
         """The plan step of ``_sync``: the extract, the delivery mode, the
         bookmark ``Observation`` and the maps. Runs no Spark job and
@@ -324,9 +323,9 @@ class SparkTap:
         t0 = time.perf_counter()
         rk = spec.replication_key
         premap, _ = self._extract(spec)
-        if not commit and (batch or fits_record_budget(premap)):
+        if commit is None and (batch or fits_record_budget(premap)):
             mode = "observe"
-        elif commit or rk is not None:
+        elif commit is not None or rk is not None:
             mode = "persist"
         else:
             mode = "stream"
@@ -338,68 +337,75 @@ class SparkTap:
         # frame, so the delivery reads the extract the bookmark comes from
         df = self._map(spec, premap)
         return _Plan(
-            spec, premap, df, mode, batch, obs_bm, time.perf_counter() - t0
+            spec, premap, df, mode, batch, commit, obs_bm, time.perf_counter() - t0
         )
 
-    def _deliver(self, plan: _Plan, commit: Commit | None = None) -> SyncResult:
-        """The delivery step of ``_sync``: every Spark action, every
-        output line, the bookmark and the METRIC lines."""
+    def _fetch(self, plan: _Plan) -> _Plan:
+        """The fetch step of ``_sync``: persist + count/bookmark aggregate,
+        Arrow collect or BATCH write. A failed fetch drops its snapshot."""
         t0 = time.perf_counter()
         spec, premap, df = plan.spec, plan.premap, plan.df
         rk = spec.replication_key
-        persist = plan.mode == "persist"
-        row = None
-        manifests: list[BatchManifest] = []
-        if persist:
+        if plan.mode == "persist":
             # the same object the maps derive from: they read the snapshot
             premap.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            if persist:
+            try:
                 aggs = [F.count(F.lit(1)).alias("n")]
                 if rk:
                     aggs.append(bookmark_max(premap, rk))
                 row = premap.agg(*aggs).first()
-            if commit is not None:
-                n = row["n"] if df is premap else df.count()
-                commit(df)
-            elif plan.batch:
-                obs_n = Observation()
-                emit_schema_message(spec, self.write)
-                manifests = write_batch_files(
-                    df.observe(obs_n, F.count(F.lit(1)).alias("n")),
-                    spec,
-                    self.config.batch,
-                )
-                for m in manifests:
-                    self.write(
-                        json.dumps(m.to_message(spec.fully_qualified_name)) + "\n"
-                    )
-                n = obs_n.get["n"]
-            else:
-                emit_schema_message(spec, self.write)
-                n = emit_record_messages(
-                    df, spec, self.write, collect=plan.mode == "observe"
-                )
-        finally:
-            if persist:
+                plan.bookmark = row["mx"] if rk else None
+                if plan.commit is not None:
+                    plan.n = row["n"] if df is premap else df.count()
+            except BaseException:
                 premap.unpersist()
+                raise
+        elif plan.batch:
+            obs_n = Observation()
+            plan.manifests = write_batch_files(
+                df.observe(obs_n, F.count(F.lit(1)).alias("n")),
+                spec,
+                self.config.batch,
+            )
+            plan.n = obs_n.get["n"]
+        elif plan.mode == "observe":
+            # the batches as the JVM sends them (``emit_record_messages``)
+            plan.batches = df._collect_as_arrow()
         if plan.obs_bm is not None:
-            new_bm = plan.obs_bm.get["mx"]
-        else:
-            new_bm = row["mx"] if persist and rk else None
-        # only the dict mutation and the consistent STATE snapshot+write
-        # serialize; the Spark jobs above run outside the lock (parallel
-        # streams keep their jobs concurrent)
-        with self._state_lock:
-            if new_bm is not None:
-                self.state.set_bookmark(spec.fully_qualified_name, rk, new_bm)
-                new_bm = self.state.get_bookmark(spec.fully_qualified_name)
-            if commit is None:
-                emit_state_message(self.state.to_dict(), self.write)
+            plan.bookmark = plan.obs_bm.get["mx"]
+        plan.fetch_s = time.perf_counter() - t0
+        return plan
+
+    def _emit(self, plan: _Plan) -> SyncResult:
+        """The emit step of ``_sync``: commit or lines (``toLocalIterator``
+        included), bookmark, STATE or ``flush``, METRICs; releases the plan."""
+        t0 = time.perf_counter()
+        spec, n, commit = plan.spec, plan.n, plan.commit
+        fqn, rk = spec.fully_qualified_name, spec.replication_key
+        try:
+            if commit is not None:
+                commit(plan.df)
             else:
-                self.state.flush()
-        tags = {"stream": spec.fully_qualified_name}
-        duration = plan.plan_s + time.perf_counter() - t0
+                emit_schema_message(spec, self.write)
+                for m in plan.manifests:
+                    self.write(json.dumps(m.to_message(fqn)) + "\n")
+                if not plan.batch:
+                    rows = plan.df if plan.batches is None else plan.batches
+                    n = emit_record_messages(
+                        rows, spec, self.write, collect=plan.mode == "observe"
+                    )
+        finally:
+            plan.release()
+        new_bm = plan.bookmark
+        if new_bm is not None:
+            self.state.set_bookmark(fqn, rk, new_bm)
+            new_bm = self.state.get_bookmark(fqn)
+        if commit is None:
+            emit_state_message(self.state.to_dict(), self.write)
+        else:
+            self.state.flush()
+        tags = {"stream": fqn}
+        duration = plan.plan_s + plan.fetch_s + time.perf_counter() - t0
         for kind, metric, value in (
             ("counter", "record_count", n),
             ("timer", "sync_duration", round(duration, 4)),
@@ -411,10 +417,10 @@ class SparkTap:
                 ),
             )
         return SyncResult(
-            stream=spec.fully_qualified_name,
+            stream=fqn,
             record_count=n,
             new_bookmark=new_bm,
-            manifests=manifests,
+            manifests=plan.manifests,
         )
 
     def sync_stream(self, spec: StreamSpec, batch_mode: bool = False) -> SyncResult:
@@ -434,74 +440,68 @@ class SparkTap:
         when ``commit`` builds each stream's commit (``versioned_commits``,
         ``jdbc_commits``), all before the first stream syncs.
 
-        With ``parallel <= 1`` the streams sync in config order, pipelined:
-        one worker thread plans stream i+1 (``_plan``: SQL translation,
-        analysis, maps; no Spark job) while the calling thread delivers
-        stream i. The calling thread runs every Spark action, writes every
-        line, makes every commit, sets every bookmark and emits every STATE
-        line, in config order, so the output, tables and state are the same
-        as per-stream ``sync_stream`` (or ``sync_stream_to_*``) calls, and
-        one stream's Spark work runs at a time. An error from stream i+1's
-        plan is raised only once stream i is delivered; a failed delivery
-        waits for the plan in flight and discards it, so no later stream
-        commits, writes a line or moves state. In pyspark's pinned-thread
-        mode (the default) the planner inherits the caller's local
-        properties (job group, description) and tags. A stream that shares
-        the fully qualified name, and so the bookmark, of the stream before
-        it is planned only after that stream is delivered.
-
-        ``parallel > 1`` lifts the reference's architectural bound of one
-        SQLAlchemy connection syncing streams sequentially
-        (``client.py:106-119``): each worker thread submits its stream's
-        Spark jobs concurrently and the scheduler interleaves them across
-        the cluster. Singer output stays valid under interleaving —
-        RECORD messages carry their stream name and each stream's SCHEMA
-        is emitted before its records; a line-level lock prevents torn
-        writes. Results keep config order regardless of completion order.
+        For any ``parallel`` k the output, tables and state equal per-stream
+        ``sync_stream`` (or ``sync_stream_to_*``) calls: the calling thread
+        emits (``_emit``) each stream in config order while workers plan
+        (no Spark job) the k streams after it. With k = 1 the calling thread
+        fetches each stream itself, so one stream's Spark work runs at a
+        time; with k > 1 workers also fetch (``_fetch``) the k - 1 streams
+        after it, so up to k streams' Spark work overlaps and at most k
+        fetched results (about k × ``sink.RECORD_COLLECT_BUDGET`` of Arrow
+        batches) are held. Errors surface in config order: after a failed
+        stream no later stream commits, writes a line or moves its
+        bookmark, and the work in flight is waited for and its snapshots
+        released. A discarded fetch's BATCH files stay on disk with no
+        manifest line, as after a failed BATCH write; a discarded plan's
+        ``Observation`` (or a failed BATCH write's count) stays registered
+        with the session, as Spark has no public unregister call: at most
+        2 × (k + 1) per failed call. A stream sharing the fully qualified
+        name (and bookmark) of an earlier stream is planned only after that
+        stream is emitted. Workers inherit the caller's local properties
+        and tags in pyspark's pinned-thread mode (the default).
         """
-        from concurrent.futures import ThreadPoolExecutor
+        from concurrent.futures import Future, ThreadPoolExecutor
+
+        from pyspark import inheritable_thread_target
 
         streams = self._effective_streams()
+        fqns = [s.fully_qualified_name for s in streams]
         batch = bool(batch_mode and self.config.batch)
-        commits = [commit(s) if commit else None for s in streams]
-        if parallel <= 1:
-            from pyspark import inheritable_thread_target
+        args = [(s, batch, commit(s) if commit else None) for s in streams]
+        k = max(1, parallel)
 
-            results = []
-            with ThreadPoolExecutor(max_workers=1) as planner:
-                # outside pinned-thread mode (PYSPARK_PIN_THREAD=false)
-                # pyspark returns its argument, the session, not a decorator
-                inherit = inheritable_thread_target(self.spark)
-                plan_ahead = (
-                    self._plan if inherit is self.spark else inherit(self._plan)
-                )
-                ahead = None  # the next stream's plan, in flight
-                table = commit is not None  # a table target
-                for spec, nxt, c in zip(streams, streams[1:] + [None], commits):
-                    plan = ahead.result() if ahead else self._plan(spec, batch, table)
-                    ahead = None
-                    fqn = spec.fully_qualified_name
-                    if nxt and nxt.fully_qualified_name != fqn:
-                        ahead = planner.submit(plan_ahead, nxt, batch, table)
-                    results.append(self._deliver(plan, c))
-        else:
-            import threading
+        def fetch(planned: Future) -> _Plan:
+            return self._fetch(planned.result())
 
-            lock = threading.Lock()
-            inner_write = self.write
-
-            def locked_write(line: str) -> None:
-                with lock:
-                    inner_write(line)
-
-            self.write = locked_write
+        # outside pinned-thread mode (PYSPARK_PIN_THREAD=false) pyspark
+        # returns its argument, the session, not a decorator
+        inherit = inheritable_thread_target(self.spark)
+        on_worker = (lambda f: f) if inherit is self.spark else inherit
+        results = []
+        planned: dict[int, Future] = {}  # streams i+1 .. i+k, not fetching
+        fetched: dict[int, Future] = {}  # streams i+1 .. i+k-1
+        nxt = 0  # the first stream not yet planned
+        with ThreadPoolExecutor(max_workers=k) as pool:
             try:
-                with ThreadPoolExecutor(max_workers=parallel) as pool:
-                    results = list(
-                        pool.map(lambda s, c: self._sync(s, batch, c), streams, commits)
-                    )
-            finally:
-                self.write = inner_write
+                for i in range(len(streams)):
+                    ahead = fetched.pop(i, None) or planned.pop(i, None)
+                    plan = ahead.result() if ahead else self._plan(*args[i])
+                    nxt = max(nxt, i + 1)
+                    while nxt <= min(i + k, len(streams) - 1) and (
+                        fqns[nxt] not in fqns[i:nxt]
+                    ):
+                        planned[nxt] = pool.submit(on_worker(self._plan), *args[nxt])
+                        nxt += 1
+                    for j in [j for j in planned if j < i + k]:
+                        fetched[j] = pool.submit(on_worker(fetch), planned.pop(j))
+                    if plan.fetch_s is None:
+                        self._fetch(plan)
+                    results.append(self._emit(plan))
+            except BaseException:
+                for f in [*planned.values(), *fetched.values()]:
+                    if f.exception() is None:  # else raised already
+                        f.result().release()
+                raise
         self.state.flush()
         return results
 
