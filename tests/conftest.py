@@ -3,7 +3,14 @@ import sys
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Python workers (and test subprocesses) import the package too, e.g. to
+# unpickle the jsonb pandas UDFs, whatever directory pytest started in;
+# the JVM passes its environment's PYTHONPATH on to the workers it starts
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    [ROOT] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 

@@ -657,3 +657,59 @@ def test_hash_predicate_partitions_live(spark, derby_url):
     # slices genuinely split the table (no empty-bucket degenerate pass)
     sizes = [len(p) for p in df.select("id").rdd.glom().collect()]
     assert sum(1 for s in sizes if s > 0) >= 2
+
+
+def test_alias_reads_its_own_snapshot_at_k2(spark, derby_url, monkeypatch):
+    """A keyed live stream and its ``__source__`` alias have equal
+    extracts, and both take the persisted path; Spark caches equal plans
+    once. Synced with ``parallel=2``, a source row inserted after the
+    first stream's emit must not reach the alias's lines past the alias's
+    stored bookmark: the alias's lines and bookmark come from one read."""
+    def load(ids, mode):
+        (
+            spark.range(*ids)
+            .selectExpr("id", "concat('n', id) as name")
+            .write.format("jdbc")
+            .option("url", derby_url)
+            .option("driver", DERBY_DRIVER)
+            .option("dbtable", "ALIASED")
+            .mode(mode)
+            .save()
+        )
+
+    load((0, 5), "overwrite")
+    spec = StreamSpec(
+        name="aliased",
+        sql='SELECT "id", "name" FROM ALIASED WHERE "id" > :rep_key_val',
+        columns=[
+            ColumnSpec("id", "int8", nullable=False),
+            ColumnSpec("name", "text"),
+        ],
+        key_properties=["id"],
+        replication_key="id",
+        replication_key_value_start=-1,
+        database="derbydb",
+    )
+    out, state = io.StringIO(), StateStore()
+    tap = _tap(
+        spark, derby_url, spec, state=state, out=out,
+        stream_maps={"aliased_copy": {"__source__": "aliased"}},
+    )
+    real_emit = SparkTap._emit
+
+    def emit(self, plan):
+        res = real_emit(self, plan)
+        if plan.spec.name == "aliased":
+            load((5, 6), "append")
+        return res
+
+    monkeypatch.setattr(SparkTap, "_emit", emit)
+    res = tap.sync_all(parallel=2)
+    alias = "derbydb-public-aliased_copy"
+    msgs = [json.loads(ln) for ln in out.getvalue().splitlines()]
+    ids = [
+        m["record"]["id"] for m in msgs if m["type"] == "RECORD" and m["stream"] == alias
+    ]
+    bookmark = state.get_bookmark(alias, "id")
+    assert sorted(ids) == list(range(0, bookmark + 1))
+    assert res[1].stream == alias and res[1].new_bookmark == bookmark

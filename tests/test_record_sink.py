@@ -70,6 +70,37 @@ GOLDEN_LINES = [
 ]
 
 
+# three partitions of two rows each: the lines must keep partition order
+PARTITIONED_SQL = """
+SELECT id,
+       timestampadd(HOUR, CAST(id AS INT), timestamp'2021-11-22 11:45:11.062824') AS ts,
+       named_struct('k', id, 'd', date_add(date'2024-02-28', CAST(id AS INT))) AS st,
+       map('n', id * 10) AS m
+FROM range(0, 6, 1, 3)
+"""
+
+PARTITIONED_LINES = [
+    '{"type": "RECORD", "stream": "spark-public-golden", "record": {'
+    '"id": 0, "ts": "2021-11-22T11:45:11.062824+00:00", '
+    '"st": {"k": 0, "d": "2024-02-28"}, "m": {"n": 0}}}\n',
+    '{"type": "RECORD", "stream": "spark-public-golden", "record": {'
+    '"id": 1, "ts": "2021-11-22T12:45:11.062824+00:00", '
+    '"st": {"k": 1, "d": "2024-02-29"}, "m": {"n": 10}}}\n',
+    '{"type": "RECORD", "stream": "spark-public-golden", "record": {'
+    '"id": 2, "ts": "2021-11-22T13:45:11.062824+00:00", '
+    '"st": {"k": 2, "d": "2024-03-01"}, "m": {"n": 20}}}\n',
+    '{"type": "RECORD", "stream": "spark-public-golden", "record": {'
+    '"id": 3, "ts": "2021-11-22T14:45:11.062824+00:00", '
+    '"st": {"k": 3, "d": "2024-03-02"}, "m": {"n": 30}}}\n',
+    '{"type": "RECORD", "stream": "spark-public-golden", "record": {'
+    '"id": 4, "ts": "2021-11-22T15:45:11.062824+00:00", '
+    '"st": {"k": 4, "d": "2024-03-03"}, "m": {"n": 40}}}\n',
+    '{"type": "RECORD", "stream": "spark-public-golden", "record": {'
+    '"id": 5, "ts": "2021-11-22T16:45:11.062824+00:00", '
+    '"st": {"k": 5, "d": "2024-03-04"}, "m": {"n": 50}}}\n',
+]
+
+
 def _spec(name: str, **kw) -> StreamSpec:
     return StreamSpec(
         name=name, sql="x", columns=[ColumnSpec("id", "int8")],
@@ -79,8 +110,7 @@ def _spec(name: str, **kw) -> StreamSpec:
 
 @pytest.fixture
 def utc_driver(monkeypatch):
-    """Pin the driver process's zone to UTC: the streaming path reads
-    TIMESTAMP values back in the driver's local zone."""
+    """Pin the driver process's zone to UTC; ``driver_tz`` sets others."""
     monkeypatch.setenv("TZ", "UTC")
     time.tzset()
     yield
@@ -99,19 +129,75 @@ def driver_tz(monkeypatch):
     time.tzset()
 
 
-@pytest.mark.parametrize("collect", [True, False], ids=["arrow", "streaming"])
-def test_record_lines_golden_bytes(spark, utc_driver, collect):
-    """Every type ``jsonable_value`` handles, on both RECORD paths:
-    aware/naive timestamps (with and without microseconds), date,
-    Decimal, binary, struct, array, MapType at the top level and nested
-    in a struct and an array (Arrow returns maps as key/value pairs), and
-    a row of nulls."""
+@pytest.mark.parametrize(
+    "collect, sql, lines",
+    [
+        pytest.param(True, GOLDEN_SQL, GOLDEN_LINES, id="arrow"),
+        pytest.param(False, GOLDEN_SQL, GOLDEN_LINES, id="streaming"),
+        pytest.param(True, PARTITIONED_SQL, PARTITIONED_LINES, id="arrow-partitioned"),
+        pytest.param(False, PARTITIONED_SQL, PARTITIONED_LINES, id="streaming-partitioned"),
+    ],
+)
+def test_record_lines_golden_bytes(spark, utc_driver, collect, sql, lines):
+    """Every type the serializer (``sink.records``) handles, on both
+    RECORD paths: aware/naive timestamps (with and without microseconds),
+    date, Decimal, binary, struct, array, MapType at the top level and
+    nested in a struct and an array (Arrow returns maps as key/value
+    pairs), and a row of nulls. A frame of several partitions keeps its
+    row order on both paths."""
+    df = spark.sql(sql)
+    if sql is PARTITIONED_SQL:
+        assert df.rdd.getNumPartitions() == 3
     out = io.StringIO()
-    n = sink.emit_record_messages(
-        spark.sql(GOLDEN_SQL), _spec("golden"), out.write, collect=collect
+    n = sink.emit_record_messages(df, _spec("golden"), out.write, collect=collect)
+    assert n == len(lines)
+    assert out.getvalue() == "".join(lines)
+
+
+def test_record_line_body_loads_without_the_package(tmp_path):
+    """The over-budget path's ``mapInArrow`` body runs in Python workers
+    that need not import this package: pickled as Spark ships it, it
+    loads and writes RECORD lines in a process whose cwd and
+    ``sys.path`` both exclude the repo. No JVM is involved."""
+    import functools
+    import os
+    import subprocess
+    import sys
+
+    import pyarrow as pa
+    from pyspark import cloudpickle
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    # the instant 2021-11-22 11:45:11.062824 UTC, as a Tokyo-zoned column
+    utc_ts = pa.array([dt.datetime(2021, 11, 22, 11, 45, 11, 62824), None])
+    batch = pa.RecordBatch.from_pydict({
+        "id": [1, 2],
+        "ts": utc_ts.cast(pa.timestamp("us", tz="Asia/Tokyo")),
+        "m": pa.array([[("a", 1)], None], pa.map_(pa.string(), pa.int64())),
+    })
+    body = functools.partial(sink._line_batches, "spark-public-golden")
+    script = (
+        "import pickle, sys\n"
+        "body, batches = pickle.loads(sys.stdin.buffer.read())\n"
+        "assert not any(p.startswith(sys.argv[1]) for p in sys.path), sys.path\n"
+        "assert 'youcruit_tap_rawpostgresql_spark' not in sys.modules\n"
+        "for out in body(batches):\n"
+        "    sys.stdout.write(''.join(out.column(0).to_pylist()))\n"
     )
-    assert n == 2
-    assert out.getvalue() == "".join(GOLDEN_LINES)
+    res = subprocess.run(
+        [sys.executable, "-I", "-c", script, root],
+        input=cloudpickle.dumps((body, [batch])),
+        capture_output=True,
+        cwd=tmp_path,
+        check=False,
+    )
+    assert res.returncode == 0, res.stderr.decode()
+    assert res.stdout.decode() == (
+        '{"type": "RECORD", "stream": "spark-public-golden", "record": {'
+        '"id": 1, "ts": "2021-11-22T11:45:11.062824+00:00", "m": {"a": 1}}}\n'
+        '{"type": "RECORD", "stream": "spark-public-golden", "record": {'
+        '"id": 2, "ts": null, "m": null}}\n'
+    )
 
 
 @pytest.mark.parametrize("collect", [True, False], ids=["arrow", "streaming"])
@@ -135,8 +221,9 @@ def test_arrow_records_ignore_driver_zone(spark, driver_tz):
 
 @pytest.mark.parametrize("zone", ["Asia/Tokyo", "America/New_York"])
 def test_streamed_records_ignore_driver_zone(spark, driver_tz, monkeypatch, zone):
-    """The partition-at-a-time path reads TIMESTAMP values through ``Row``
-    in the driver's zone; its lines must still equal the Arrow path's."""
+    """The partition-at-a-time path serializes on the Python workers and
+    streams the lines to the driver; whatever the driver's zone, they
+    must equal the Arrow path's."""
     monkeypatch.setattr(sink, "RECORD_COLLECT_BUDGET", 0)
     driver_tz(zone)
     out = io.StringIO()

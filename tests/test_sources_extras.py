@@ -418,6 +418,43 @@ def test_singer_batch_writer_transactional_manifest(spark, sf_dir, tmp_path):
     assert src.exceptAll(back).count() == 0 and back.exceptAll(src).count() == 0
 
 
+def test_singer_batch_writer_ignores_the_process_zone(tmp_path):
+    """A TIMESTAMP written through ``df.write.format("singer_batch")`` in
+    a process whose zone is Asia/Tokyo (its JVM and Python workers too)
+    lands in the file as the same UTC instant and reads back unchanged."""
+    import json as _json
+    import os
+    import subprocess
+    import sys
+
+    script = """
+import glob, gzip, json, sys
+from youcruit_tap_rawpostgresql_spark.session import get_session
+from youcruit_tap_rawpostgresql_spark.sources import singer_batch
+spark = get_session(app_name="tokyo", cpus=1)
+singer_batch.register(spark)
+root = sys.argv[1]
+df = spark.sql("SELECT 1 AS id, timestamp'2024-01-01 00:00:00' AS ts")
+df.write.format("singer_batch").mode("overwrite").save(root)
+lines = []
+for f in sorted(glob.glob(root + "/*.json.gz")):
+    with gzip.open(f, "rt") as fh:
+        lines += [json.loads(ln) for ln in fh]
+back = spark.read.format("singer_batch").schema(df.schema).load(root)
+same = back.exceptAll(df).count() == df.exceptAll(back).count() == 0
+print(json.dumps({"lines": lines, "same": same}))
+"""
+    env = dict(os.environ, TZ="Asia/Tokyo", SPARK_GRAFT_DRIVER_MEM="1g")
+    res = subprocess.run(
+        [sys.executable, "-c", script, str(tmp_path / "export")],
+        env=env, capture_output=True, text=True, timeout=300, check=False,
+    )
+    assert res.returncode == 0, res.stderr[-3000:]
+    got = _json.loads(res.stdout.strip().splitlines()[-1])
+    assert got["lines"] == [{"id": 1, "ts": "2024-01-01T00:00:00+00:00"}]
+    assert got["same"]
+
+
 def test_singer_batch_stream_offset_prefilter(tmp_path, monkeypatch):
     """Driver-side manifest scanning is incremental: manifests at or
     below the returned offset are name-filtered BEFORE json parsing, so

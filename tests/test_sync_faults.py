@@ -288,12 +288,14 @@ def test_state_file_never_runs_ahead_of_delivery(
     spark, fault_src, tmp_path, monkeypatch, fault, target
 ):
     """Two streams synced by ``sync_all(parallel=2)``, so the second is
-    planned and fetched on a worker while the first is emitted. A fault
-    in the second stream's extract (raised on that worker), in
-    ``set_bookmark`` or inside ``flush``'s write stops the sync. The state
-    file still parses, every bookmark in it is covered by rows emitted or
-    committed, no snapshot stays cached, and a restart from the file
-    delivers both slices (the keyed upsert exactly once)."""
+    planned on a worker while the first is emitted, and fetched there too
+    unless it persists a snapshot equal to the first's. A fault in the
+    second stream's extract (raised on that worker), in ``set_bookmark``
+    or inside ``flush``'s write stops the sync. The state file still
+    parses, no temp file is left beside it, every bookmark in it is
+    covered by rows emitted or committed, no snapshot stays cached, and a
+    restart from the file delivers both slices (the keyed upsert exactly
+    once)."""
     streams = [_spec(), dataclasses.replace(_spec(), name="faults_b")]
     run = Run(spark, tmp_path, streams=streams)
     base = tmp_path / "vt"
@@ -327,6 +329,7 @@ def test_state_file_never_runs_ahead_of_delivery(
     if fault == "extract":
         assert threads and threads[0] is not threading.current_thread()
     stored = _stored(run)
+    assert not os.path.exists(f"{run.state_path}.tmp")
     # a commit target flushes each stream's bookmark after its commit
     flushed = fault == "extract" and target == "versioned"
     assert stored == {FQN: 5 if flushed else START, SECOND: START}

@@ -19,24 +19,31 @@ Scale: the write parallelizes across partitions; there is no driver-side
 row loop. ``coalesce`` is applied only when the caller asks for
 reference-exact global rotation (small exports).
 
-RECORD messages cross the driver. A frame whose optimizer size estimate
-fits ``RECORD_COLLECT_BUDGET`` is collected by ONE Arrow action and
-serialized column-wise; a larger (or unsized) frame streams one partition
-at a time through ``toLocalIterator``. Both paths share one
-serialization contract (``jsonable_value``) and produce the same lines.
+RECORD messages cross the driver. One function, ``records``, builds every
+Python-side JSON record from an Arrow batch. A frame whose optimizer size
+estimate fits ``RECORD_COLLECT_BUDGET`` is collected by ONE Arrow action
+and serialized on the driver; a larger (or unsized) frame is serialized
+on the Python workers (``mapInArrow``) and its lines stream one partition
+at a time through ``toLocalIterator``; the ``singer_batch`` DataSource
+writer serializes in its write tasks. So every path writes the same bytes
+for the same values, whatever the local zone of the process.
 """
 
 from __future__ import annotations
 
+import base64
 import datetime
+import functools
 import glob
 import json
 import logging
 import os
+import sys
 import uuid as _uuid
 from dataclasses import dataclass
 from urllib.parse import urlparse
 
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame
 
 from youcruit_tap_rawpostgresql_spark.spec import BatchSinkConfig, StreamSpec
@@ -54,6 +61,10 @@ RECORD_COLLECT_BUDGET = 64 << 20
 
 logger = logging.getLogger(__name__)
 _size_probe_warned = False
+
+# ``records`` also runs in Python workers (``_line_batches``), which need
+# not be able to import this package
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 
 def _optimizer_size_bytes(df: DataFrame) -> int:
@@ -224,36 +235,15 @@ def emit_schema_message(spec: StreamSpec, write) -> None:
     )
 
 
-def jsonable_value(v):
-    """THE record-serialization contract for every JSON-emitting path
-    (RECORD messages here, the singer_batch DataSource writer): naive
-    timestamps are pinned to +00:00 (session TZ is UTC), dates ISO,
-    decimals as numbers, binary as base64, structs as objects."""
-    import base64
-    import datetime as _dt
-    import decimal as _dec
-
-    if isinstance(v, _dt.datetime):
-        return v.isoformat() + ("+00:00" if v.tzinfo is None else "")
-    if isinstance(v, _dt.date):
-        return v.isoformat()
-    if isinstance(v, _dec.Decimal):  # declared numeric/decimal columns
-        return float(v)
-    if isinstance(v, (bytes, bytearray)):  # declared bytea/binary
-        return base64.b64encode(bytes(v)).decode("ascii")
-    if isinstance(v, dict):
-        return {k: jsonable_value(x) for k, x in v.items()}
-    if isinstance(v, (list, tuple)):
-        return [jsonable_value(x) for x in v]
-    return v
-
-
 def _arrow_converter(t):
-    """Converter from an Arrow column value to its ``jsonable_value`` form,
-    or ``None`` when the Arrow type's Python values are JSON-native
-    already. Arrow returns maps as lists of key/value pairs; they become
-    objects again, at any depth, as ``Row.asDict(recursive=True)`` gives
-    them on the streaming path."""
+    """Converter from an Arrow value of type ``t`` to its JSON form, or
+    ``None`` when the type's Python values are JSON-native already
+    (integers, floats, booleans, strings, nulls). TIMESTAMP arrives aware
+    in the session zone and is written in UTC; TIMESTAMP_NTZ arrives naive
+    and its wall clock is written as UTC. Both are ISO-8601 with
+    ``+00:00``, so no process's local zone enters a line. Dates are ISO,
+    decimals numbers, binary base64, and maps (Arrow gives them as
+    key/value pairs) objects, at any depth of structs, lists and maps."""
     import pyarrow as pa
 
     pt = pa.types
@@ -272,71 +262,68 @@ def _arrow_converter(t):
         if item is None:
             return None
         return lambda v: None if v is None else [item(x) for x in v]
-    if pt.is_timestamp(t) and t.tz is not None:
-        # TIMESTAMP arrives aware in the session zone; pin it to +00:00
+    if pt.is_timestamp(t):
         utc = datetime.timezone.utc
-        return lambda v: None if v is None else jsonable_value(v.astimezone(utc))
-    if (
-        pt.is_integer(t)
-        or pt.is_floating(t)
-        or pt.is_boolean(t)
-        or pt.is_string(t)
-        or pt.is_large_string(t)
-        or pt.is_null(t)
-    ):
-        return None
-    # naive TIMESTAMP_NTZ, dates, decimals, binary
-    return jsonable_value
-
-
-def _row_converter(t):
-    """Converter that pins the TIMESTAMP values a ``Row`` holds (naive, in
-    the DRIVER process's local zone) to aware UTC, at any depth of structs,
-    arrays and map values (as ``Row.asDict(recursive=True)`` gives them),
-    or ``None`` when ``t`` holds no TIMESTAMP. TIMESTAMP_NTZ values are
-    wall clocks and stay as they are."""
-    from pyspark.sql import types as T
-
-    if isinstance(t, T.TimestampType):
-        utc = datetime.timezone.utc
-        return lambda v: None if v is None else v.astimezone(utc)
-    if isinstance(t, T.StructType):
-        fields = [(f.name, _row_converter(f.dataType)) for f in t.fields]
-        if all(c is None for _, c in fields):
-            return None
-        return lambda v: None if v is None else {
-            k: v[k] if c is None else c(v[k]) for k, c in fields
-        }
-    if isinstance(t, T.ArrayType):
-        item = _row_converter(t.elementType)
-        if item is None:
-            return None
-        return lambda v: None if v is None else [item(x) for x in v]
-    if isinstance(t, T.MapType):
-        value = _row_converter(t.valueType)
-        if value is None:
-            return None
-        return lambda v: None if v is None else {k: value(x) for k, x in v.items()}
+        return lambda v: None if v is None else (
+            v.astimezone(utc).isoformat() if v.tzinfo else v.isoformat() + "+00:00"
+        )
+    if pt.is_date(t):
+        return lambda v: None if v is None else v.isoformat()
+    if pt.is_decimal(t):
+        return lambda v: None if v is None else float(v)
+    if pt.is_binary(t) or pt.is_large_binary(t):
+        return lambda v: None if v is None else base64.b64encode(v).decode("ascii")
     return None
+
+
+def records(batch):
+    """The record dicts of one Arrow batch, ready for ``json.dumps``: the
+    one Python-side record serializer. The in-budget RECORD collect runs
+    it on the driver, the over-budget RECORD path on the Python workers
+    (``_line_batches``), and the ``singer_batch`` DataSource writer in
+    its write tasks."""
+    names = batch.schema.names
+    cols = []
+    for col, field in zip(batch.columns, batch.schema):
+        conv = _arrow_converter(field.type)
+        vals = col.to_pylist()
+        cols.append(vals if conv is None else [conv(v) for v in vals])
+    rows = zip(*cols) if cols else [()] * batch.num_rows
+    return (dict(zip(names, values)) for values in rows)
+
+
+def _record_lines(stream: str, batch) -> list[str]:
+    """The RECORD lines of one Arrow batch."""
+    return [
+        json.dumps({"type": "RECORD", "stream": stream, "record": rec}) + "\n"
+        for rec in records(batch)
+    ]
+
+
+def _line_batches(stream: str, batches):
+    """``mapInArrow`` body (bound to ``stream`` by ``functools.partial``):
+    each batch's RECORD lines as one ``line`` column. A worker runs it
+    without importing this package: the module is pickled by value."""
+    import pyarrow as pa
+
+    for batch in batches:
+        yield pa.RecordBatch.from_pydict({"line": _record_lines(stream, batch)})
 
 
 def emit_record_messages(
     df: DataFrame, spec: StreamSpec, write, collect: bool | None = None
 ) -> int:
     """Emit one RECORD message per row of ``df``; returns the row count.
+    Every line is serialized from Arrow batches by ``records``.
 
     ``collect=True`` runs ONE Arrow collect action, or takes ``df`` as the
-    batches one returned, and serializes them column-wise (converters per
-    Arrow column type; JSON-native columns skip ``jsonable_value``).
-    TIMESTAMP values arrive zone-aware and are written in UTC, so the
-    lines do not depend on the driver's time zone. The batches are read as
-    the JVM sends them: ``toArrow``'s final cast to the declared schema
-    rejects a null struct whose fields are declared non-null.
-    ``collect=False`` streams rows one partition at a time through
-    ``toLocalIterator`` — driver memory stays bounded for frames of any
-    size; its ``Row`` values read TIMESTAMP in the driver's zone, so
-    converters from the Spark schema pin them to UTC and both paths write
-    the same lines. ``None`` chooses by ``fits_record_budget``.
+    batches one returned, and serializes them on the driver. The batches
+    are read as the JVM sends them: ``toArrow``'s final cast to the
+    declared schema rejects a null struct whose fields are declared
+    non-null. ``collect=False`` serializes on the Python workers
+    (``mapInArrow``) and streams the lines one partition at a time
+    through ``toLocalIterator``, so driver memory stays bounded for
+    frames of any size. ``None`` chooses by ``fits_record_budget``.
 
     Observed metrics on ``df`` (``DataFrame.observe``) are reported by the
     Arrow collect; ``toLocalIterator`` never completes an ``Observation``.
@@ -348,28 +335,14 @@ def emit_record_messages(
     stream = spec.fully_qualified_name
     n = 0
     if not collect:
-        convs = {f.name: c for f in df.schema.fields if (c := _row_converter(f.dataType))}
-        for row in df.toLocalIterator():
-            rec = row.asDict(recursive=True)
-            for k, conv in convs.items():
-                rec[k] = conv(rec[k])
-            rec = {k: jsonable_value(v) for k, v in rec.items()}
-            write(json.dumps({"type": "RECORD", "stream": stream, "record": rec}) + "\n")
+        body = functools.partial(_line_batches, stream)
+        for row in df.mapInArrow(body, "line string").toLocalIterator():
+            write(row.line)
             n += 1
         return n
-    batches = df if isinstance(df, list) else df._collect_as_arrow()
-    if not batches:
-        return 0
-    names = batches[0].schema.names
-    convs = [_arrow_converter(f.type) for f in batches[0].schema]
-    for batch in batches:
-        cols = []
-        for col, conv in zip(batch.columns, convs):
-            vals = col.to_pylist()
-            cols.append(vals if conv is None else [conv(v) for v in vals])
-        for values in zip(*cols) if cols else [()] * batch.num_rows:
-            rec = dict(zip(names, values))
-            write(json.dumps({"type": "RECORD", "stream": stream, "record": rec}) + "\n")
+    for batch in df if isinstance(df, list) else df._collect_as_arrow():
+        for line in _record_lines(stream, batch):
+            write(line)
         n += batch.num_rows
     return n
 

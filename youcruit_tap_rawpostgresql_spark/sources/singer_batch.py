@@ -28,9 +28,9 @@ from dataclasses import dataclass
 
 from pyspark.sql.datasource import (
     DataSource,
+    DataSourceArrowWriter,
     DataSourceReader,
     DataSourceStreamReader,
-    DataSourceWriter,
     InputPartition,
     WriterCommitMessage,
 )
@@ -232,8 +232,9 @@ def _arrow_fast_schema(schema):
     and the per-row conversion gone entirely).
 
     Eligible: integer/float/string/boolean scalars, and TIMESTAMP — the
-    sink writes ISO-8601 with an explicit offset (``jsonable_value``
-    pins naive to +00:00), which Arrow parses into timestamp(us, UTC),
+    writers put ISO-8601 with an explicit offset (``sink.records`` writes
+    every timestamp in UTC with +00:00, Spark's JSON writer uses
+    ``sink.ISO_TS_FORMAT``), which Arrow parses into timestamp(us, UTC),
     bit-identical to the ``fromisoformat`` path (oracle-gated).
     NOT eligible (fall back per-row): decimals (JSON floats must become
     ``Decimal(str(v))``, not a binary-double cast), binary (base64
@@ -328,7 +329,7 @@ class SingerBatchDataSource(DataSource):
         return SingerBatchStreamReader(schema, self.options)
 
     def writer(self, schema, overwrite):
-        return SingerBatchWriter(schema, self.options, overwrite)
+        return SingerBatchWriter(self.options, overwrite)
 
 
 def register(spark) -> None:
@@ -439,7 +440,7 @@ class _WroteFiles(WriterCommitMessage):
     n_records: int
 
 
-class SingerBatchWriter(DataSourceWriter):
+class SingerBatchWriter(DataSourceArrowWriter):
     """Transactional gzip-JSONL batch export through the DataSource write
     protocol: each task writes its own rotated ``.json.gz`` files and
     reports them in a commit message; ``commit()`` runs ONCE on the driver
@@ -452,9 +453,10 @@ class SingerBatchWriter(DataSourceWriter):
     consumes), and a manifest read returns exactly one job's output while
     a directory read returns the union — both semantics are deliberate.
     ``mode("overwrite")`` clears previous data files AND manifests up
-    front. Record serialization delegates to ``sink.jsonable_value`` —
-    one contract for every JSON-emitting path (naive timestamps pinned
-    to +00:00, structs as objects, binary as base64).
+    front. Each task gets Arrow batches and serializes them with
+    ``sink.records``, the serializer of the RECORD messages too, so a
+    file line equals a RECORD message's ``record`` (timestamps in UTC
+    whatever the worker's zone, structs as objects, binary as base64).
 
     Local filesystems only: remote schemes raise up front instead of
     silently writing to a local directory named ``s3a:/...``.
@@ -462,11 +464,10 @@ class SingerBatchWriter(DataSourceWriter):
     Scale: same parallel-write shape as the sink (every task rotates at
     ``batch_size``); the only driver work is the file-list merge."""
 
-    def __init__(self, schema, options, overwrite: bool):
+    def __init__(self, options, overwrite: bool):
         import glob as _glob
         import os
 
-        self.schema = schema
         self.path = options.get("path")
         if not self.path:
             raise ValueError("singer_batch write: .save(root) is required")
@@ -494,17 +495,16 @@ class SingerBatchWriter(DataSourceWriter):
         import os
         import uuid as _uuid
 
-        from youcruit_tap_rawpostgresql_spark.sink import jsonable_value
+        from youcruit_tap_rawpostgresql_spark.sink import records
 
         root = _local_path(self.path)
-        names = self.schema.fieldNames()
         urls: list[str] = []
         n_total = 0
         fh = None
         n_in_file = 0
         task_id = _uuid.uuid4().hex[:12]
         try:
-            for row in iterator:
+            for rec in (r for batch in iterator for r in records(batch)):
                 if fh is None or n_in_file >= self.batch_size:
                     if fh is not None:
                         fh.close()
@@ -516,10 +516,6 @@ class SingerBatchWriter(DataSourceWriter):
                     fh = gzip.open(fpath, "wt")
                     urls.append(f"file://{fpath}")
                     n_in_file = 0
-                rec = {
-                    k: jsonable_value(v)
-                    for k, v in row.asDict(recursive=True).items()
-                }
                 fh.write(json.dumps(rec) + "\n")
                 n_in_file += 1
                 n_total += 1

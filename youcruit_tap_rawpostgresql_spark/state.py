@@ -55,8 +55,18 @@ class StateStore:
         return self._state
 
     def flush(self) -> None:
+        """Replace the state file atomically: the state goes to a temp file,
+        is fsynced, then renamed over the file. A failed write removes the
+        temp file and re-raises; the state file stays as it was."""
         if self.path:
             tmp = self.path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(self._state, f, indent=2, default=str)
-            os.replace(tmp, self.path)
+            try:
+                with open(tmp, "w") as f:
+                    json.dump(self._state, f, indent=2, default=str)
+                    f.flush()
+                    os.fsync(f.fileno())
+                os.replace(tmp, self.path)
+            except BaseException:
+                if os.path.exists(tmp):
+                    os.remove(tmp)
+                raise

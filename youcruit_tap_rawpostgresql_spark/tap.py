@@ -457,8 +457,12 @@ class SparkTap:
         with the session, as Spark has no public unregister call: at most
         2 × (k + 1) per failed call. A stream sharing the fully qualified
         name (and bookmark) of an earlier stream is planned only after that
-        stream is emitted. Workers inherit the caller's local properties
-        and tags in pyspark's pinned-thread mode (the default).
+        stream is emitted. A persist-mode stream sharing its SQL with an
+        earlier stream (a ``__source__`` alias, say) is fetched only after
+        that stream is emitted: equal extracts share one Spark cache entry,
+        which the earlier stream's release drops. Workers inherit the
+        caller's local properties and tags in pyspark's pinned-thread mode
+        (the default).
         """
         from concurrent.futures import Future, ThreadPoolExecutor
 
@@ -466,12 +470,16 @@ class SparkTap:
 
         streams = self._effective_streams()
         fqns = [s.fully_qualified_name for s in streams]
+        sqls = [s.sql for s in streams]
         batch = bool(batch_mode and self.config.batch)
         args = [(s, batch, commit(s) if commit else None) for s in streams]
         k = max(1, parallel)
 
-        def fetch(planned: Future) -> _Plan:
-            return self._fetch(planned.result())
+        def fetch(j: int, planned: Future) -> _Plan:
+            plan = planned.result()
+            if plan.mode == "persist" and sqls[j] in sqls[:j]:
+                return plan  # the calling thread fetches it (docstring)
+            return self._fetch(plan)
 
         # outside pinned-thread mode (PYSPARK_PIN_THREAD=false) pyspark
         # returns its argument, the session, not a decorator
@@ -493,7 +501,7 @@ class SparkTap:
                         planned[nxt] = pool.submit(on_worker(self._plan), *args[nxt])
                         nxt += 1
                     for j in [j for j in planned if j < i + k]:
-                        fetched[j] = pool.submit(on_worker(fetch), planned.pop(j))
+                        fetched[j] = pool.submit(on_worker(fetch), j, planned.pop(j))
                     if plan.fetch_s is None:
                         self._fetch(plan)
                     results.append(self._emit(plan))
