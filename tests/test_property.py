@@ -410,7 +410,7 @@ def test_versioned_table_model_property(spark, tmp_path):
             )
             model.update(batch)
         elif op == "upsert":
-            versioned.upsert_snapshot(spark, df_of(batch), root, "k")
+            versioned.upsert_snapshot_pruned(spark, df_of(batch), root, "k")
             model.update(batch)
         else:
             versioned.upsert_snapshot_pruned(spark, df_of(batch), root, "k")
@@ -467,7 +467,7 @@ def test_versioned_table_model_property_composite_key(spark, tmp_path):
             )
             model = dict(batch)
         elif op == "upsert":
-            versioned.upsert_snapshot(spark, df_of(batch), root, keys)
+            versioned.upsert_snapshot_pruned(spark, df_of(batch), root, keys)
             model.update(batch)
         else:
             versioned.upsert_snapshot_pruned(spark, df_of(batch), root, keys)

@@ -600,7 +600,7 @@ def test_versioned_table_time_travel_and_conflict(spark, sf_dir, tmp_path):
     assert versioned.read_version(spark, root, 1).count() == nation.count()
     # upsert: rename one nation
     upd = nation.filter("n_nationkey = 3").withColumn("n_name", F.lit("RENAMED"))
-    v2 = versioned.upsert_snapshot(spark, upd, root, "n_nationkey")
+    v2 = versioned.upsert_snapshot_pruned(spark, upd, root, "n_nationkey")[0]
     assert v2 == 2
     cur = versioned.read_version(spark, root)
     assert cur.count() == nation.count()
@@ -722,7 +722,7 @@ def test_versioned_schema_evolution_added_column(spark, tmp_path):
         [(3, "c", 1.5)], "k long, v string, score double"
     )
     versioned.commit_snapshot(v1_df, root, mode="append")
-    cur = versioned.read_version_merged(spark, root)
+    cur = versioned.read_version(spark, root)
     assert set(cur.columns) == {"k", "v", "score"}
     rows = {r["k"]: r for r in cur.collect()}
     assert rows[1]["score"] is None and rows[3]["score"] == 1.5
@@ -814,8 +814,6 @@ def test_versioned_upsert_rejects_null_keys(spark, tmp_path):
     bad = spark.createDataFrame([(None, "x")], "k long, v string")
     with pytest.raises(ValueError, match="NULL in a key column"):
         versioned.upsert_snapshot_pruned(spark, bad, root, "k")
-    with pytest.raises(ValueError, match="NULL in a key column"):
-        versioned.upsert_snapshot(spark, bad, root, "k")
     # composite: NULL in ONE of the key columns is just as fatal
     base2 = spark.createDataFrame(
         [(1, "a", "v")], "k1 long, k2 string, v string"

@@ -630,3 +630,36 @@ def test_failed_commit_stops_the_versioned_pipeline(spark, tmp_path, k):
     assert tap.state.get_bookmark("spark-public-keyed") is None
     assert path.read_bytes() == before
     assert _persisted_rdds(spark) == rdds
+
+
+def test_equal_plans_each_read_their_snapshot(spark, tmp_path):
+    """Two streams whose SQL differs only in spelling have one plan, which
+    Spark's cache gives one entry. At k = 2 the second is fetched only
+    after the first is emitted, so each commit reads its own persisted
+    snapshot."""
+    cols = [ColumnSpec("id", "int8", nullable=False), ColumnSpec("grp", "int8")]
+    specs = [
+        StreamSpec(name="spelled", sql="SELECT id, grp FROM vsync_src WHERE id > 2", columns=cols),
+        StreamSpec(name="respelled", sql="select id,  grp from vsync_src where id > 2", columns=cols),
+    ]
+    tap = SparkTap(TapConfig(streams=specs), spark, state=StateStore())
+    commits = tap.versioned_commits(str(tmp_path / "vt"))
+    cached: dict[str, list[bool]] = {}
+
+    def commit(spec):
+        def record(df):
+            plan = df.select("*")._jdf.queryExecution().withCachedData().toString()
+            cached.setdefault(spec.name, []).append("InMemoryRelation" in plan)
+            commits(spec)(df)
+
+        return record
+
+    spark.range(1, 6).selectExpr("id", "id % 2 AS grp").createOrReplaceTempView(
+        "vsync_src"
+    )
+    try:
+        results = tap.sync_all(parallel=2, commit=commit)
+    finally:
+        spark.catalog.dropTempView("vsync_src")
+    assert [r.record_count for r in results] == [3, 3]
+    assert cached == {"spelled": [True], "respelled": [True]}

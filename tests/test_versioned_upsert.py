@@ -58,12 +58,8 @@ def table(spark, tmp_path):
     return root
 
 
-@pytest.mark.parametrize("upsert", ["pruned", "naive"])
-def test_upsert_rejects_duplicate_keys(spark, table, tmp_path, upsert):
-    fn = {
-        "pruned": versioned.upsert_snapshot_pruned,
-        "naive": versioned.upsert_snapshot,
-    }[upsert]
+def test_upsert_rejects_duplicate_keys(spark, table, tmp_path):
+    fn = versioned.upsert_snapshot_pruned
     dup = spark.createDataFrame([(2, "x"), (3, "y"), (2, "z")], "k long, v string")
     with pytest.raises(ValueError, match="rows for key") as err:
         fn(spark, dup, table, "k")
@@ -164,6 +160,24 @@ def test_duplicate_key_slice_keeps_bookmark(spark, synced):
     assert versioned.current_version(root) == 0
 
 
+def test_first_keyed_sync_rejects_duplicate_keys(spark, tmp_path):
+    """The first keyed sync checks its keys as every later one does: a
+    repeated key raises before anything is committed, and no bookmark is
+    set."""
+    _write_source(spark, str(tmp_path / "src"), [(1, 0, "a"), (2, 0, "b"), (2, 1, "c")])
+    spec = _sync_spec()
+    state = StateStore()
+    tap = SparkTap(TapConfig(streams=[spec]), spark, state=state, write=io.StringIO().write)
+    root = str(tmp_path / "vt")
+    try:
+        with pytest.raises(ValueError, match="rows for key"):
+            tap.sync_stream_to_versioned(spec, root)
+    finally:
+        spark.catalog.dropTempView("vsrc")
+    assert versioned.current_version(root) is None
+    assert state.get_bookmark(spec.fully_qualified_name) is None
+
+
 def test_keyed_sync_step_job_budget(spark, synced):
     """One keyed sync step: the extract is cached and profiled by one
     aggregate each, the upsert's keys by one two-level aggregate, and no
@@ -194,10 +208,9 @@ def test_reads_run_no_job_before_action(spark, table):
     assert man[versioned._READ_SCHEMA] is True
     with spark_jobs(spark) as jobs:
         full = versioned.read_version(spark, table)
-        merged = versioned.read_version_merged(spark, table)
         pruned = versioned.read_version_pruned(spark, table, "k", 2, 3)
     assert jobs == []
-    assert full.schema == merged.schema == pruned.schema
+    assert full.schema == pruned.schema
     assert _rows(pruned, "k") == [(2,), (3,)]
 
 
@@ -211,8 +224,9 @@ def _strip_marker(root: str, version: int) -> None:
 
 
 def test_unmarked_manifest_reads_by_inference(spark, tmp_path):
-    """A manifest written without the marker reads exactly as footer
-    inference gives, even when its files disagree on the schema."""
+    """A manifest written without the marker reads by footer inference,
+    and returns every column, even when its files disagree on the
+    schema."""
     root = str(tmp_path / "vt")
     versioned.commit_snapshot(
         spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string"), root
@@ -224,18 +238,46 @@ def test_unmarked_manifest_reads_by_inference(spark, tmp_path):
     )
     for v in (0, 1):
         _strip_marker(root, v)
-    files = versioned._read_manifest(root, 1)["files"]
-    inferred = spark.read.parquet(*files)
     got = versioned.read_version(spark, root)
-    assert got.columns == inferred.columns
-    assert sorted(got.collect()) == sorted(inferred.collect())
-    merged = versioned.read_version_merged(spark, root)
-    assert set(merged.columns) == {"k", "v", "score"}
+    assert set(got.columns) == {"k", "v", "score"}
+    assert _rows(got, "k", "v", "score") == [(1, "a", None), (2, "b", None), (3, "c", 1.5)]
     # a commit on top of an unmarked base that carries files stays unmarked
     versioned.commit_snapshot(
         spark.createDataFrame([(4, "d")], "k long, v string"), root, mode="append"
     )
     assert versioned._READ_SCHEMA not in versioned._read_manifest(root, 2)
+
+
+def test_unmarked_table_keeps_every_column(spark, tmp_path):
+    """Manifests without the marker, whose first file holds a column the
+    second lacks: the full and the pruned read return that column, also
+    when the pruned read touches only the file without it or no file,
+    and compaction keeps its values."""
+    root = str(tmp_path / "vt")
+    versioned.commit_snapshot(
+        spark.createDataFrame([(1, "a", 1.5), (2, "b", 2.5)], "k long, v string, score double")
+        .coalesce(1),
+        root,
+        stats_columns=["k"],
+    )
+    appended = spark.createDataFrame([(3, "c")], "k long, v string")
+    versioned.commit_snapshot(appended, root, mode="append", stats_columns=["k"])
+    for v in (0, 1):
+        _strip_marker(root, v)
+    # as manifests recorded before the marker existed: the slice's schema
+    path = versioned._manifest_path(root, 1)
+    with open(path) as fh:
+        man = json.load(fh)
+    man["schema"] = appended.schema.json()
+    with open(path, "w") as fh:
+        json.dump(man, fh)
+    want = [(1, "a", 1.5), (2, "b", 2.5), (3, "c", None)]
+    assert _rows(versioned.read_version(spark, root), "k", "v", "score") == want
+    pruned = versioned.read_version_pruned(spark, root, "k", 3, 3)
+    assert _rows(pruned, "k", "v", "score") == [(3, "c", None)]
+    assert set(versioned.read_version_pruned(spark, root, "k", 7, 9).columns) == {"k", "v", "score"}
+    cv, _, _ = versioned.compact_version(spark, root)
+    assert _rows(versioned.read_version(spark, root, cv), "k", "v", "score") == want
 
 
 def test_read_schema_on_type_changes(spark, tmp_path):

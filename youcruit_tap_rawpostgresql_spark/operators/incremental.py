@@ -59,9 +59,7 @@ def resolve_starting_bookmark(spec: StreamSpec, state: StateStore | None) -> Any
     return spec.replication_key_value_start
 
 
-def apply_replication_filter(
-    df: DataFrame, spec: StreamSpec, bookmark: Any, inclusive: bool = False
-) -> DataFrame:
+def apply_replication_filter(df: DataFrame, spec: StreamSpec, bookmark: Any) -> DataFrame:
     """Filter rows newer than the bookmark (pushed down by Catalyst)."""
     if spec.replication_key is None or bookmark is None:
         return df
@@ -71,7 +69,7 @@ def apply_replication_filter(
     dtype = dict(df.dtypes).get(spec.replication_key)
     if dtype:
         lit = lit.cast(dtype)
-    return df.filter(col >= lit if inclusive else col > lit)
+    return df.filter(col > lit)
 
 
 def bookmark_max(df: DataFrame, key: str):

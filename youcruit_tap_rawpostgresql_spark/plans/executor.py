@@ -78,11 +78,10 @@ def run_sql(
     spark: SparkSession,
     sql: str,
     params: Mapping[str, Any] | None = None,
-    pg_dialect: bool = True,
     column_types: Mapping[str, str] | None = None,
     standard_conforming_strings: bool = False,
 ) -> DataFrame:
-    """Execute a SQL string (optionally PG-dialect) over registered views.
+    """Execute a PG-dialect SQL string over registered views.
 
     Parameters bind NATIVELY (``spark.sql(..., args=)``): ``:name``
     markers become typed plan parameters — no quoting, no injection
@@ -102,17 +101,12 @@ def run_sql(
     ``translate_pg_sql``."""
     if not sql or not sql.strip():
         raise SpecError("sql must not be empty")  # reference client.py:255-258
-    if pg_dialect:
-        ensure_pg_functions(spark)
-    text = (
-        translate_pg_sql(
-            sql,
-            bind=False,
-            column_types=column_types,
-            standard_conforming_strings=standard_conforming_strings,
-        )
-        if pg_dialect
-        else sql
+    ensure_pg_functions(spark)
+    text = translate_pg_sql(
+        sql,
+        bind=False,
+        column_types=column_types,
+        standard_conforming_strings=standard_conforming_strings,
     )
     if params:
         return spark.sql(text, args=dict(params))
@@ -123,22 +117,19 @@ def run_stream_sql(
     spark: SparkSession,
     spec: StreamSpec,
     params: Mapping[str, Any] | None = None,
-    use_declared_types: bool = True,
     standard_conforming_strings: bool = False,
 ) -> DataFrame:
     """Execute a stream's declared SQL with bound parameters.
 
     The stream's DECLARED column types feed the dialect's type-dependent
-    rewrites by default (round-10): PG semantics for integer ``/``,
-    ``date - date``, and fractional ``::int`` casts over declared
-    columns — the reference's server applied these from its catalog
-    types; the declared schema is this engine's equivalent. Set
-    ``use_declared_types=False`` for the purely textual translation."""
+    rewrites (round-10): PG semantics for integer ``/``, ``date - date``,
+    and fractional ``::int`` casts over declared columns — the
+    reference's server applied these from its catalog types; the
+    declared schema is this engine's equivalent."""
     return run_sql(
         spark,
         spec.sql,
         params=params,
-        pg_dialect=True,
-        column_types=spec.column_types if use_declared_types else None,
+        column_types=spec.column_types,
         standard_conforming_strings=standard_conforming_strings,
     )

@@ -123,7 +123,6 @@ def pg_dialect_like_epoch(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type !~~ '%ck' AS not_like_ck, "
         "EXTRACT(EPOCH FROM ts) AS epoch_frac "
         "FROM events WHERE event_id % 7 = 0",
-        pg_dialect=True,
     )
 
 
@@ -159,7 +158,6 @@ def pg_dialect_distinct_on(spark: SparkSession, sf_dir: str) -> DataFrame:
         "AS bal "
         "FROM customer "
         "ORDER BY c_nationkey, bal DESC, c_custkey",
-        pg_dialect=True,
     )
 
 
@@ -190,7 +188,6 @@ def pg_dialect_operators(spark: SparkSession, sf_dir: str) -> DataFrame:
         "EXTRACT(EPOCH FROM ts)::int8 AS epoch_s, "
         "event_type ~ '^(click|view)$' AS is_browse "
         "FROM events WHERE event_type ~ '^(c|v)' AND event_id % 10 = 0",
-        pg_dialect=True,
     )
 
 
@@ -265,7 +262,6 @@ def pg_dialect_strings(spark: SparkSession, sf_dir: str) -> DataFrame:
         "substring(event_type FROM '^[a-z]+') AS word, "
         "position('i' IN event_type)::int8 AS i_pos "
         "FROM events WHERE event_id % 20 = 0",
-        pg_dialect=True,
     )
 
 
@@ -314,7 +310,6 @@ def pg_dialect_string_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         "substring(c_name FOR 8) AS first8, "
         "substring(c_mktsegment FROM 0 FOR 6) AS seg_head "
         "FROM customer WHERE c_custkey % 11 = 0",
-        pg_dialect=True,
     )
 
 
@@ -367,7 +362,6 @@ def pg_dialect_to_char_numeric(spark: SparkSession, sf_dir: str) -> DataFrame:
         "to_char(o_totalprice, '9999999.99MI') AS amt_mi, "
         "to_char(o_orderkey % 10, '99') AS digit "
         "FROM orders WHERE o_orderkey % 101 = 0",
-        pg_dialect=True,
     )
 
 
@@ -415,7 +409,6 @@ def pg_dialect_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
         "array_position(ARRAY['AUTOMOBILE', 'BUILDING', 'FURNITURE', "
         "'HOUSEHOLD', 'MACHINERY'], c_mktsegment)::int8 AS seg_pos "
         "FROM customer WHERE c_custkey % 7 = 0",
-        pg_dialect=True,
     )
 
 
@@ -766,7 +759,6 @@ def pg_dialect_timezone(spark: SparkSession, sf_dir: str) -> DataFrame:
         "EXTRACT(DOW FROM ts)::int8 AS dow, "
         "EXTRACT(ISODOW FROM ts)::int8 AS isodow "
         "FROM events WHERE event_id % 25 = 0",
-        pg_dialect=True,
     )
 
 
@@ -820,7 +812,6 @@ def pg_dialect_trgm_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "SELECT p_partkey, similarity(p_name, p_type) AS sim, "
         "similarity(p_name, p_type) >= 0.3 AS is_similar "
         "FROM part WHERE p_partkey % 9 = 0",
-        pg_dialect=True,
     )
 
 
@@ -896,7 +887,6 @@ def pg_dialect_scalar_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
         "date_bin('36 hours', o_orderdate::timestamp, "
         "timestamp '1992-01-01') AS obin "
         "FROM orders WHERE o_orderkey % 13 = 0",
-        pg_dialect=True,
     )
 
 
@@ -957,7 +947,6 @@ def pg_dialect_agg_order_semantics(spark: SparkSession, sf_dir: str) -> DataFram
         "count(*) AS n "
         "FROM orders WHERE o_orderkey % 97 = 0 "
         "GROUP BY o_orderpriority",
-        pg_dialect=True,
     )
 
 
@@ -1015,7 +1004,6 @@ def pg_dialect_operator_math(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(o_orderdate, o_orderdate + INTERVAL '30 days') OVERLAPS "
         "(DATE '1995-01-01', DATE '1995-03-01') AS ovl "
         "FROM orders WHERE o_orderkey % 11 = 0",
-        pg_dialect=True,
     )
 
 
@@ -1069,7 +1057,6 @@ def pg_dialect_quoting_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         "decode(encode(c_name::bytea, 'hex'), 'hex')::text AS roundtrip, "
         "to_json(regexp_match(c_name, 'Customer#([0-9]+)')) AS grp "
         "FROM customer WHERE c_custkey % 7 = 0",
-        pg_dialect=True,
     )
 
 
@@ -1129,7 +1116,6 @@ def pg_dialect_json_construction(spark: SparkSession, sf_dir: str) -> DataFrame:
         "json_agg(o_orderkey % 97 ORDER BY o_orderkey) AS agg "
         "FROM orders WHERE o_orderkey % 13 = 0 "
         "GROUP BY o_orderpriority",
-        pg_dialect=True,
     )
 
 
@@ -1181,7 +1167,6 @@ def pg_dialect_srf_ordering(spark: SparkSession, sf_dir: str) -> DataFrame:
         "WHERE c_custkey % 17 = 0 "
         "ORDER BY nk DESC, c_custkey, g "
         "LIMIT 40",
-        pg_dialect=True,
     )
 
 
@@ -1232,7 +1217,6 @@ def pg_dialect_cast_rounding(spark: SparkSession, sf_dir: str) -> DataFrame:
         "('3.75')::float8::int AS strf, "
         "(-1.5)::int AS neg "
         "FROM orders WHERE o_orderkey % 13 = 0",
-        pg_dialect=True,
     )
 
 
@@ -1285,7 +1269,6 @@ def pg_dialect_typed_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
         "DATE '1996-01-01' - od AS days_until "
         "FROM (SELECT o_orderkey, o_orderdate::date AS od FROM orders) t "
         "WHERE o_orderkey % 13 = 0",
-        pg_dialect=True,
         column_types={"o_orderkey": "int8", "od": "date"},
     )
 
@@ -1364,7 +1347,6 @@ def pg_dialect_jsonb_mutators(spark: SparkSession, sf_dir: str) -> DataFrame:
         "AS nested_ins_after, "
         'jsonb_set(\'{"a":{}}\', \'{x,c}\', \'1\') AS absent_earlier '
         "FROM orders WHERE o_orderkey % 41 = 0",
-        pg_dialect=True,
     )
 
 
@@ -1423,7 +1405,6 @@ def pg_dialect_probe_fixes_r11(spark: SparkSession, sf_dir: str) -> DataFrame:
         "date_trunc('decade', TIMESTAMP '2026-08-16 00:00:00')"
         "::date::text AS dec_start "
         "FROM customer WHERE c_custkey % 11 = 0",
-        pg_dialect=True,
     )
 
 
@@ -1479,7 +1460,6 @@ def pg_dialect_regexp_backrefs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(floor(nullif(c_custkey/7, 3)/2))::bigint AS inner_div, "
         "(round(c_acctbal::numeric(12,2) + 1))::bigint AS dec_round "
         "FROM customer WHERE c_custkey % 7 = 0",
-        pg_dialect=True,
     )
 
 
@@ -1528,7 +1508,6 @@ def pg_dialect_tochar_format_r12(spark: SparkSession, sf_dir: str) -> DataFrame:
         "format('%I', c_name) AS quoted_ident, "
         "format('%L', c_name) AS quoted_lit "
         "FROM customer WHERE c_custkey % 13 = 0",
-        pg_dialect=True,
     )
 
 
@@ -1588,7 +1567,6 @@ def pg_dialect_probe_fixes_r12(spark: SparkSession, sf_dir: str) -> DataFrame:
         "unistr('\\\\0041\\\\+000042') AS uni, "
         "convert_from('\\x61e282ac'::bytea, 'UTF8') AS conv "
         "FROM orders WHERE o_orderkey % 37 = 0",
-        pg_dialect=True,
     )
 
 
@@ -1641,7 +1619,6 @@ def pg_dialect_jsonb_operators(spark: SparkSession, sf_dir: str) -> DataFrame:
         "jsonb_typeof(CASE WHEN o_orderkey % 3 = 0 THEN '{\"x\":1}' "
         "ELSE '[1]' END) AS ty "
         "FROM orders WHERE o_orderkey % 43 = 0",
-        pg_dialect=True,
     )
 
 
@@ -1711,7 +1688,6 @@ def pg_dialect_srf_direction_r13(spark: SparkSession, sf_dir: str) -> DataFrame:
         "generate_series(1, 5, (c.c_custkey % 2) * 4 - 2) AS g "
         "WHERE c.c_custkey % 17 = 0"
         ") s ORDER BY k, n, series_val",
-        pg_dialect=True,
     )
 
 
@@ -1796,7 +1772,6 @@ def pg_dialect_srf_zip_r13(spark: SparkSession, sf_dir: str) -> DataFrame:
         "generate_subscripts(string_to_array(c_mktsegment, 'A'), 1, true) "
         "AS s FROM customer WHERE c_custkey % 293 = 0) d"
         ") z ORDER BY lane, k, v1, v2, v3",
-        pg_dialect=True,
     )
 
 
@@ -1847,7 +1822,6 @@ def pg_dialect_tochar_names_r13(spark: SparkSession, sf_dir: str) -> DataFrame:
         "to_char(o_orderdate::date, 'MON') AS mon3, "
         "to_char(o_orderdate::date, 'DY, DD FMMonth YYYY') AS composed "
         "FROM orders WHERE o_orderkey % 53 = 0 ORDER BY o_orderkey",
-        pg_dialect=True,
     )
 
 
@@ -1923,7 +1897,6 @@ def pg_dialect_hypothetical_r13(spark: SparkSession, sf_dir: str) -> DataFrame:
         "NULL::double precision AS v2 "
         "FROM customer WHERE c_custkey % 89 = 0"
         ") z ORDER BY lane, k, v1, v2",
-        pg_dialect=True,
     )
 
 
@@ -1987,5 +1960,4 @@ def pg_dialect_probe_fixes_r13(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ELSE 'ok_name' END) AS quoted_kw, "
         "(interval '1 day 2 hours')::text AS ival_text "
         "FROM orders WHERE o_orderkey % 47 = 0 ORDER BY o_orderkey",
-        pg_dialect=True,
     )

@@ -733,8 +733,9 @@ def versioned_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-mismatch.
 
     Scale: commits are O(1) manifest renames regardless of data size;
-    snapshot reads list ONE manifest; the naive full-rewrite upsert is
-    the documented trade vs statistics-pruned file rewrites."""
+    snapshot reads list ONE manifest. The table records no statistics,
+    so the pruned upsert counts every file as overlapping and rewrites
+    them all."""
     from pyspark.sql import functions as F2
 
     from youcruit_tap_rawpostgresql_spark.sources import versioned
@@ -754,7 +755,7 @@ def versioned_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
             + F2.lit(1000).cast("decimal(12,2)")
         ).cast("double"),
     )
-    versioned.upsert_snapshot(spark, upd, root, "o_orderkey")
+    versioned.upsert_snapshot_pruned(spark, upd, root, "o_orderkey")
     frames = []
     for v in (0, 1, 2):
         frames.append(

@@ -439,5 +439,4 @@ def win_groups_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderdate::date AS od, "
         "(o_totalprice::numeric(12,2) * 100)::int8 AS cents "
         "FROM orders WHERE o_orderkey % 7 = 0) t",
-        pg_dialect=True,
     )

@@ -123,6 +123,23 @@ def _resolve_files(path: str) -> list[str]:
     )
 
 
+def _read_partition(partition, schema, fast):
+    """Both readers' ``read``: a partition's files as Arrow batches where
+    the ``fast`` schema allows, else as parsed rows."""
+    if partition is None:
+        # empty manifest (e.g. an empty incremental slice's BATCH
+        # message): partitions() returned [] and pyspark probes with
+        # no partition — an empty stream, not a crash
+        return
+    for url in partition.urls:
+        if fast is not None:
+            batches = _try_read_arrow(url, fast)
+            if batches is not None:
+                yield from batches
+                continue
+        yield from _read_batch_file(url, schema)
+
+
 class SingerBatchReader(DataSourceReader):
     def __init__(self, schema, options):
         self.schema = schema
@@ -142,18 +159,7 @@ class SingerBatchReader(DataSourceReader):
         return _pack_files(self.files)
 
     def read(self, partition):
-        if partition is None:
-            # empty manifest (e.g. an empty incremental slice's BATCH
-            # message): partitions() returned [] and pyspark probes with
-            # no partition — an empty stream, not a crash
-            return
-        for url in partition.urls:
-            if self._fast is not None:
-                batches = _try_read_arrow(url, self._fast)
-                if batches is not None:
-                    yield from batches
-                    continue
-            yield from _read_batch_file(url, self.schema)
+        return _read_partition(partition, self.schema, self._fast)
 
 
 def _parse_ts(v):
@@ -418,15 +424,7 @@ class SingerBatchStreamReader(DataSourceStreamReader):
         return _pack_files(files)
 
     def read(self, partition):
-        if partition is None:
-            return
-        for url in partition.urls:
-            if self._fast is not None:
-                batches = _try_read_arrow(url, self._fast)
-                if batches is not None:
-                    yield from batches
-                    continue
-            yield from _read_batch_file(url, self.schema)
+        return _read_partition(partition, self.schema, self._fast)
 
     def commit(self, end: dict):
         pass  # progress is the checkpoint's offset log; nothing to ack

@@ -10,7 +10,7 @@ Model:
   data-skipping index) and the snapshot's read schema: the union of its
   files' schemas, which every read hands to Spark, so no read runs a
   parquet footer-inference job. Manifests without the ``read_schema``
-  marker (written before it existed) are read by inference;
+  marker (written before it existed) merge their files' footers instead;
 - commit = write data files, then publish the manifest ATOMICALLY via
   ``os.link`` (hard-link fails with EEXIST if the version exists — the
   true test-and-set; a check-then-rename would let two racers both
@@ -27,6 +27,10 @@ data skipping from footer statistics (no data read at commit), and
 upserts that rewrite only statistics-overlapping files. The difference
 from production formats is degree (manifest compaction, column-level
 dictionaries, retention policies), not kind.
+
+One path in, one path out: a stream's slice lands through
+``commit_slice`` (keyed: ``upsert_snapshot_pruned``; keyless: an append),
+and every read, rewrite and compaction scans through ``_scan``.
 
 Why not reuse an open format directly: no Delta/Iceberg jars ship in this
 environment; the module exists to express the engine's sync pipeline
@@ -82,6 +86,14 @@ def _read_manifest(root: str, version: int) -> dict:
         return json.load(fh)
 
 
+def _snapshot(root: str, version: int | None = None) -> tuple[int, dict]:
+    """``version`` (default: the current one) and its manifest."""
+    v = current_version(root) if version is None else version
+    if v is None:
+        raise FileNotFoundError(f"no committed version under {root}")
+    return v, _read_manifest(root, v)
+
+
 def _schema(man: dict):
     from pyspark.sql.types import StructType
 
@@ -112,16 +124,19 @@ def _union_schema(base, new):
     return StructType(base.fields + added)
 
 
-def _scan(spark: SparkSession, man: dict, files: list[str], merge: bool = False) -> DataFrame:
-    """Read ``files`` of the snapshot ``man``: with its recorded read
-    schema, so Spark runs no footer-inference job; an unmarked (older)
-    manifest infers the schema as before, merging footers if ``merge``."""
-    reader = spark.read
-    if man.get(_READ_SCHEMA):
-        reader = reader.schema(_schema(man))
-    elif merge:
-        reader = reader.option("mergeSchema", "true")
-    return reader.parquet(*files)
+def _scan(spark: SparkSession, man: dict, files: list[str]) -> DataFrame:
+    """Read ``files``, some or none of the snapshot ``man``'s, with its
+    recorded read schema, so Spark runs no footer-inference job. An
+    unmarked (older) manifest merges the footers of every file it lists
+    instead, so no column any file holds is lost, whichever files are
+    read, and a column whose type differs between files fails the read."""
+    if man.get(_READ_SCHEMA) or not man["files"]:
+        schema = _schema(man)
+    else:
+        schema = spark.read.option("mergeSchema", "true").parquet(*man["files"]).schema
+    if not files:
+        return spark.createDataFrame([], schema=schema)
+    return spark.read.schema(schema).parquet(*files)
 
 
 class CommitConflict(RuntimeError):
@@ -226,7 +241,8 @@ def commit_snapshot(
     when files are carried forward, its union with the base's read
     schema, so it is what ``mergeSchema`` would infer over the listed
     files. When the base has no read schema, or a column's type changes,
-    the manifest records ``df.schema`` unmarked and reads infer."""
+    the manifest records ``df.schema`` unmarked and reads merge the
+    files' footers."""
     if mode not in ("overwrite", "append"):
         raise ValueError(f"unknown mode {mode!r}")
     rp = _root_path(root)
@@ -276,43 +292,18 @@ def commit_snapshot(
     return version
 
 
-def _empty_frame(spark: SparkSession, man: dict) -> DataFrame:
-    return spark.createDataFrame([], schema=_schema(man))
-
-
 def read_version(
     spark: SparkSession, root: str, version: int | None = None
 ) -> DataFrame:
     """Snapshot read: the file list of ``version`` (default: current).
     Files are immutable, so this DataFrame stays valid and consistent no
     matter what later commits do. The read takes the manifest's recorded
-    schema (the union over the snapshot's files, as ``read_version_merged``
-    gives), so building it runs no Spark job. A zero-file snapshot reads
-    as an empty frame with that schema."""
-    v = current_version(root) if version is None else version
-    if v is None:
-        raise FileNotFoundError(f"no committed version under {root}")
-    man = _read_manifest(root, v)
-    if not man["files"]:
-        return _empty_frame(spark, man)
+    schema (the union over the snapshot's files), so building it runs no
+    Spark job; an unmarked manifest merges its files' footers (``_scan``).
+    A zero-file snapshot reads as an empty frame with the manifest's
+    schema."""
+    _, man = _snapshot(root, version)
     return _scan(spark, man, man["files"])
-
-
-def read_version_merged(
-    spark: SparkSession, root: str, version: int | None = None
-) -> DataFrame:
-    """Snapshot read with schema merging across the version's files —
-    the schema-evolution read path: files written before a column existed
-    null-fill it (parquet mergeSchema), so appended snapshots can widen
-    the schema without rewriting history. A manifest with a recorded read
-    schema already holds that merged schema; an older one merges footers."""
-    v = current_version(root) if version is None else version
-    if v is None:
-        raise FileNotFoundError(f"no committed version under {root}")
-    man = _read_manifest(root, v)
-    if not man["files"]:
-        return _empty_frame(spark, man)
-    return _scan(spark, man, man["files"], merge=True)
 
 
 def _overlaps(stat, lo, hi) -> bool:
@@ -360,12 +351,9 @@ def read_version_pruned(
     key-ranged read touches the overlapping fraction only."""
     from pyspark.sql import functions as F
 
-    v = current_version(root) if version is None else version
-    if v is None:
-        raise FileNotFoundError(f"no committed version under {root}")
-    man = _read_manifest(root, v)
+    _, man = _snapshot(root, version)
     hit, _miss = _split_files(man, {column: (lo, hi)})
-    df = _scan(spark, man, hit) if hit else _empty_frame(spark, man)
+    df = _scan(spark, man, hit)
     return df.filter(F.col(column).between(lo, hi))
 
 
@@ -427,43 +415,6 @@ def _profile_keys(df: DataFrame, keys: list[str], unique: bool):
     return prof
 
 
-def upsert_snapshot(
-    spark: SparkSession, updates: DataFrame, root: str, key: "str | list[str]"
-) -> int:
-    """Copy-on-write upsert: rows in the current snapshot whose ``key``
-    (one column or a composite list — Singer ``key_properties`` is a
-    list, reference tap.py:92-99) collides with ``updates`` are replaced,
-    everything else carried over — committed as one new overwrite
-    snapshot derived from the base read (CommitConflict if someone else
-    committed meanwhile). Updates with more than one row per key are
-    REJECTED (silent duplicate keys would corrupt the 'current version
-    equals source state' invariant). NULL key values never match (SQL
-    join semantics) — primary keys are non-null by contract.
-
-    Scale: this naive form rewrites the whole table; use
-    ``upsert_snapshot_pruned`` to rewrite only statistics-overlapping
-    files."""
-    keys = _keys(key)
-    base = current_version(root)
-    _profile_keys(updates, keys, unique=True)
-    if base is None:
-        return commit_snapshot(
-            updates, root, mode="overwrite", op="upsert", stats_columns=keys
-        )
-    current = read_version(spark, root, base)
-    # a left_anti result does not depend on duplicates on the right side
-    kept = current.join(updates.select(*keys), keys, "left_anti")
-    merged = kept.unionByName(updates)
-    return commit_snapshot(
-        merged,
-        root,
-        mode="overwrite",
-        op="upsert",
-        expected_base=base,
-        stats_columns=keys,
-    )
-
-
 def _base_stats_columns(man: dict, keys: list[str]) -> list[str]:
     """Stats columns to record on a rewrite: the base manifest's tracked
     set ∪ the operation keys — rewriting files must never silently drop
@@ -489,10 +440,9 @@ def _pruned_rewrite(
     key span of ``keys_df`` (``profile``'s bounds on EVERY key column, for
     composite keys) are re-read, stripped of matching keys, optionally
     merged with ``merge_df`` (upsert) or not (delete), and committed with
-    disjoint files carried over. The re-read takes the base manifest's
-    read schema, so a schema-evolved table loses no column in a rewrite
-    and no ``mergeSchema`` footer job runs (an older unmarked manifest
-    still merges footers). Returns (version, n_rewritten, n_carried)."""
+    disjoint files carried over. The re-read goes through ``_scan``, so a
+    schema-evolved table loses no column in a rewrite. Returns (version,
+    n_rewritten, n_carried)."""
     man = _read_manifest(root, base)
     # an all-NULL key column yields no usable span — skip it (conservative:
     # that column prunes nothing; NULL keys never match the anti-join anyway)
@@ -510,7 +460,7 @@ def _pruned_rewrite(
         # NULL key set as deleting no rows.
         return (
             commit_snapshot(
-                _empty_frame(spark, man),
+                _scan(spark, man, []),
                 root,
                 mode="append",
                 op=op + "-noop",
@@ -521,7 +471,7 @@ def _pruned_rewrite(
             len(man["files"]),
         )
     hit, miss = _split_files(man, bounds)
-    touched = _scan(spark, man, hit, merge=True) if hit else _empty_frame(spark, man)
+    touched = _scan(spark, man, hit)
     # a left_anti result does not depend on duplicates on the right side
     kept = touched.join(keys_df.select(*keys), keys, "left_anti")
     rewritten = kept.unionByName(merge_df, allowMissingColumns=True) if merge_df is not None else kept
@@ -550,30 +500,48 @@ def upsert_snapshot_pruned(
     op: str = "upsert-pruned",
     extra: dict | None = None,
 ) -> tuple[int, int, int]:
-    """Statistics-pruned copy-on-write upsert: only files whose ``key``
-    range (every column of a composite key) overlaps the updates' key
-    span are rewritten; disjoint files carry over untouched (with their
-    stats). Returns (version, n_rewritten_files, n_carried_files). One
-    aggregate both validates the keys and gives the span.
+    """The table's one upsert, copy-on-write: rows of the current
+    snapshot whose ``key`` (one column, or every column of a composite
+    key) collides with ``updates`` are replaced and the rest carried
+    over, in one new version derived from the base (CommitConflict if
+    another writer committed meanwhile). Statistics prune it: only files
+    whose key range overlaps the updates' key span are rewritten, and
+    disjoint files carry over untouched with their stats. One aggregate
+    both validates the keys (a duplicate or NULL key raises ValueError
+    before anything is written, on an empty table too) and gives the
+    span. An empty table gets ``updates`` as its first snapshot. Returns
+    (version, n_rewritten_files, n_carried_files).
 
-    Scale: THE production upsert shape — cost scales with the touched
-    key range, not table size. A point update against a key-sorted
-    100 TB table rewrites one file."""
+    Scale: cost follows the touched key range, not table size. A point
+    update against a key-sorted 100 TB table rewrites one file."""
     keys = _keys(key)
     base = current_version(root)
     profile = _profile_keys(updates, keys, unique=True)
     if base is None:
-        return (
-            commit_snapshot(
-                updates, root, mode="overwrite", op=op,
-                stats_columns=keys, extra=extra,
-            ),
-            0,
-            0,
-        )
+        version = commit_snapshot(updates, root, op=op, stats_columns=keys, extra=extra)
+        return version, 0, 0
     return _pruned_rewrite(
         spark, root, base, keys, profile, updates, updates, op, extra=extra
     )
+
+
+def commit_slice(
+    spark: SparkSession,
+    df: DataFrame,
+    root: str,
+    keys: "str | list[str] | None",
+    op: str,
+    extra: dict | None = None,
+) -> int:
+    """Land one slice of a stream in the table, the one rule every writer
+    of slices (tap syncs, streaming micro-batches) follows: a keyed slice
+    upserts on ``keys`` (``upsert_snapshot_pruned``, whose key check also
+    guards the first commit); a keyless one appends, or starts the table.
+    ``extra`` merges into the manifest. Returns the committed version."""
+    if keys:
+        return upsert_snapshot_pruned(spark, df, root, keys, op=op, extra=extra)[0]
+    mode = "overwrite" if current_version(root) is None else "append"
+    return commit_snapshot(df, root, mode=mode, op=op, extra=extra)
 
 
 def delete_keys(
@@ -594,9 +562,7 @@ def delete_keys(
     with clustered keys (the sync layout) a user's rows live in few
     files."""
     keys = _keys(key)
-    base = current_version(root)
-    if base is None:
-        raise FileNotFoundError(f"no committed version under {root}")
+    base, _ = _snapshot(root)
     profile = _profile_keys(keys_df, keys, unique=False)
     version, n_new, _carried = _pruned_rewrite(
         spark, root, base, keys, profile, keys_df, None, "delete"
@@ -682,10 +648,7 @@ def compact_version(
     rewrite for permanently cheaper scans. Run it per key-range/partition
     at 100 TB, never the whole table in one job; old versions still read
     their original files until VACUUM."""
-    base = current_version(root)
-    if base is None:
-        raise FileNotFoundError(f"no committed version under {root}")
-    man = _read_manifest(root, base)
+    base, man = _snapshot(root)
     files = man["files"]
     if not files:
         return base, 0, 0

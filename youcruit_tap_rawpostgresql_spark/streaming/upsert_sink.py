@@ -178,14 +178,16 @@ def run_streaming_versioned_sink(
     trigger_available_now: bool = True,
 ):
     """Structured Streaming → versioned snapshot table, EXACTLY-ONCE:
-    each micro-batch commits one snapshot (keyed statistics-pruned upsert
-    when ``key`` is given, append otherwise) whose manifest records a
-    TRANSACTION MARKER ``txn = {app, batch_id}`` with the app identity
-    derived from the checkpoint. On restart, foreachBatch may REDELIVER
-    the last batch (offsets committed, sink action unacknowledged) — the
-    sink scans the manifest log for this app's highest committed batch_id
-    and skips duplicates, the (txnAppId, txnVersion) idempotent-sink
-    contract production formats use. Keying on the app identity means
+    each micro-batch lands through ``versioned.commit_slice``, the rule
+    tap syncs follow (a statistics-pruned upsert on ``key``, which rejects
+    a batch with a duplicate or NULL key, or an append without ``key``),
+    as one snapshot whose manifest records a TRANSACTION MARKER
+    ``txn = {app, batch_id}`` with the app identity derived from the
+    checkpoint. On restart, foreachBatch may REDELIVER the last batch
+    (offsets committed, sink action unacknowledged) — the sink scans
+    the manifest log for this app's highest committed batch_id and skips
+    duplicates, the (txnAppId, txnVersion) idempotent-sink contract
+    production formats use. Keying on the app identity means
     interleaved NON-stream commits (tap syncs, compaction) never erase
     the stream's batch memory, and a NEW checkpoint (= new app) correctly
     reprocesses from its own offset 0 rather than silently discarding
@@ -215,26 +217,13 @@ def run_streaming_versioned_sink(
         return best
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
         last = _last_committed_batch()
         if last is not None and batch_id <= last:
             return  # redelivered batch — already committed, skip
-        op = f"stream-batch-{batch_id}"
-        extra = {"txn": {"app": app_id, "batch_id": batch_id}}
-        if key:
-            # the pruned upsert enforces the dup-key MERGE guard on every
-            # path, including the very first commit
-            versioned.upsert_snapshot_pruned(
-                sp, batch_df, root, key, op=op, extra=extra
-            )
-        elif versioned.current_version(root) is None:
-            versioned.commit_snapshot(
-                batch_df, root, mode="overwrite", op=op, extra=extra
-            )
-        else:
-            versioned.commit_snapshot(
-                batch_df, root, mode="append", op=op, extra=extra
-            )
+        versioned.commit_slice(
+            batch_df.sparkSession, batch_df, root, key, op=f"stream-batch-{batch_id}",
+            extra={"txn": {"app": app_id, "batch_id": batch_id}},
+        )
 
     writer = (
         stream_df.writeStream.foreachBatch(apply_batch)

@@ -457,12 +457,13 @@ class SparkTap:
         with the session, as Spark has no public unregister call: at most
         2 × (k + 1) per failed call. A stream sharing the fully qualified
         name (and bookmark) of an earlier stream is planned only after that
-        stream is emitted. A persist-mode stream sharing its SQL with an
-        earlier stream (a ``__source__`` alias, say) is fetched only after
-        that stream is emitted: equal extracts share one Spark cache entry,
-        which the earlier stream's release drops. Workers inherit the
-        caller's local properties and tags in pyspark's pinned-thread mode
-        (the default).
+        stream is emitted. A persist-mode stream whose extract has the same
+        plan as an earlier stream's (a ``__source__`` alias, or equal SQL
+        spelled differently) is fetched only after that stream is emitted:
+        Spark's cache matches plans (``DataFrame.sameSemantics``), so equal
+        extracts share one cache entry, which the earlier stream's release
+        drops. Workers inherit the caller's local properties and tags in
+        pyspark's pinned-thread mode (the default).
         """
         from concurrent.futures import Future, ThreadPoolExecutor
 
@@ -470,14 +471,16 @@ class SparkTap:
 
         streams = self._effective_streams()
         fqns = [s.fully_qualified_name for s in streams]
-        sqls = [s.sql for s in streams]
         batch = bool(batch_mode and self.config.batch)
         args = [(s, batch, commit(s) if commit else None) for s in streams]
         k = max(1, parallel)
+        plans: list[Future] = []  # streams 0 .. the last planned
 
-        def fetch(j: int, planned: Future) -> _Plan:
-            plan = planned.result()
-            if plan.mode == "persist" and sqls[j] in sqls[:j]:
+        def fetch(j: int) -> _Plan:
+            plan = plans[j].result()
+            if plan.mode == "persist" and any(
+                plan.premap.sameSemantics(p.result().premap) for p in plans[:j]
+            ):
                 return plan  # the calling thread fetches it (docstring)
             return self._fetch(plan)
 
@@ -486,27 +489,27 @@ class SparkTap:
         inherit = inheritable_thread_target(self.spark)
         on_worker = (lambda f: f) if inherit is self.spark else inherit
         results = []
-        planned: dict[int, Future] = {}  # streams i+1 .. i+k, not fetching
         fetched: dict[int, Future] = {}  # streams i+1 .. i+k-1
-        nxt = 0  # the first stream not yet planned
         with ThreadPoolExecutor(max_workers=k) as pool:
             try:
                 for i in range(len(streams)):
-                    ahead = fetched.pop(i, None) or planned.pop(i, None)
-                    plan = ahead.result() if ahead else self._plan(*args[i])
-                    nxt = max(nxt, i + 1)
-                    while nxt <= min(i + k, len(streams) - 1) and (
-                        fqns[nxt] not in fqns[i:nxt]
+                    if i == len(plans):  # not planned ahead (docstring)
+                        plans.append(Future())
+                        plans[i].set_result(self._plan(*args[i]))
+                    plan = (fetched.pop(i, None) or plans[i]).result()
+                    while len(plans) <= min(i + k, len(streams) - 1) and (
+                        fqns[len(plans)] not in fqns[i:len(plans)]
                     ):
-                        planned[nxt] = pool.submit(on_worker(self._plan), *args[nxt])
-                        nxt += 1
-                    for j in [j for j in planned if j < i + k]:
-                        fetched[j] = pool.submit(on_worker(fetch), j, planned.pop(j))
+                        plans.append(pool.submit(on_worker(self._plan), *args[len(plans)]))
+                    for j in range(i + 1, min(i + k, len(plans))):
+                        if j not in fetched:
+                            fetched[j] = pool.submit(on_worker(fetch), j)
                     if plan.fetch_s is None:
                         self._fetch(plan)
                     results.append(self._emit(plan))
             except BaseException:
-                for f in [*planned.values(), *fetched.values()]:
+                for j in range(i + 1, len(plans)):
+                    f = fetched.get(j, plans[j])
                     if f.exception() is None:  # else raised already
                         f.result().release()
                 raise
@@ -515,43 +518,27 @@ class SparkTap:
 
     def sync_stream_to_versioned(self, spec: StreamSpec, root: str) -> SyncResult:
         """Sync one stream into a versioned snapshot table
-        (``sources/versioned.py``) — the warehouse-target mode: the first
-        sync commits a full snapshot; each later sync commits its
-        incremental slice as a statistics-PRUNED upsert on the key
+        (``sources/versioned.py``) — the warehouse-target mode. Every sync,
+        the first included, lands its slice through
+        ``versioned.commit_slice``: a statistics-PRUNED upsert on the key
         properties — single or composite, Singer's ``key_properties`` is
         a list (reference tap.py:92-99) — or an append when the stream
-        declares no keys. The current version always equals source state
-        for the synced key range, and every prior sync stays time-travel
-        readable. The keyed upsert is idempotent, so a re-run after a
-        failed commit converges (at-least-once extract, exactly-once
-        visible state). ``record_count`` is the slice synced THIS run,
-        never a full-table count. Consistency invariants: ``_sync``."""
+        declares no keys. A keyed slice with a duplicate or NULL key is
+        rejected (``ValueError``) before anything is committed, so the
+        table and the bookmark stay where they were. The current version
+        always equals source state for the synced key range, and every
+        prior sync stays time-travel readable. The keyed upsert is
+        idempotent, so a re-run after a failed commit converges
+        (at-least-once extract, exactly-once visible state).
+        ``record_count`` is the slice synced THIS run, never a full-table
+        count. Consistency invariants: ``_sync``."""
         return self._sync(spec, commit=self._versioned_commit(spec, root))
 
     def _versioned_commit(self, spec: StreamSpec, root: str) -> Commit:
         from youcruit_tap_rawpostgresql_spark.sources import versioned
 
-        def commit(df: DataFrame) -> None:
-            # composite keys upsert on all columns, with per-column
-            # statistics pruning
-            if versioned.current_version(root) is None:
-                versioned.commit_snapshot(
-                    df, root, mode="overwrite", op="initial-sync",
-                    stats_columns=spec.key_properties or None,
-                )
-            elif spec.key_properties:
-                # statistics-pruned: only files overlapping the slice's
-                # key span are rewritten — incremental sync cost follows
-                # the delta's key range, not table size
-                versioned.upsert_snapshot_pruned(
-                    self.spark, df, root, list(spec.key_properties)
-                )
-            else:
-                versioned.commit_snapshot(
-                    df, root, mode="append", op="incremental-append"
-                )
-
-        return commit
+        keys = list(spec.key_properties)
+        return lambda df: versioned.commit_slice(self.spark, df, root, keys, op="sync")
 
     def versioned_commits(self, base: str) -> Callable[[StreamSpec], Commit]:
         """``sync_all``'s commits into one versioned table per stream
