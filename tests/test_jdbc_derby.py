@@ -434,31 +434,6 @@ def test_incremental_string_bookmark_with_quote(spark, derby_url):
     assert res[0].record_count == _live_count(spark, derby_url) - 1
 
 
-def test_explicit_predicate_partitions_live(spark, derby_url):
-    """The explicit-predicate parallel read (range_predicates →
-    spark.read.jdbc(predicates=...)): each predicate becomes one
-    executor-side connection/partition, and the disjoint-complete
-    contract means no row is lost or duplicated — including ids OUTSIDE
-    [lower, upper), which stride partitioning would clamp into edge
-    slices but predicates must catch explicitly."""
-    from youcruit_tap_rawpostgresql_spark.sources.jdbc import range_predicates
-
-    preds = [
-        p.replace("id", '"id"') for p in range_predicates("id", 2, 8, 3)
-    ]
-    df = spark.read.jdbc(
-        derby_url,
-        "PEOPLE",
-        predicates=preds,
-        properties={"driver": DERBY_DRIVER},
-    )
-    assert df.rdd.getNumPartitions() == 3
-    n_live = _live_count(spark, derby_url)
-    rows = df.select("id").collect()
-    assert len(rows) == n_live  # complete
-    assert len({r["id"] for r in rows}) == n_live  # disjoint
-
-
 def test_sync_to_jdbc_target_el_loop(spark, derby_url, tmp_path_factory):
     """The full EL loop over JDBC — extract from one live database, LOAD
     into another over DataFrame writes (the BASELINE north star's 'Spark
@@ -629,34 +604,6 @@ def test_cli_jdbc_target_table_with_two_streams_is_an_error(
     )
     assert not tgt_db.exists()  # Derby creates the database on connect
     assert not state_path.exists()
-
-
-def test_hash_predicate_partitions_live(spark, derby_url):
-    """The hash-split parallel read executes LIVE (round-5 directive): the
-    ANSI MOD form of hash_predicates runs on Derby and the N slices are
-    disjoint-complete — every row lands in exactly one partition. The PG
-    `hashtext` form shares the same double-mod bucket structure; its SQL
-    text stays pinned by test_sink_tap's string assertion."""
-    from youcruit_tap_rawpostgresql_spark.sources.jdbc import hash_predicates
-
-    preds = [
-        p.replace("id", '"id"')
-        for p in hash_predicates("id", 3, dialect="ansi")
-    ]
-    df = spark.read.jdbc(
-        derby_url,
-        "PEOPLE",
-        predicates=preds,
-        properties={"driver": DERBY_DRIVER},
-    )
-    assert df.rdd.getNumPartitions() == 3
-    n_live = _live_count(spark, derby_url)
-    rows = df.select("id").collect()
-    assert len(rows) == n_live  # complete
-    assert len({r["id"] for r in rows}) == n_live  # disjoint
-    # slices genuinely split the table (no empty-bucket degenerate pass)
-    sizes = [len(p) for p in df.select("id").rdd.glom().collect()]
-    assert sum(1 for s in sizes if s > 0) >= 2
 
 
 def test_alias_reads_its_own_snapshot_at_k2(spark, derby_url, monkeypatch):

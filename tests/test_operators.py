@@ -8,8 +8,8 @@ import pytest
 from youcruit_tap_rawpostgresql_spark.operators.conform import conform
 from youcruit_tap_rawpostgresql_spark.operators.flatten import flatten_struct_columns
 from youcruit_tap_rawpostgresql_spark.operators.incremental import (
-    advance_bookmark,
     apply_replication_filter,
+    bookmark_max,
     resolve_starting_bookmark,
 )
 from youcruit_tap_rawpostgresql_spark.operators.maps import apply_stream_map
@@ -98,10 +98,9 @@ def test_replication_filter_and_advance(spark):
     )
     filtered = apply_replication_filter(df, spec, "2024-02-01 00:00:00")
     assert [r["id"] for r in filtered.collect()] == [2]
-    state = StateStore()
-    new_bm = advance_bookmark(filtered, spec, state)
-    assert str(new_bm).startswith("2024-03-01")
-    assert state.get_bookmark(spec.fully_qualified_name).startswith("2024-03-01")
+    # the bookmark advances to the max key over the filtered rows
+    new_bm = filtered.agg(bookmark_max(filtered, "ts")).first()["mx"]
+    assert new_bm == datetime.datetime(2024, 3, 1)
 
 
 def test_stream_map_full_pipeline(spark):
@@ -527,33 +526,6 @@ def test_bookmark_computed_on_premap_frame(spark):
         if _json.loads(ln)["type"] == "RECORD"
     ]
     assert len(recs[0]["record"]["ts"]) == 64
-
-
-def test_tws_sessionize_if_protobuf_available(spark):
-    """transformWithStateInPandas (Spark 4's successor arbitrary-state
-    API): gated on protobuf — the container lacks google.protobuf, so the
-    test skips here and lights up the moment the env gains it (same
-    stance as the Avro classpath gate). The TWS path shares
-    _sessionize_batch with the applyInPandasWithState path, so their
-    outputs must be identical."""
-    import pytest
-
-    from youcruit_tap_rawpostgresql_spark.streaming.stateful import (
-        run_stateful_sessionize,
-        run_tws_sessionize,
-    )
-
-    try:
-        tws = run_tws_sessionize(spark, "/root/testdata/sf0.001/events.parquet")
-    except ImportError as exc:
-        assert "protobuf" in str(exc)  # the gate names its dependency
-        pytest.skip("google.protobuf not installed")
-    legacy = run_stateful_sessionize(
-        spark, "/root/testdata/sf0.001/events.parquet"
-    )
-    assert sorted(map(tuple, tws.collect())) == sorted(
-        map(tuple, legacy.collect())
-    )
 
 
 def test_stream_map_config_ref_inside_literal_is_text(spark):

@@ -80,50 +80,6 @@ def test_stream_map_mask_produces_sha256_hex(spark, cols):
     assert re.fullmatch(r"[0-9a-f]{64}", val)
 
 
-# ---------------------------------------------------------------------------
-# JDBC partition predicates: disjoint + complete for arbitrary ranges/values
-# ---------------------------------------------------------------------------
-
-_INT_PRED = re.compile(r"(-?\d+)\s*(<|>=)\s*(-?\d+)")
-
-
-def _pred_matches(v, pred: str) -> bool:
-    """Evaluate a generated predicate for integer v (None = SQL NULL)."""
-    if v is None:
-        return "IS NULL" in pred
-    body = pred.replace("id", str(v))
-    for clause in body.split(" OR "):
-        terms = [t for t in clause.split(" AND ")]
-        ok = True
-        for t in terms:
-            m = _INT_PRED.search(t)
-            if m is None:  # e.g. "None IS NULL" clause with v not None
-                ok = False
-                break
-            a, op, b = int(m.group(1)), m.group(2), int(m.group(3))
-            ok = ok and (a < b if op == "<" else a >= b)
-        if ok:
-            return True
-    return False
-
-
-@given(
-    st.integers(min_value=-(10**9), max_value=10**9),
-    st.integers(min_value=1, max_value=10**9),
-    st.integers(min_value=2, max_value=32),
-    st.integers(min_value=-(10**12), max_value=10**12) | st.none(),
-)
-@settings(max_examples=200)
-def test_range_predicates_partition_the_integers(lower, span, n, value):
-    from youcruit_tap_rawpostgresql_spark.sources.jdbc import range_predicates
-
-    preds = range_predicates("id", lower, lower + span, n)
-    hits = [p for p in preds if _pred_matches(value, p)]
-    # every possible value (including NULL and far outside the bounds)
-    # lands in exactly one partition — no row lost, no row duplicated
-    assert len(hits) == 1, (value, hits)
-
-
 @given(_ident, st.from_regex(r"[a-z0-9_]{1,10}", fullmatch=True))
 def test_json_arrow_always_becomes_get_json_object(col, key):
     out = translate_pg_sql(f"SELECT {col}->>'{key}' AS v")

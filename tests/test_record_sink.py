@@ -20,10 +20,7 @@ import pytest
 
 from youcruit_tap_rawpostgresql_spark import sink
 from youcruit_tap_rawpostgresql_spark import tap as tap_mod
-from youcruit_tap_rawpostgresql_spark.operators.incremental import (
-    advance_bookmark,
-    bookmark_max,
-)
+from youcruit_tap_rawpostgresql_spark.operators.incremental import bookmark_max
 from youcruit_tap_rawpostgresql_spark.spec import (
     BatchSinkConfig,
     ColumnSpec,
@@ -390,6 +387,54 @@ def test_bookmark_is_driver_zone_independent(spark, rec_src, driver_tz, tmp_path
     assert res.record_count == 0
 
 
+def test_batch_lines_match_records_under_session_zone(spark, utc_driver, tmp_path):
+    """Under a non-UTC session zone, a BATCH file line carries every
+    declared key, nulls included, and writes its TIMESTAMP in UTC: the
+    same record the RECORD path emits for the row."""
+    spark.sql(
+        "SELECT * FROM VALUES (1, timestamp'2024-01-01 00:00:00+00:00', "
+        "CAST(NULL AS STRING), 1.5D) AS t(id, ts, s, d)"
+    ).createOrReplaceTempView("batch_src")
+    zone_key = "spark.sql.session.timeZone"
+    old_zone = spark.conf.get(zone_key)
+    spark.conf.set(zone_key, "Asia/Tokyo")
+    try:
+        spec = StreamSpec(
+            name="nulls", sql="SELECT id, ts, s, d FROM batch_src",
+            columns=[
+                ColumnSpec("id", "int8"), ColumnSpec("ts", "timestamptz"),
+                ColumnSpec("s", "text"), ColumnSpec("d", "float8"),
+            ],
+        )
+        _, records, _, _ = _sync(spark, spec)
+        _, _, out, _ = _sync(
+            spark, spec, batch_mode=True,
+            batch=BatchSinkConfig(root=f"file://{tmp_path}/batch"),
+        )
+    finally:
+        spark.conf.set(zone_key, old_zone)
+        spark.catalog.dropTempView("batch_src")
+    files = [
+        url[len("file://"):]
+        for ln in out.splitlines()
+        if json.loads(ln)["type"] == "BATCH"
+        for url in json.loads(ln)["manifest"]
+    ]
+    lines = []
+    for f in files:
+        with gzip.open(f, "rt") as fh:
+            lines += [json.loads(ln) for ln in fh]
+    assert records == [
+        {"id": 1, "ts": "2024-01-01T00:00:00+00:00", "s": None, "d": 1.5}
+    ]
+    assert lines == [
+        {"id": 1, "ts": "2024-01-01T00:00:00.000000+00:00", "s": None, "d": 1.5}
+    ]
+    assert dt.datetime.fromisoformat(lines[0]["ts"]) == dt.datetime.fromisoformat(
+        records[0]["ts"]
+    )
+
+
 def test_bookmark_max_keeps_ntz_unshifted(spark, driver_tz):
     driver_tz("Asia/Tokyo")
     df = spark.sql(
@@ -399,22 +444,6 @@ def test_bookmark_max_keeps_ntz_unshifted(spark, driver_tz):
     want = dt.datetime(2021, 11, 22, 11, 45, 11, 62824)
     assert df.agg(bookmark_max(df, "k")).first()["mx"] == want
     assert df.agg(bookmark_max(df, "t")).first()["mx"] == want
-
-
-def test_advance_bookmark_ignores_driver_zone(spark, driver_tz):
-    driver_tz("Asia/Tokyo")
-    df = spark.sql(
-        "SELECT timestamp'2021-11-22 11:45:11.062824' AS ts UNION ALL "
-        "SELECT timestamp'2021-11-22 10:00:00'"
-    )
-    spec = StreamSpec(
-        name="adv", sql="x", columns=[ColumnSpec("ts", "timestamptz")],
-        replication_key="ts", replication_key_value_start="2000-01-01",
-    )
-    state = StateStore()
-    want = dt.datetime(2021, 11, 22, 11, 45, 11, 62824)
-    assert advance_bookmark(df, spec, state) == want
-    assert state.get_bookmark(spec.fully_qualified_name, "ts") == "2021-11-22 11:45:11.062824"
 
 
 def test_size_probe_failure_warns_once(spark, tmp_path, monkeypatch, caplog):

@@ -247,28 +247,6 @@ def test_batch_sink_roundtrip(spark, sf_dir, tmp_path):
     assert diff == 0
 
 
-def test_compact_output_merges_small_files(spark, sf_dir, tmp_path):
-    from youcruit_tap_rawpostgresql_spark.sink import compact_output
-    from youcruit_tap_rawpostgresql_spark.sources.registry import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    frag_dir = str(tmp_path / "fragmented")
-    docs.repartition(16).write.parquet(frag_dir)
-    import glob as _glob
-
-    n_in = len(_glob.glob(f"{frag_dir}/part-*"))
-    assert n_in == 16
-
-    out_dir = str(tmp_path / "compacted")
-    n_out = compact_output(spark, frag_dir, out_dir, target_file_bytes=64 * 1024 * 1024)
-    assert n_out < n_in
-    assert len(_glob.glob(f"{out_dir}/part-*")) == n_out
-
-    before = sorted(r.doc_id for r in docs.select("doc_id").collect())
-    after = sorted(r.doc_id for r in spark.read.parquet(out_dir).select("doc_id").collect())
-    assert before == after
-
-
 def test_tap_parallel_sync_interleaves_safely(spark, sf_dir):
     """parallel=3 lifts the reference's one-connection sequential bound
     (client.py:106-119): the Spark work of up to three streams overlaps.
@@ -503,19 +481,6 @@ def test_record_messages_serialize_decimal_and_binary(spark):
     assert rec["amts"] == [1.5]
 
 
-def test_compact_output_rejects_in_place(spark, tmp_path):
-    """In-place compaction would delete the input before the lazy read
-    runs (review finding) — must refuse."""
-    import pytest
-
-    from youcruit_tap_rawpostgresql_spark.sink import compact_output
-
-    p = str(tmp_path / "t")
-    spark.range(10).write.parquet(p)
-    with pytest.raises(ValueError):
-        compact_output(spark, p, p + "/")
-
-
 def test_upsert_empty_first_batch_and_conf_restore(spark, tmp_path):
     """Review findings: an empty first batch must not wedge the sink with
     a dataless directory, and partitionOverwriteMode must not leak."""
@@ -540,19 +505,13 @@ def test_upsert_empty_first_batch_and_conf_restore(spark, tmp_path):
     assert spark.conf.get(key) == before
 
 
-def test_jdbc_validation_and_signsafe_hash():
+def test_jdbc_partition_column_requires_bounds():
     import pytest
 
-    from youcruit_tap_rawpostgresql_spark.sources.jdbc import (
-        hash_predicates,
-        jdbc_options,
-    )
+    from youcruit_tap_rawpostgresql_spark.sources.jdbc import jdbc_options
 
     with pytest.raises(ValueError):
         jdbc_options({"database": "d"}, "SELECT 1", partition_column="id")
-    preds = hash_predicates("id", 4)
-    assert all("abs(" not in p for p in preds)  # INT_MIN-safe double mod
-    assert preds[1] == "mod(mod(hashtext(id::text), 4) + 4, 4) = 1"
 
 
 def test_batch_sync_single_pass_observation(spark, sf_dir, tmp_path):

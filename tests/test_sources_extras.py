@@ -1,4 +1,5 @@
-"""JDBC option construction, binary-file source, multimodal plumbing."""
+"""JDBC option construction, multimodal plumbing, file formats, the
+singer_batch DataSource readers, and the versioned table."""
 
 from youcruit_tap_rawpostgresql_spark.sources.jdbc import jdbc_options, jdbc_url
 
@@ -33,18 +34,6 @@ def test_jdbc_partitioned_read_options():
     assert "query" not in opts
 
 
-def test_binary_file_source(spark, tmp_path):
-    (tmp_path / "a.bin").write_bytes(b"\x00\x01payload")
-    (tmp_path / "b.txt").write_bytes(b"skip me")
-    from youcruit_tap_rawpostgresql_spark.sources.binary import read_binary_files
-
-    df = read_binary_files(spark, str(tmp_path), glob="*.bin")
-    rows = df.collect()
-    assert len(rows) == 1
-    assert bytes(rows[0]["content"]) == b"\x00\x01payload"
-    assert rows[0]["length"] == 9
-
-
 def test_multimodal_stub_batch_shape(spark, sf_dir):
     from youcruit_tap_rawpostgresql_spark.operators.multimodal import (
         attach_binary_payload,
@@ -62,57 +51,6 @@ def test_multimodal_stub_batch_shape(spark, sf_dir):
     assert r["n_bytes"] > 0
     assert r["fake_width"] == r["n_bytes"] % 640
     assert len(r["checksum"]) == 32
-
-
-def test_range_predicates_disjoint_and_complete():
-    from youcruit_tap_rawpostgresql_spark.sources.jdbc import range_predicates
-
-    preds = range_predicates("id", 0, 1000, 4)
-    assert len(preds) == 4
-    # every value in a wide range (and far outside the bounds) matches
-    # exactly one predicate
-    import re
-
-    def matches(v, p):
-        if v is None:
-            return "IS NULL" in p
-        p_num = p.replace("id", str(v)).replace(f" OR {v} IS NULL", "")
-        terms = [t.strip() for t in re.split(r"AND", p_num)]
-        def ev(t):
-            m = re.match(r"(-?\d+)\s*(<|>=)\s*(-?\d+)", t)
-            a, op, b = int(m.group(1)), m.group(2), int(m.group(3))
-            return a < b if op == "<" else a >= b
-        return all(ev(t) for t in terms)
-
-    for v in [-50, 0, 1, 249, 250, 499, 500, 750, 999, 1000, 99999]:
-        hits = [p for p in preds if matches(v, p)]
-        assert len(hits) == 1, (v, hits)
-    assert sum(1 for p in preds if matches(None, p)) == 1
-
-
-def test_hash_predicates_cover_all_buckets():
-    from youcruit_tap_rawpostgresql_spark.sources.jdbc import hash_predicates
-
-    preds = hash_predicates("id", 8)
-    assert len(preds) == 8
-    assert all(f"= {i}" in preds[i] for i in range(8))
-    assert "IS NULL" in preds[0]
-
-
-def test_predicates_validate_args():
-    import pytest
-
-    from youcruit_tap_rawpostgresql_spark.sources.jdbc import (
-        hash_predicates,
-        range_predicates,
-    )
-
-    with pytest.raises(ValueError):
-        range_predicates("id", 0, 0, 4)
-    with pytest.raises(ValueError):
-        range_predicates("id", 0, 10, 0)
-    with pytest.raises(ValueError):
-        hash_predicates("id", 0)
 
 
 def test_csv_roundtrip_with_explicit_schema(spark, tmp_path):
@@ -370,91 +308,6 @@ def test_singer_batch_stream_reader_incremental(spark, sf_dir, tmp_path):
     assert n0 + n1 + n2 == ev.count()
 
 
-def test_singer_batch_writer_transactional_manifest(spark, sf_dir, tmp_path):
-    """Writer side of the custom DataSource: df.write.format('singer_batch')
-    writes rotated gzip-JSONL per task and commits manifest.json ONCE on
-    the driver listing exactly the committed files — then the reader
-    ingests that manifest back to the identical rows (full loop through
-    the DataSource protocol both ways)."""
-    import glob as _glob
-    import json as _json
-
-    from youcruit_tap_rawpostgresql_spark.sources import singer_batch
-    from youcruit_tap_rawpostgresql_spark.sources.registry import load_table
-
-    singer_batch.register(spark)
-    src = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderdate", "o_totalprice"
-    )
-    out = str(tmp_path / "export")
-    (
-        src.write.format("singer_batch")
-        .option("batch_size", 400)
-        .option("stream", "orders_export")
-        .mode("append")
-        .save(out)
-    )
-    man_files = _glob.glob(f"{out}/manifest-*.json")
-    assert len(man_files) == 1
-    man = _json.load(open(man_files[0]))
-    assert man["record_count"] == src.count()
-    assert man["manifest"], "no files committed"
-    # manifest lists exactly the files on disk
-    on_disk = {f"file://{f}" for f in _glob.glob(f"{out}/*.json.gz")}
-    assert set(man["manifest"]) == on_disk
-    # every file respects the rotation bound
-    import gzip as _gzip
-
-    for url in man["manifest"]:
-        with _gzip.open(url[len("file://"):], "rt") as fh:
-            assert sum(1 for _ in fh) <= 400
-    # read back through the reader half: identical rows
-    back = (
-        spark.read.format("singer_batch")
-        .schema("o_orderkey long, o_orderdate timestamp, o_totalprice double")
-        .load(man_files[0])
-    )
-    assert back.count() == src.count()
-    assert src.exceptAll(back).count() == 0 and back.exceptAll(src).count() == 0
-
-
-def test_singer_batch_writer_ignores_the_process_zone(tmp_path):
-    """A TIMESTAMP written through ``df.write.format("singer_batch")`` in
-    a process whose zone is Asia/Tokyo (its JVM and Python workers too)
-    lands in the file as the same UTC instant and reads back unchanged."""
-    import json as _json
-    import os
-    import subprocess
-    import sys
-
-    script = """
-import glob, gzip, json, sys
-from youcruit_tap_rawpostgresql_spark.session import get_session
-from youcruit_tap_rawpostgresql_spark.sources import singer_batch
-spark = get_session(app_name="tokyo", cpus=1)
-singer_batch.register(spark)
-root = sys.argv[1]
-df = spark.sql("SELECT 1 AS id, timestamp'2024-01-01 00:00:00' AS ts")
-df.write.format("singer_batch").mode("overwrite").save(root)
-lines = []
-for f in sorted(glob.glob(root + "/*.json.gz")):
-    with gzip.open(f, "rt") as fh:
-        lines += [json.loads(ln) for ln in fh]
-back = spark.read.format("singer_batch").schema(df.schema).load(root)
-same = back.exceptAll(df).count() == df.exceptAll(back).count() == 0
-print(json.dumps({"lines": lines, "same": same}))
-"""
-    env = dict(os.environ, TZ="Asia/Tokyo", SPARK_GRAFT_DRIVER_MEM="1g")
-    res = subprocess.run(
-        [sys.executable, "-c", script, str(tmp_path / "export")],
-        env=env, capture_output=True, text=True, timeout=300, check=False,
-    )
-    assert res.returncode == 0, res.stderr[-3000:]
-    got = _json.loads(res.stdout.strip().splitlines()[-1])
-    assert got["lines"] == [{"id": 1, "ts": "2024-01-01T00:00:00+00:00"}]
-    assert got["same"]
-
-
 def test_singer_batch_stream_offset_prefilter(tmp_path, monkeypatch):
     """Driver-side manifest scanning is incremental: manifests at or
     below the returned offset are name-filtered BEFORE json parsing, so
@@ -500,65 +353,59 @@ def test_singer_batch_stream_offset_prefilter(tmp_path, monkeypatch):
     assert set(parses) == {str(man_dir / "sync-0002.json")}
 
 
-def test_singer_batch_writer_modes_and_stream_inflight(spark, sf_dir, tmp_path):
-    """Review-driven edges: (a) mode('overwrite') clears previous data
-    files AND manifests; (b) two append jobs commit two manifests (a
-    manifest log) and a directory read returns the union; (c) a remote
-    scheme is rejected up front; (d) the stream reader skips a
-    half-written manifest instead of crashing, then picks it up once
+def test_singer_batch_directory_union_and_inflight_manifest(spark, sf_dir, tmp_path):
+    """On the sink's own files: (a) a directory read returns the union of
+    every batch file present, across syncs; (b) the stream reader skips
+    a half-written manifest instead of crashing, then picks it up once
     complete."""
-    import glob as _glob
     import json as _json
+    import shutil
 
+    from youcruit_tap_rawpostgresql_spark.sink import write_batch_files
     from youcruit_tap_rawpostgresql_spark.sources import singer_batch
     from youcruit_tap_rawpostgresql_spark.sources.registry import load_table
+    from youcruit_tap_rawpostgresql_spark.spec import (
+        BatchSinkConfig,
+        ColumnSpec,
+        StreamSpec,
+    )
 
     singer_batch.register(spark)
-    src = load_table(spark, sf_dir, "region")
-    out = str(tmp_path / "exp")
-    w = src.write.format("singer_batch").option("stream", "r")
-    w.mode("append").save(out)
-    w.mode("append").save(out)
-    assert len(_glob.glob(f"{out}/manifest-*.json")) == 2
-    back_dir = (
-        spark.read.format("singer_batch")
-        .schema("r_regionkey long, r_name string")
-        .load(out)
+    src = load_table(spark, sf_dir, "region").select("r_regionkey", "r_name")
+    spec = StreamSpec(
+        name="r",
+        sql="SELECT 1",
+        columns=[ColumnSpec("r_regionkey", "int8"), ColumnSpec("r_name", "text")],
     )
-    assert back_dir.count() == 2 * src.count()  # union of both jobs
-    # overwrite clears everything prior
-    src.write.format("singer_batch").option("stream", "r").mode(
-        "overwrite"
-    ).save(out)
-    assert len(_glob.glob(f"{out}/manifest-*.json")) == 1
-    assert (
-        spark.read.format("singer_batch")
-        .schema("r_regionkey long, r_name string")
-        .load(out)
-        .count()
-        == src.count()
-    )
-    # remote scheme rejected
-    try:
-        src.write.format("singer_batch").mode("append").save("s3a://bucket/x")
-        raise AssertionError("expected ValueError for remote scheme")
-    except AssertionError:
-        raise
-    except Exception as exc:
-        assert "local" in str(exc)
-    # stream reader vs in-flight manifest
+    slices = [src.filter("r_regionkey < 2"), src.filter("r_regionkey >= 2")]
+    messages = [
+        write_batch_files(
+            sl, spec, BatchSinkConfig(root=f"file://{tmp_path}/files_{i}")
+        )[0].to_message("r")
+        for i, sl in enumerate(slices)
+    ]
+    schema = "r_regionkey long, r_name string"
+
+    # (a) both syncs' files land in one directory
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    for msg in messages:
+        for url in msg["manifest"]:
+            shutil.copy(url[len("file://"):], landing)
+    back_dir = spark.read.format("singer_batch").schema(schema).load(str(landing))
+    assert sorted(back_dir.collect()) == sorted(src.collect())
+
+    # (b) stream reader vs in-flight manifest
     man_dir = tmp_path / "mans"
     man_dir.mkdir()
-    good = _glob.glob(f"{out}/manifest-*.json")[0]
-    (man_dir / "sync-0001.json").write_text(open(good).read())
-    (man_dir / "sync-0002.json").write_text('{"manifest": ["file:///nope')  # truncated
-    counts = []
+    (man_dir / "sync-0001.json").write_text(_json.dumps(messages[0]))
+    (man_dir / "sync-0002.json").write_text('{"manifest": ["file:///nope')
 
     def run():
         got = []
         q = (
             spark.readStream.format("singer_batch")
-            .schema("r_regionkey long, r_name string")
+            .schema(schema)
             .load(str(man_dir))
             .writeStream.foreachBatch(lambda b, _i: got.append(b.count()))
             .option("checkpointLocation", str(tmp_path / "ck"))
@@ -568,11 +415,21 @@ def test_singer_batch_writer_modes_and_stream_inflight(spark, sf_dir, tmp_path):
         q.awaitTermination(120)
         return sum(got)
 
-    counts.append(run())  # in-flight sync-0002 skipped, no crash
-    assert counts[0] == src.count()
-    (man_dir / "sync-0002.json").write_text(open(good).read())  # completed
-    counts.append(run())
-    assert counts[1] == src.count()  # only the newly-completed manifest
+    assert run() == slices[0].count()  # in-flight sync-0002 skipped
+    (man_dir / "sync-0002.json").write_text(_json.dumps(messages[1]))
+    assert run() == slices[1].count()  # only the newly completed manifest
+
+
+def test_singer_batch_stream_rejects_remote_manifest_dir():
+    """The manifest directory is listed with a local glob: a remote URL
+    would list nothing and leave the stream empty forever, so it raises."""
+    import pytest
+
+    from youcruit_tap_rawpostgresql_spark.sources import singer_batch
+
+    with pytest.raises(ValueError, match="must be local"):
+        singer_batch.SingerBatchStreamReader(None, {"path": "s3a://bucket/mans"})
+    singer_batch.SingerBatchStreamReader(None, {"path": "file:///tmp/mans"})
 
 
 def test_versioned_table_time_travel_and_conflict(spark, sf_dir, tmp_path):

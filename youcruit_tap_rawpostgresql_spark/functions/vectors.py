@@ -1,97 +1,22 @@
-"""Columnar vector math over ``array<float>`` embedding columns.
+"""Vector math over ``array<float>`` embedding columns.
 
-Three evaluation strategies with identical IEEE-754 results:
+``cosine_pairs`` is an Arrow-vectorized Pandas UDF for per-pair hot loops
+(candidate joins): no compile cost, memory-bandwidth-bound eval. Its
+accumulation is a sequential left fold over dimensions, so results are
+bit-identical to any other engine's sequential left fold (e.g. DuckDB
+``list_reduce``) — rankings never flip between the Spark plan and an
+oracle.
 
-- **Folded** (default): ``F.aggregate`` over ``F.zip_with`` — tiny
-  expression tree, JVM-side. Best for once-per-row computations where
-  plan-compile time matters more than per-row eval.
-- **Unrolled** (``dim`` known): a left-associated chain of
-  ``a[1]*b[1] + a[2]*b[2] + ...`` terms that inlines into whole-stage
-  codegen with no per-element lambda dispatch — but the wide expression
-  tree costs several seconds of analysis/codegen, so only worth it for
-  hot inner loops that cannot take the pandas path.
-- **Arrow-vectorized** (``cosine_pairs``): a Pandas UDF for per-pair hot
-  loops (candidate joins) — no compile cost, memory-bandwidth-bound eval.
-
-Both orders are the same sequential left fold (``(0.0 + t1) + t2 + ...`` ==
-``(t1 + t2) + ...`` because ``0.0 + x == x`` in IEEE doubles), so results
-are bit-identical to each other and to any other engine's sequential
-left-fold (e.g. DuckDB ``list_reduce``) — rankings never flip between the
-Spark plan and an oracle.
-
-Scale: these expressions evaluate per-row inside whole-stage codegen; a
-cosine top-k over 100 TB of embeddings is bounded by scan + shuffle of the
-candidate pairs, not by the arithmetic.
+Scale: a cosine top-k over 100 TB of embeddings is bounded by scan +
+shuffle of the candidate pairs, not by the arithmetic.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
-
-
-def _dbl(x: Column) -> Column:
-    return x.cast("double")
-
-
-def _chain_sum(terms: list[Column]) -> Column:
-    acc = terms[0]
-    for t in terms[1:]:
-        acc = acc + t
-    return acc
-
-
-def dot(a, b, dim: int | None = None) -> Column:
-    """Sequential-fold dot product in double precision.
-
-    ``b`` may be a Python sequence of floats (e.g. an LSH hyperplane): the
-    coefficients are embedded as literals so Catalyst constant-folds them.
-    Pass ``dim`` when the vector width is known to get the unrolled form.
-    """
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    if isinstance(b, Sequence):
-        return _chain_sum(
-            [_dbl(F.element_at(a, i + 1)) * F.lit(float(x)) for i, x in enumerate(b)]
-        )
-    if dim is not None:
-        return _chain_sum(
-            [
-                _dbl(F.element_at(a, i)) * _dbl(F.element_at(b, i))
-                for i in range(1, dim + 1)
-            ]
-        )
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: _dbl(x) * _dbl(y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def norm(a, dim: int | None = None) -> Column:
-    a = F.col(a) if isinstance(a, str) else a
-    if dim is not None:
-        sq = [
-            _dbl(F.element_at(a, i)) * _dbl(F.element_at(a, i))
-            for i in range(1, dim + 1)
-        ]
-        return F.sqrt(_chain_sum(sq))
-    return F.sqrt(
-        F.aggregate(a, F.lit(0.0), lambda acc, x: acc + _dbl(x) * _dbl(x))
-    )
-
-
-def cosine_similarity(a, b, dim: int | None = None) -> Column:
-    """cos(a, b) = dot / (|a| |b|), NULL-safe on zero vectors."""
-    d = dot(a, b, dim)
-    n = norm(a, dim) * norm(b, dim)
-    return F.when(n != 0, d / n)
 
 
 # DataType instance (not a DDL string): a string return type would be parsed
@@ -102,17 +27,17 @@ def cosine_pairs(a: pd.Series, b: pd.Series) -> pd.Series:
     (candidate joins in top-k / ANN / near-dup), where per-pair expression
     evaluation would dominate.
 
-    Bit-exact with the fold/unrolled expression forms and any sequential
-    left-fold oracle: the accumulation loops over dimensions in order with
-    one vectorized fused add per dim, so each row's dot/norm performs the
-    identical IEEE-754 operation sequence as ``list_reduce`` in DuckDB or
-    ``F.aggregate`` in Spark; ``np.sqrt`` and the final division are single
-    correctly-rounded ops. float32 inputs are widened to float64 first
-    (exact), matching ``CAST(x AS DOUBLE)`` element casts.
+    Bit-exact with any sequential left-fold oracle: the accumulation
+    loops over dimensions in order with one vectorized fused add per dim,
+    so each row's dot/norm performs the identical IEEE-754 operation
+    sequence as ``list_reduce`` in DuckDB or ``F.aggregate`` in Spark;
+    ``np.sqrt`` and the final division are single correctly-rounded ops.
+    float32 inputs are widened to float64 first (exact), matching
+    ``CAST(x AS DOUBLE)`` element casts.
 
     Scale: one Arrow batch in, one float64 column out — no Python per-row
     cost; throughput is memory-bandwidth bound (~1 GB/s/core on 64-dim).
-    Zero vectors yield NULL (parity with cosine_similarity).
+    Zero vectors yield NULL.
     """
     if len(a) == 0:
         return pd.Series(np.empty(0, dtype=np.float64))
@@ -138,10 +63,8 @@ def cosine_f64_block(A: "np.ndarray", B: "np.ndarray"):
     """Pairwise cosine of two aligned (rows, dim) float64 blocks.
 
     Returns ``(cos, norm_product)`` — callers NULL rows where the norm
-    product is 0. Shared by ``cosine_pairs`` and the fused score+top-k
-    kernel in ``sim_cosine_topk`` so every consumer performs the IDENTICAL
-    IEEE-754 operation sequence (sequential per-dimension fold), keeping
-    ranks bit-exact against sequential-fold oracles."""
+    product is 0. A sequential per-dimension fold, keeping ranks
+    bit-exact against sequential-fold oracles."""
     d = A[:, 0] * B[:, 0]
     na = A[:, 0] * A[:, 0]
     nb = B[:, 0] * B[:, 0]

@@ -1,7 +1,6 @@
 from youcruit_tap_rawpostgresql_spark.operators.conform import conform  # noqa: F401
 from youcruit_tap_rawpostgresql_spark.operators.flatten import flatten_struct_columns  # noqa: F401
 from youcruit_tap_rawpostgresql_spark.operators.incremental import (  # noqa: F401
-    advance_bookmark,
     apply_replication_filter,
     resolve_starting_bookmark,
 )

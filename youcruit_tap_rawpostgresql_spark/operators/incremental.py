@@ -88,13 +88,3 @@ def bookmark_max(df: DataFrame, key: str):
         mx = mx.cast("timestamp_ntz")
     return mx.alias("mx")
 
-
-def advance_bookmark(df: DataFrame, spec: StreamSpec, state: StateStore) -> Any:
-    """Compute max(replication_key) and store it (reference R4)."""
-    if spec.replication_key is None:
-        return None
-    row = df.agg(bookmark_max(df, spec.replication_key)).first()
-    new_val = row["mx"] if row else None
-    if new_val is not None:
-        state.set_bookmark(spec.fully_qualified_name, spec.replication_key, new_val)
-    return new_val

@@ -9,9 +9,10 @@ plumbing a production decode would use.
 Scale: ``mapInPandas`` streams Arrow batches through the Python worker, so
 memory is bounded by ``spark.sql.execution.arrow.maxRecordsPerBatch`` (not
 partition size); binary payloads never pass through the driver. For real
-media, pair with ``spark.read.format("binaryFile")`` (see sources/binary.py)
-and keep payload columns out of shuffles (extract features first, drop the
-bytes before any wide transform).
+media, read files with ``spark.read.format("binaryFile")`` (its
+``pathGlobFilter`` option prunes by extension at listing time) and keep
+payload columns out of shuffles (extract features first, drop the bytes
+before any wide transform).
 """
 
 from __future__ import annotations

@@ -19,14 +19,18 @@ Scale: the write parallelizes across partitions; there is no driver-side
 row loop. ``coalesce`` is applied only when the caller asks for
 reference-exact global rotation (small exports).
 
+The JSON write keeps null fields (``ignoreNullFields=false``) and writes
+every TIMESTAMP in UTC (``timeZone=UTC``), so a batch-file line carries
+the same keys and the same instants as the RECORD message for its row,
+whatever the session zone.
+
 RECORD messages cross the driver. One function, ``records``, builds every
 Python-side JSON record from an Arrow batch. A frame whose optimizer size
 estimate fits ``RECORD_COLLECT_BUDGET`` is collected by ONE Arrow action
 and serialized on the driver; a larger (or unsized) frame is serialized
 on the Python workers (``mapInArrow``) and its lines stream one partition
-at a time through ``toLocalIterator``; the ``singer_batch`` DataSource
-writer serializes in its write tasks. So every path writes the same bytes
-for the same values, whatever the local zone of the process.
+at a time through ``toLocalIterator``. Both write the same bytes for the
+same values, whatever the local zone of the process.
 """
 
 from __future__ import annotations
@@ -169,6 +173,8 @@ def write_batch_files(
         .option("compression", codec)
         .option("maxRecordsPerFile", batch.batch_size)
         .option("timestampFormat", ISO_TS_FORMAT)
+        .option("timeZone", "UTC")
+        .option("ignoreNullFields", "false")
         .json(out_dir)
     )
 
@@ -280,8 +286,7 @@ def records(batch):
     """The record dicts of one Arrow batch, ready for ``json.dumps``: the
     one Python-side record serializer. The in-budget RECORD collect runs
     it on the driver, the over-budget RECORD path on the Python workers
-    (``_line_batches``), and the ``singer_batch`` DataSource writer in
-    its write tasks."""
+    (``_line_batches``)."""
     names = batch.schema.names
     cols = []
     for col, field in zip(batch.columns, batch.schema):
@@ -350,59 +355,3 @@ def emit_record_messages(
 def emit_state_message(state_dict: dict, write) -> None:
     write(json.dumps({"type": "STATE", "value": state_dict}) + "\n")
 
-
-# ---------------------------------------------------------------------------
-# Small-file compaction
-# ---------------------------------------------------------------------------
-
-
-def compact_output(
-    spark,
-    in_path: str,
-    out_path: str,
-    fmt: str = "parquet",
-    target_file_bytes: int = 128 * 1024 * 1024,
-    **read_options,
-) -> int:
-    """Rewrite a directory of small files into ~``target_file_bytes`` files;
-    returns the output file count.
-
-    The long-running incremental tap (reference F2 semantics) appends one
-    batch of files per sync — after thousands of syncs the table is millions
-    of tiny files and every scan pays per-file open/footer cost. Compaction
-    sizes the output from the *measured* input bytes (Hadoop FS content
-    summary, so file://, s3a:// etc. all work) and lets a round-robin
-    ``repartition`` write evenly sized files. Row order is not preserved
-    (irrelevant for unordered table storage).
-
-    Scale: one full read + shuffle + write of the compacted partition —
-    run it per time-partition (e.g. per day), not over the whole table.
-    """
-    import math
-
-    if in_path.rstrip("/") == out_path.rstrip("/"):
-        # static overwrite deletes the target before the lazy read runs —
-        # in-place compaction would destroy the very data being compacted
-        raise ValueError(
-            "compact_output: out_path must differ from in_path "
-            "(overwrite deletes the input before the read executes)"
-        )
-
-    sc = spark.sparkContext
-    jvm = sc._jvm
-    conf = sc._jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path(in_path)
-    fs = jpath.getFileSystem(conf)
-    total_bytes = fs.getContentSummary(jpath).getLength()
-    n_files = max(1, math.ceil(total_bytes / target_file_bytes))
-
-    df = spark.read.options(**read_options).format(fmt).load(in_path)
-    df.repartition(n_files).write.mode("overwrite").format(fmt).save(out_path)
-
-    out_jpath = jvm.org.apache.hadoop.fs.Path(out_path)
-    out_fs = out_jpath.getFileSystem(conf)
-    return sum(
-        1
-        for s in out_fs.listStatus(out_jpath)
-        if str(s.getPath().getName()).startswith("part-")
-    )

@@ -88,76 +88,3 @@ def read_jdbc_stream(
         .load()
     )
 
-
-def range_predicates(
-    column: str,
-    lower: int,
-    upper: int,
-    num_partitions: int,
-) -> list[str]:
-    """Disjoint, complete WHERE predicates over an integer key range —
-    the explicit-predicate form of Spark's partitioned JDBC read
-    (``spark.read.jdbc(..., predicates=...)``).
-
-    Unlike lowerBound/upperBound stride partitioning, explicit predicates
-    let the caller handle open ends: the first predicate catches values
-    below ``lower`` and the last catches values at/above ``upper``, so no
-    source row is ever silently dropped (stride partitioning clamps — rows
-    outside the bounds land in the edge partitions there too, but the
-    explicit form makes the contract visible and testable).
-    """
-    if num_partitions < 1:
-        raise ValueError("num_partitions must be >= 1")
-    if upper <= lower:
-        raise ValueError("upper must be > lower")
-    if num_partitions == 1:
-        return [f"{column} IS NOT NULL OR {column} IS NULL"]  # whole table
-    span = upper - lower
-    bounds = [lower + (span * i) // num_partitions for i in range(1, num_partitions)]
-    preds = [f"{column} < {bounds[0]} OR {column} IS NULL"]
-    preds += [
-        f"{column} >= {bounds[i]} AND {column} < {bounds[i + 1]}"
-        for i in range(len(bounds) - 1)
-    ]
-    preds.append(f"{column} >= {bounds[-1]}")
-    return preds
-
-
-def hash_predicates(
-    column: str, num_partitions: int, dialect: str = "postgresql"
-) -> list[str]:
-    """Hash-mod WHERE predicates for keys with no usable range (UUIDs,
-    skewed ids): source-side hash/mod splits rows evenly regardless of
-    key distribution. NULLs ride with bucket 0.
-
-    ``dialect="postgresql"`` (the reference's production target) hashes
-    ANY key type via ``hashtext(col::text)``. ``dialect="ansi"`` emits
-    plain ``MOD`` on the key — runs on any ANSI engine (Derby, H2, …)
-    but requires an INTEGER column; the e2e Derby test executes this
-    form live to prove the disjoint-complete contract, which the PG form
-    shares structurally (same double-mod bucketing around an int-valued
-    expr).
-
-    Scale note: each of the N concurrent queries still scans the table
-    server-side unless the column is indexed by an expression index on the
-    same hash — prefer ``range_predicates`` on an indexed key when one
-    exists; hash split is the fallback that always balances.
-    """
-    if num_partitions < 1:
-        raise ValueError("num_partitions must be >= 1")
-    # sign-safe double mod: hash/key values may be negative and SQL MOD
-    # keeps the dividend's sign (and abs(INT_MIN) errors in PostgreSQL,
-    # so abs() would fail on ~1/2^32 of keys)
-    if dialect == "postgresql":
-        inner = f"hashtext({column}::text)"
-    elif dialect == "ansi":
-        inner = column
-    else:
-        raise ValueError(f"unknown hash-split dialect {dialect!r}")
-    expr = (
-        f"mod(mod({inner}, {num_partitions}) "
-        f"+ {num_partitions}, {num_partitions})"
-    )
-    preds = [f"{expr} = {i}" for i in range(num_partitions)]
-    preds[0] = f"({preds[0]}) OR {column} IS NULL"
-    return preds

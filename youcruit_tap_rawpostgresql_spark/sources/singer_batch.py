@@ -28,11 +28,9 @@ from dataclasses import dataclass
 
 from pyspark.sql.datasource import (
     DataSource,
-    DataSourceArrowWriter,
     DataSourceReader,
     DataSourceStreamReader,
     InputPartition,
-    WriterCommitMessage,
 )
 
 FORMAT_NAME = "singer_batch"
@@ -238,10 +236,9 @@ def _arrow_fast_schema(schema):
     and the per-row conversion gone entirely).
 
     Eligible: integer/float/string/boolean scalars, and TIMESTAMP — the
-    writers put ISO-8601 with an explicit offset (``sink.records`` writes
-    every timestamp in UTC with +00:00, Spark's JSON writer uses
-    ``sink.ISO_TS_FORMAT``), which Arrow parses into timestamp(us, UTC),
-    bit-identical to the ``fromisoformat`` path (oracle-gated).
+    sink writes ISO-8601 with an explicit offset (``sink.ISO_TS_FORMAT``
+    in UTC), which Arrow parses into timestamp(us, UTC), bit-identical to
+    the ``fromisoformat`` path (oracle-gated).
     NOT eligible (fall back per-row): decimals (JSON floats must become
     ``Decimal(str(v))``, not a binary-double cast), binary (base64
     text), dates, TIMESTAMP_NTZ, and nested types."""
@@ -334,9 +331,6 @@ class SingerBatchDataSource(DataSource):
     def streamReader(self, schema):
         return SingerBatchStreamReader(schema, self.options)
 
-    def writer(self, schema, overwrite):
-        return SingerBatchWriter(self.options, overwrite)
-
 
 def register(spark) -> None:
     spark.dataSource.register(SingerBatchDataSource)
@@ -350,15 +344,20 @@ class SingerBatchStreamReader(DataSourceStreamReader):
 
     Offsets are ``{"last": "<manifest filename>"}`` — the greatest
     manifest name ingested so far (names compare lexicographically).
-    REQUIREMENT: manifests must land under ascending names (the
-    singer_batch writer's timestamp-prefixed ``manifest-...json`` names
-    satisfy this; so do zero-padded sync counters). Name-based offsets
-    make re-ingestion impossible even if a late manifest sorts below the
-    watermark — such a manifest is NOT picked up (it violates the
-    append-only contract) rather than corrupting exactly-once. A manifest
-    that fails to parse is treated as in-flight and skipped until its
-    writer finishes (the writer publishes atomically via rename, so its
-    manifests are never seen half-written).
+    REQUIREMENT: whoever saves the BATCH messages as manifest files must
+    give them ascending names (zero-padded sync counters, or
+    timestamp-prefixed names). Name-based offsets make re-ingestion
+    impossible even if a late manifest sorts below the watermark — such
+    a manifest is NOT picked up (it violates the append-only contract)
+    rather than corrupting exactly-once. A manifest that fails to parse
+    is treated as in-flight and skipped until it is complete (a producer
+    that publishes by rename is never seen half-written).
+
+    The manifest directory must be local (a path or ``file://``): the
+    driver lists it with ``glob``, which would find nothing under a
+    remote URL and leave the stream silently empty, so ``s3a://`` and
+    other schemes raise up front. The batch files a manifest names may
+    be remote.
 
     The driver only LISTS manifests; record reading happens on executors,
     one input partition per batch file — the same partition-per-file
@@ -369,6 +368,11 @@ class SingerBatchStreamReader(DataSourceStreamReader):
         self.path = options.get("path")
         if not self.path:
             raise ValueError("singer_batch stream: .load(manifest_dir) required")
+        if "://" in self.path and not self.path.startswith("file://"):
+            raise ValueError(
+                "singer_batch stream: the manifest directory must be local "
+                f"(a path or file://); got {self.path!r}"
+            )
         # decided once on the driver, same as the batch reader
         self._fast = _arrow_fast_schema(schema)
         # highest offset this reader instance has returned — manifests at
@@ -429,134 +433,3 @@ class SingerBatchStreamReader(DataSourceStreamReader):
     def commit(self, end: dict):
         pass  # progress is the checkpoint's offset log; nothing to ack
 
-
-# --- writer side: df.write.format("singer_batch").save(root) ------------
-
-@dataclass
-class _WroteFiles(WriterCommitMessage):
-    urls: list[str]
-    n_records: int
-
-
-class SingerBatchWriter(DataSourceArrowWriter):
-    """Transactional gzip-JSONL batch export through the DataSource write
-    protocol: each task writes its own rotated ``.json.gz`` files and
-    reports them in a commit message; ``commit()`` runs ONCE on the driver
-    with every task's message and only then publishes a manifest — written
-    to a temp name and RENAMED, so readers (including the streaming
-    manifest-log reader) never observe a partial manifest, and a
-    failed/retried task's orphans are never referenced. Each job commits
-    its OWN timestamp-prefixed ``manifest-<ns>-<uuid>.json``: append-mode
-    jobs accumulate a manifest log (exactly what the stream reader
-    consumes), and a manifest read returns exactly one job's output while
-    a directory read returns the union — both semantics are deliberate.
-    ``mode("overwrite")`` clears previous data files AND manifests up
-    front. Each task gets Arrow batches and serializes them with
-    ``sink.records``, the serializer of the RECORD messages too, so a
-    file line equals a RECORD message's ``record`` (timestamps in UTC
-    whatever the worker's zone, structs as objects, binary as base64).
-
-    Local filesystems only: remote schemes raise up front instead of
-    silently writing to a local directory named ``s3a:/...``.
-
-    Scale: same parallel-write shape as the sink (every task rotates at
-    ``batch_size``); the only driver work is the file-list merge."""
-
-    def __init__(self, options, overwrite: bool):
-        import glob as _glob
-        import os
-
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("singer_batch write: .save(root) is required")
-        if "://" in self.path and not self.path.startswith("file://"):
-            raise ValueError(
-                "singer_batch write supports local (file://) roots only; "
-                f"got {self.path!r} — export to a local staging dir or use "
-                "the Hadoop-FS sink (sink.write_batch_files) for object "
-                "stores"
-            )
-        self.batch_size = int(options.get("batch_size", 100_000))
-        self.prefix = options.get("prefix", "")
-        self.stream_name = options.get("stream", "stream")
-        root = _local_path(self.path)
-        os.makedirs(root, exist_ok=True)
-        if overwrite:
-            # overwrite semantics: the previous export (data + manifest
-            # log) is gone the moment the new job starts
-            for f in _glob.glob(os.path.join(root, "*.json.gz")) + _glob.glob(
-                os.path.join(root, "manifest*.json")
-            ):
-                os.remove(f)
-
-    def write(self, iterator):
-        import os
-        import uuid as _uuid
-
-        from youcruit_tap_rawpostgresql_spark.sink import records
-
-        root = _local_path(self.path)
-        urls: list[str] = []
-        n_total = 0
-        fh = None
-        n_in_file = 0
-        task_id = _uuid.uuid4().hex[:12]
-        try:
-            for rec in (r for batch in iterator for r in records(batch)):
-                if fh is None or n_in_file >= self.batch_size:
-                    if fh is not None:
-                        fh.close()
-                    fname = (
-                        f"{self.prefix}{self.stream_name}-{task_id}"
-                        f"-{len(urls)}.json.gz"
-                    )
-                    fpath = os.path.join(root, fname)
-                    fh = gzip.open(fpath, "wt")
-                    urls.append(f"file://{fpath}")
-                    n_in_file = 0
-                fh.write(json.dumps(rec) + "\n")
-                n_in_file += 1
-                n_total += 1
-        finally:
-            if fh is not None:
-                fh.close()
-        return _WroteFiles(urls=urls, n_records=n_total)
-
-    def commit(self, messages):
-        import os
-        import time as _time
-        import uuid as _uuid
-
-        root = _local_path(self.path)
-        files = []
-        n = 0
-        for m in messages:
-            if m is not None:
-                files.extend(m.urls)
-                n += m.n_records
-        manifest = {
-            "type": "BATCH",
-            "stream": self.stream_name,
-            "encoding": {"format": "jsonl", "compression": "gzip"},
-            "manifest": sorted(files),
-            "record_count": n,
-        }
-        # ascending, collision-free name (the stream reader's offset
-        # contract) + atomic publish via rename
-        name = f"manifest-{_time.time_ns():020d}-{_uuid.uuid4().hex[:8]}.json"
-        tmp = os.path.join(root, f".{name}.tmp")
-        with open(tmp, "w") as fh:
-            json.dump(manifest, fh)
-        os.replace(tmp, os.path.join(root, name))
-
-    def abort(self, messages):
-        import os
-
-        for m in messages:
-            if m is None:
-                continue
-            for url in m.urls:
-                try:
-                    os.remove(_local_path(url))
-                except OSError:
-                    pass

@@ -67,12 +67,10 @@ def _sessionize_batch(
     seq: int,
     open_count: int,
 ) -> Tuple[pd.DataFrame, Tuple[int, int, int]]:
-    """State-API-agnostic sessionizer core, shared by BOTH arbitrary-state
-    streaming APIs (applyInPandasWithState's GroupState and
-    transformWithStateInPandas's ValueState): continue the open session
-    from state, cut a new session on a > 30 min gap, emit every session
-    touched in this batch with its count so far (counts only grow →
-    MAX-merge downstream). Returns (output frame, new state tuple)."""
+    """The sessionizer core, apart from the state API: continue the open
+    session from state, cut a new session on a > 30 min gap, emit every
+    session touched in this batch with its count so far (counts only grow
+    → MAX-merge downstream). Returns (output frame, new state tuple)."""
     batch = pd.concat(list(pdfs), ignore_index=True)
     batch = batch.sort_values(["ts", "event_id"], kind="mergesort")
     us = batch["ts"].astype("int64") // 1000  # ns → µs, vectorized
@@ -143,74 +141,6 @@ def run_stateful_sessionize(spark: SparkSession, events_path: str) -> DataFrame:
     )
     q.awaitTermination()
     # MAX-merge re-emissions: a session's count only grows across batches
-    out = (
-        spark.table(sink)
-        .groupBy("user_id", "session_seq")
-        .agg(F.max("n_events").alias("n_events"))
-    )
-    return drain_memory_sink(spark, sink, out)
-
-
-def run_tws_sessionize(spark: SparkSession, events_path: str) -> DataFrame:
-    """The SAME sessionization through ``transformWithStateInPandas`` —
-    Spark 4's successor arbitrary-state API (StatefulProcessor + typed
-    state handles, replacing applyInPandasWithState's single GroupState).
-    Shares ``_sessionize_batch`` with the legacy-API path, so the two must
-    produce identical sessions — the equivalence a gated test asserts.
-
-    Runtime gate: the TWS Python worker talks to the JVM state server
-    over protobuf, which this container lacks — callers get an immediate
-    ImportError naming the dependency instead of an executor-side crash.
-    (applyInPandasWithState covers the operator surface meanwhile.)"""
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError as exc:  # pragma: no cover - env-dependent
-        raise ImportError(
-            "transformWithStateInPandas requires the 'protobuf' package "
-            "(google.protobuf) for Python-worker/state-server framing; "
-            "use run_stateful_sessionize (applyInPandasWithState) instead"
-        ) from exc
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _SessionizeProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._sess = handle.getValueState("sess", _STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            (user_id,) = key
-            stored = self._sess.get()
-            last_us, seq, open_count = stored if stored is not None else (None, 0, 0)
-            out, new_state = _sessionize_batch(
-                user_id, rows, last_us, seq, open_count
-            )
-            self._sess.update(new_state)
-            yield out
-
-        def close(self) -> None:
-            pass
-
-    stream = open_file_stream(spark, events_path).select("user_id", "event_id", "ts")
-    sessions = stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_SessionizeProcessor(),
-        outputStructType=_OUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-    sink = f"tws_sessions_{uuid.uuid4().hex[:8]}"
-    # no partition cap: per-group Python work wants every core (see
-    # run_stateful_sessionize)
-    q = (
-        sessions.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     out = (
         spark.table(sink)
         .groupBy("user_id", "session_seq")

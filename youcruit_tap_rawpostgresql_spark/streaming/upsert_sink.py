@@ -195,8 +195,10 @@ def run_streaming_versioned_sink(
 
     Scale: micro-batch commits are O(1) manifest publishes; keyed mode
     gets statistics-pruned rewrites, so steady-state cost follows each
-    batch's key range. Combined with the singer_batch streaming reader
-    this closes the loop: manifests in → exactly-once snapshots out.
+    batch's key range. Fed by the singer_batch streaming reader over a
+    directory where each sync's BATCH message is saved as a manifest
+    file, this closes the loop: manifests in → exactly-once snapshots
+    out.
 
     Returns the StreamingQuery (caller awaits termination)."""
     import hashlib
