@@ -399,6 +399,35 @@ def test_trgm_similarity_pg_docs_literal(spark):
     assert row["eq"] == 1.0
 
 
+def test_pg_functions_register_only_when_called(spark):
+    """``run_sql`` registers the PG extension functions on a session only
+    for a statement that calls one (``similarity(``, or a jsonb operator
+    the dialect turns into a call); ``ensure_pg_functions`` registers
+    exactly the functions ``_PG_FUNCTION_NAMES`` lists."""
+    from youcruit_tap_rawpostgresql_spark.plans import executor
+
+    session = spark.newSession()  # its own temporary functions and views
+    session.sql("SELECT id FROM range(5)").createOrReplaceTempView("pg_fn_src")
+    assert executor.run_sql(
+        session, "SELECT id FROM pg_fn_src WHERE id > :v", params={"v": 2}
+    ).count() == 2
+    assert not session.catalog.functionExists("similarity")
+    row = executor.run_sql(
+        session,
+        "SELECT round(SIMILARITY('word', 'two words'), 8) AS s, "
+        "'{\"a\":1}'::jsonb || '{\"b\":2}'::jsonb AS j",
+    ).first()
+    assert row["s"] == 0.36363636
+    assert row["j"] == '{"a":1,"b":2}'
+    assert session.catalog.functionExists("similarity")
+
+    fresh = spark.newSession()
+    before = {f.name for f in fresh.catalog.listFunctions()}
+    executor.ensure_pg_functions(fresh)
+    added = {f.name for f in fresh.catalog.listFunctions()} - before
+    assert added == set(executor._PG_FUNCTION_NAMES)
+
+
 # --- left/right/substring window clipping (round-9 judge directive 1) --------
 # PG reads a negative n in left/right as "all but the last/first |n|
 # characters" (docs §9.4, Table 9.10); Spark returns '' there. substring's

@@ -192,3 +192,31 @@ def test_tables_reuses_the_last_registration(spark, sf_dir, tmp_path, monkeypatc
     qreg.tables(spark, sf_dir)
     assert calls == [sf_dir]
     assert spark.table("region").count() == n_region
+
+
+def test_naive_timestamp_columns_are_named_once(spark, tmp_path, caplog):
+    """A naive parquet timestamp (``isAdjustedToUTC=false``) gets no
+    row-group filter in Spark, so ``load_table`` names such columns in one
+    warning per table path, also when the table is reloaded after a file
+    is added; a UTC-adjusted table gets none."""
+    caplog.set_level(logging.WARNING, logger=registry.__name__)
+    ts = pa.array([1_700_000_000_000_000], type=pa.int64())
+    for name, typ in (("naive_ts", pa.timestamp("us")),
+                      ("utc_ts", pa.timestamp("us", tz="UTC"))):
+        table = pa.table({"id": [1], "ts": ts.cast(typ)})
+        (tmp_path / f"{name}.parquet").mkdir()
+        pq.write_table(table, tmp_path / f"{name}.parquet" / "part-0.parquet")
+    tables = ("naive_ts", "utc_ts")
+    register_testdata(spark, str(tmp_path), tables=tables)
+    for name in tables:  # a new file: both tables load again
+        pq.write_table(
+            pq.read_table(tmp_path / f"{name}.parquet" / "part-0.parquet"),
+            tmp_path / f"{name}.parquet" / "part-1.parquet",
+        )
+    frames = register_testdata(spark, str(tmp_path), tables=tables)
+    assert frames["naive_ts"].count() == 2  # reloaded
+    noticed = [r.getMessage() for r in caplog.records if r.name == registry.__name__]
+    assert len(noticed) == 1
+    assert "naive_ts.parquet" in noticed[0] and "columns ts " in noticed[0]
+    for name in tables:
+        spark.catalog.dropTempView(name)

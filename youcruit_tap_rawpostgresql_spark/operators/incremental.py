@@ -10,9 +10,11 @@ Reference behavior (``client.py:260-298``):
 - After a sync the bookmark advances to max(replication_key).
 
 Here the same semantics drive either (a) a ``:rep_key_val`` parameter bound
-into stream SQL, or (b) a DataFrame-level filter — both push down to the
-scan (parquet min/max skipping or JDBC WHERE), so an incremental sync over a
-100 TB table reads only the new partitions/row-groups.
+into stream SQL, or (b) a DataFrame-level filter. Both push down to the
+scan: a JDBC WHERE, or a parquet predicate whose row-group min/max skipping
+holds for integer keys and UTC-adjusted timestamps. A naive parquet
+timestamp key (``isAdjustedToUTC=false``) skips no row group, so each sync
+reads the whole table (``sources/registry.py``).
 """
 
 from __future__ import annotations

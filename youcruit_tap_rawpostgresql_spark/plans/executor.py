@@ -8,6 +8,7 @@ semantics follow ``client.py:260-298``.
 
 from __future__ import annotations
 
+import re
 import weakref as _weakref
 from typing import Any, Mapping
 
@@ -50,11 +51,33 @@ RETURN CASE WHEN a IS NULL OR b IS NULL THEN CAST(NULL AS DOUBLE)
 """,
 )
 
+# every function ensure_pg_functions registers; run_sql registers them on
+# the first statement that calls one
+_PG_FUNCTION_NAMES = (
+    "trgm_set",
+    "similarity",
+    "jsonb_set",
+    "jsonb_insert",
+    "jsonb_strip_nulls",
+    "jsonb_concat",
+    "jsonb_delete_key",
+    "jsonb_delete_index",
+    "jsonb_delete_path",
+    "jsonb_contains",
+    "json_each_entries",
+    "json_each_text_entries",
+    "jsonb_each_entries",
+    "jsonb_each_text_entries",
+)
+_PG_FUNCTION_CALL_RE = re.compile(
+    r"\b(?:%s)\s*\(" % "|".join(_PG_FUNCTION_NAMES), re.IGNORECASE
+)
 _PG_FUNCTIONS_READY: "_weakref.WeakSet" = _weakref.WeakSet()
 
 
 def ensure_pg_functions(spark: SparkSession) -> None:
-    """Register the PG-extension SQL UDFs once per SparkSession. The memo
+    """Register the PG-extension SQL UDFs (``_PG_FUNCTION_NAMES``) once per
+    SparkSession; ``run_sql`` calls it for a statement that calls one. The memo
     is a WeakSet of session OBJECTS, not applicationId: temporary
     functions are session-scoped, and ``spark.newSession()`` shares the
     applicationId but not the function registry (round-8 self-review —
@@ -101,13 +124,14 @@ def run_sql(
     ``translate_pg_sql``."""
     if not sql or not sql.strip():
         raise SpecError("sql must not be empty")  # reference client.py:255-258
-    ensure_pg_functions(spark)
     text = translate_pg_sql(
         sql,
         bind=False,
         column_types=column_types,
         standard_conforming_strings=standard_conforming_strings,
     )
+    if _PG_FUNCTION_CALL_RE.search(text):
+        ensure_pg_functions(spark)
     if params:
         return spark.sql(text, args=dict(params))
     return spark.sql(text)

@@ -35,6 +35,10 @@ def get_session(app_name: str = "youcruit_tap_rawpostgresql_spark", cpus: int | 
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # the codegen cache is keyed per classloader, so a stage compiled
+        # on the driver and in a task takes two entries: the default 100
+        # evicts within one pass over the querybank headliners
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     if os.environ.get("SPARK_GRAFT_EVENTLOG"):
         # measurement aid (guide §1/§7): stage-level wall attribution for

@@ -5,6 +5,11 @@ string is shipped to it (``client.py:300-304``). Here the source is a set of
 parquet tables registered as temp views; Spark SQL over those views replaces
 the PostgreSQL planner/executor. Catalyst pushes filters/column pruning into
 the parquet scan, which is the columnar analogue of whole-query pushdown.
+Row-group skipping on a timestamp column needs it written UTC-adjusted
+(``isAdjustedToUTC=true``): for a naive one, read as ``TIMESTAMP_NTZ``,
+Spark 4.1 builds no parquet row-group filter, although ``PushedFilters``
+lists the predicate, so a bookmark filter on it reads every row group.
+``load_table`` names such columns once per table path.
 
 Scale notes: parquet scans parallelize per file split
 (``spark.sql.files.maxPartitionBytes``, default 128 MB); at 100 TB the same
@@ -22,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 logger = logging.getLogger(__name__)
 _footer_warned = False
+_naive_noticed: set[str] = set()  # table paths whose naive columns were named
 
 # Tables the driver generates (TESTDATA.md); identical schema across SFs.
 TESTDATA_TABLES: tuple[str, ...] = (
@@ -109,7 +115,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     the same floor-to-micros DuckDB applies, so oracles agree. The
     conversion is a per-row expression inside codegen; predicate pushdown
     on the converted column is lost, which is acceptable for the synthetic
-    fixtures (production tables should write micros)."""
+    fixtures (production tables should write micros). Naive micros
+    columns are cast by ``normalize_timestamps`` and named in a warning,
+    once per table path: a filter on them skips no row group (module
+    docstring)."""
+    from pyspark.sql.types import TimestampNTZType
+
     path = os.path.join(sf_dir, f"{name}.parquet")
     ns_cols = _nanos_timestamp_cols(path)
     if ns_cols:
@@ -130,8 +141,18 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 spark.conf.set(key, old)
         for c in ns_cols:
             df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-        return normalize_timestamps(df)
-    return normalize_timestamps(spark.read.parquet(path))
+    else:
+        df = spark.read.parquet(path)
+    naive = [f.name for f in df.schema.fields if isinstance(f.dataType, TimestampNTZType)]
+    if naive and path not in _naive_noticed:
+        _naive_noticed.add(path)
+        logger.warning(
+            "%s: naive parquet timestamp columns %s (isAdjustedToUTC=false) "
+            "are cast to TIMESTAMP; a filter on them cannot skip row groups",
+            path,
+            ", ".join(naive),
+        )
+    return normalize_timestamps(df)
 
 
 # session → {table path: (file listing, the loaded frame's JVM Dataset)}.
