@@ -1,10 +1,11 @@
 """Whole-stage codegen and the RECORD delivery (``SparkTap._sync``).
 
-A RECORD delivery plans and runs with ``spark.sql.codegen.wholeStage`` off:
-each sync binds a new bookmark literal into the stage source, so a fused
-stage would compile anew on every sync. BATCH writes and table commits
-keep whole-stage codegen, and the session's own setting is back after
-every sync, also after a failed one and at ``parallel`` > 1.
+A RECORD sync (``sync_stream``, or ``sync_all`` with neither BATCH mode nor
+a commit) plans and runs with ``spark.sql.codegen.wholeStage`` off: each
+sync binds a new bookmark literal into the stage source, so a fused stage
+would compile anew on every sync. BATCH writes and table commits keep
+whole-stage codegen, and the session's own setting is back after every
+sync, also after a failed one and at ``parallel`` > 1.
 """
 
 from __future__ import annotations
@@ -170,6 +171,10 @@ def test_only_record_deliveries_turn_wholestage_off(spark, codegen_src, tmp_path
     _set(spark, None)
     record = _codegen_ids(spark, _tap(spark, tmp_path / "r").sync_all)
     assert record and not any(record)
+    one = _tap(spark, tmp_path / "s")
+    record = _codegen_ids(spark, lambda: one.sync_stream(_spec()))
+    assert record and not any(record)
+    assert _wholestage(spark) is None
     batch_cfg = BatchSinkConfig(root=f"file://{tmp_path}/batches")
     batch_tap = _tap(spark, tmp_path / "b", batch=batch_cfg)
     assert any(_codegen_ids(spark, lambda: batch_tap.sync_all(batch_mode=True)))

@@ -19,7 +19,6 @@ import contextlib
 import json
 import logging
 import sys
-import threading
 import time
 from dataclasses import dataclass, field
 from typing import Any, Callable
@@ -53,33 +52,21 @@ logger = logging.getLogger(__name__)
 Commit = Callable[[DataFrame], None]  # one stream's slice into a table
 
 _WHOLESTAGE = "spark.sql.codegen.wholeStage"
-_wholestage_lock = threading.Lock()
-# session → [RECORD deliveries inside ``_no_wholestage``, its own setting]
-_wholestage_off: dict[SparkSession, list] = {}
 
 
 @contextlib.contextmanager
 def _no_wholestage(spark: SparkSession):
-    """Run the block with whole-stage codegen off on ``spark``. The first
-    of any overlapping blocks turns it off; the last restores the session's
-    own setting, set or unset."""
-    with _wholestage_lock:
-        entry = _wholestage_off.get(spark)
-        if entry is None:
-            entry = _wholestage_off[spark] = [0, spark.conf.get(_WHOLESTAGE, None)]
-            spark.conf.set(_WHOLESTAGE, "false")
-        entry[0] += 1
+    """Run the block with whole-stage codegen off on ``spark``, then put
+    back the session's own setting, set or unset."""
+    own = spark.conf.get(_WHOLESTAGE, None)
+    spark.conf.set(_WHOLESTAGE, "false")
     try:
         yield
     finally:
-        with _wholestage_lock:
-            entry[0] -= 1
-            if entry[0] == 0:
-                del _wholestage_off[spark]
-                if entry[1] is None:
-                    spark.conf.unset(_WHOLESTAGE)
-                else:
-                    spark.conf.set(_WHOLESTAGE, entry[1])
+        if own is None:
+            spark.conf.unset(_WHOLESTAGE)
+        else:
+            spark.conf.set(_WHOLESTAGE, own)
 
 
 @dataclass
@@ -342,16 +329,14 @@ class SparkTap:
         - ``record_count`` and ``sync_duration`` (the three steps' time) go
           out as Singer SDK-style METRIC lines on the logger, never stdout
           (the message stream must stay parseable).
-        - RECORD deliveries plan and run without whole-stage codegen
-          (``_no_wholestage``: the Arrow collect, the persist-mode snapshot
-          and aggregate, the ``toLocalIterator`` read). Each sync binds a
-          new bookmark literal into the generated stage source, so a fused
-          stage compiles anew every sync, once on the driver and once in
-          the task; with every row then costing microseconds of Python
-          serialization, the fused loop saves nothing. BATCH writes and
-          table commits keep whole-stage codegen. The session's own setting
-          (set or unset) is back once the last overlapping RECORD delivery
-          ends."""
+        - A call that writes RECORD lines (``sync_stream``, or ``sync_all``
+          with no BATCH files and no ``commit``) runs with whole-stage
+          codegen off (``_no_wholestage``), in every delivery mode, and
+          puts the session's own setting back when it returns or fails.
+          Each sync binds a new bookmark literal into the generated stage
+          source, so a fused stage compiles anew every sync, once on the
+          driver and once in the task. BATCH writes and table commits keep
+          whole-stage codegen."""
         return self._emit(self._fetch(self._plan(spec, batch, commit)))
 
     def _plan(
@@ -387,33 +372,31 @@ class SparkTap:
         t0 = time.perf_counter()
         spec, premap, df = plan.spec, plan.premap, plan.df
         rk = spec.replication_key
-        record = plan.commit is None and not plan.batch
-        with _no_wholestage(self.spark) if record else contextlib.nullcontext():
-            if plan.mode == "persist":
-                # the same object the maps derive from: they read the snapshot
-                premap.persist(StorageLevel.MEMORY_AND_DISK)
-                try:
-                    aggs = [F.count(F.lit(1)).alias("n")]
-                    if rk:
-                        aggs.append(bookmark_max(premap, rk))
-                    row = premap.agg(*aggs).first()
-                    plan.bookmark = row["mx"] if rk else None
-                    if plan.commit is not None:
-                        plan.n = row["n"] if df is premap else df.count()
-                except BaseException:
-                    premap.unpersist()
-                    raise
-            elif plan.batch:
-                obs_n = Observation()
-                plan.manifests = write_batch_files(
-                    df.observe(obs_n, F.count(F.lit(1)).alias("n")),
-                    spec,
-                    self.config.batch,
-                )
-                plan.n = obs_n.get["n"]
-            elif plan.mode == "observe":
-                # the batches as the JVM sends them (``emit_record_messages``)
-                plan.batches = df._collect_as_arrow()
+        if plan.mode == "persist":
+            # the same object the maps derive from: they read the snapshot
+            premap.persist(StorageLevel.MEMORY_AND_DISK)
+            try:
+                aggs = [F.count(F.lit(1)).alias("n")]
+                if rk:
+                    aggs.append(bookmark_max(premap, rk))
+                row = premap.agg(*aggs).first()
+                plan.bookmark = row["mx"] if rk else None
+                if plan.commit is not None:
+                    plan.n = row["n"] if df is premap else df.count()
+            except BaseException:
+                premap.unpersist()
+                raise
+        elif plan.batch:
+            obs_n = Observation()
+            plan.manifests = write_batch_files(
+                df.observe(obs_n, F.count(F.lit(1)).alias("n")),
+                spec,
+                self.config.batch,
+            )
+            plan.n = obs_n.get["n"]
+        elif plan.mode == "observe":
+            # the batches as the JVM sends them (``emit_record_messages``)
+            plan.batches = df._collect_as_arrow()
         if plan.obs_bm is not None:
             plan.bookmark = plan.obs_bm.get["mx"]
         plan.fetch_s = time.perf_counter() - t0
@@ -434,11 +417,9 @@ class SparkTap:
                     self.write(json.dumps(m.to_message(fqn)) + "\n")
                 if not plan.batch:
                     rows = plan.df if plan.batches is None else plan.batches
-                    # a persist or stream mode read plans and runs here
-                    with _no_wholestage(self.spark):
-                        n = emit_record_messages(
-                            rows, spec, self.write, collect=plan.mode == "observe"
-                        )
+                    n = emit_record_messages(
+                        rows, spec, self.write, collect=plan.mode == "observe"
+                    )
         finally:
             plan.release()
         new_bm = plan.bookmark
@@ -472,7 +453,9 @@ class SparkTap:
         """Sync one stream: SCHEMA, then RECORD messages or (``batch_mode``
         with a batch config) BATCH manifests, then STATE. Consistency
         invariants: ``_sync``."""
-        return self._sync(spec, batch=bool(batch_mode and self.config.batch))
+        batch = bool(batch_mode and self.config.batch)
+        with contextlib.nullcontext() if batch else _no_wholestage(self.spark):
+            return self._sync(spec, batch=batch)
 
     def sync_all(
         self,
@@ -533,9 +516,13 @@ class SparkTap:
         # returns its argument, the session, not a decorator
         inherit = inheritable_thread_target(self.spark)
         on_worker = (lambda f: f) if inherit is self.spark else inherit
+        record = commit is None and not batch
         results = []
         fetched: dict[int, Future] = {}  # streams i+1 .. i+k-1
-        with ThreadPoolExecutor(max_workers=k) as pool:
+        with (
+            _no_wholestage(self.spark) if record else contextlib.nullcontext(),
+            ThreadPoolExecutor(max_workers=k) as pool,
+        ):
             try:
                 for i in range(len(streams)):
                     if i == len(plans):  # not planned ahead (docstring)
